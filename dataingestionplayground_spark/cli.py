@@ -255,21 +255,29 @@ def cmd_dedup(args, cfg) -> int:
     if not store.exists(collection):
         print(f"error: collection {collection!r} not found", file=sys.stderr)
         return 2
-    docs = reassemble_documents(store.read(spark, collection))
-    n_docs = docs.count()
-    n_exact = exact_dedup(docs, "documentid", "text").count()
-    pairs = minhash_lsh_pairs(docs, "documentid", "text").localCheckpoint(eager=True)
-    clusters = dedup_clusters(docs, pairs, "documentid")
-    n_kept = clusters.filter("is_kept").count()
-    print(f"documents:        {n_docs}")
-    print(f"exact-unique:     {n_exact}")
-    print(f"near-dup pairs:   {pairs.count()}")
-    print(f"kept after dedup: {n_kept}")
-    if args.out:
-        clusters.repartition(1).write.mode("overwrite").option(
-            "compression", "zstd"
-        ).parquet(args.out)
-        print(f"wrote keep/drop table to {args.out}")
+    # the reassembly groupBy runs once; every action below reads the cache
+    docs = reassemble_documents(store.read(spark, collection)).persist()
+    pairs = None
+    try:
+        n_docs = docs.count()
+        n_exact = exact_dedup(docs, "documentid", "text").count()
+        pairs = minhash_lsh_pairs(docs, "documentid", "text").persist()
+        n_pairs = pairs.count()
+        clusters = dedup_clusters(docs, pairs, "documentid")
+        n_kept = clusters.filter("is_kept").count()
+        print(f"documents:        {n_docs}")
+        print(f"exact-unique:     {n_exact}")
+        print(f"near-dup pairs:   {n_pairs}")
+        print(f"kept after dedup: {n_kept}")
+        if args.out:
+            clusters.repartition(1).write.mode("overwrite").option(
+                "compression", "zstd"
+            ).parquet(args.out)
+            print(f"wrote keep/drop table to {args.out}")
+    finally:
+        docs.unpersist()
+        if pairs is not None:
+            pairs.unpersist()
     return 0
 
 
@@ -299,14 +307,15 @@ def cmd_export(args, cfg) -> int:
 
 
 def cmd_curate(args, cfg) -> int:
-    """End-to-end training-data curation over a JSONL corpus: line-level
-    boilerplate removal -> calibrated quality gate -> exact dedup ->
-    (optional) eval-set decontamination -> sharded JSONL export. Prints
-    the funnel; every stage is the same operator the registry queries
-    verify against DuckDB."""
+    """End-to-end training-data curation over a JSONL corpus: exact dedup
+    -> line-level boilerplate removal -> calibrated quality gate ->
+    (optional) eval-set decontamination -> sharded JSONL export plus data
+    card. Prints the funnel; every stage is the same operator the
+    registry queries verify against DuckDB."""
     from pyspark.sql import functions as F
 
     from dataingestionplayground_spark.functions import text as TX
+    from dataingestionplayground_spark.ingest.datacard import write_datacard
     from dataingestionplayground_spark.ingest.export import export_jsonl
     from dataingestionplayground_spark.operators.dedup import exact_dedup, line_dedup
     from dataingestionplayground_spark.queries.textq import quality_scores
@@ -319,70 +328,83 @@ def cmd_curate(args, cfg) -> int:
     )
     n0 = docs.count()
 
-    # 1. exact dedup FIRST: with it after cross-doc line dedup, the two
-    # copies of an exact duplicate would mark every one of their shared
-    # lines as boilerplate and erase each other entirely
-    keep = exact_dedup(docs, "doc_id", "text").select(
-        F.col("keep_id").alias("doc_id")
-    )
-    deduped = docs.join(keep, "doc_id", "left_semi")
-    n1 = deduped.count()
+    # Each funnel stage is cached just before the count that reports it,
+    # so the next stage, the export and the data card read it from cache
+    # instead of re-running every stage before it. persist() keeps the
+    # lineage, so a lost block is recomputed. A stage is released once
+    # the stage after it is counted: at most two are cached at once.
+    cached: list = []
 
-    # 2. boilerplate: drop lines still repeated across >= 2 distinct
-    # (now-unique) docs, rebuild each doc from its surviving lines
-    cleaned = (
-        line_dedup(deduped, min_df=2)
-        .filter(F.col("n_lines_kept") > 0)
-        .select("doc_id", F.col("clean_text").alias("text"))
-    )
-    n2 = cleaned.count()
+    def stage(df):
+        df = df.persist()
+        n = df.count()
+        if cached:
+            cached.pop().unpersist()
+        cached.append(df)
+        return df, n
 
-    # 3. calibrated quality gate: keep docs at/above the corpus quantile
-    feats = cleaned.withColumn("n_chars", F.length("text"))
-    scored = quality_scores(feats)
-    thr = scored.agg(
-        F.expr(f"percentile(quality, {args.quality_pct / 100.0})").alias("q")
-    )
-    kept_ids = (
-        scored.crossJoin(F.broadcast(thr))
-        .filter(F.col("quality") >= F.col("q"))
-        .select("doc_id")
-    )
-    quality_kept = cleaned.join(kept_ids, "doc_id", "left_semi")
-    n3 = quality_kept.count()
-
-    deduped = quality_kept
-    # 4. optional decontamination vs an eval-set corpus
-    if args.eval_source:
-        ev_docs = read_jsonl_docs(spark, args.eval_source)
-        ev_grams = (
-            ev_docs.select(TX.tokens("content").alias("__tk"))
-            .select(
-                F.explode(
-                    F.array_distinct(TX.shingles_from_tokens("__tk", 3))
-                ).alias("g")
-            )
-            .distinct()
+    try:
+        # 1. exact dedup FIRST: with it after cross-doc line dedup, the two
+        # copies of an exact duplicate would mark every one of their shared
+        # lines as boilerplate and erase each other entirely
+        keep = exact_dedup(docs, "doc_id", "text").select(
+            F.col("keep_id").alias("doc_id")
         )
-        contaminated = (
-            deduped.select("doc_id", TX.tokens("text").alias("__tk"))
-            .select(
-                "doc_id",
-                F.explode(
-                    F.array_distinct(TX.shingles_from_tokens("__tk", 3))
-                ).alias("g"),
-            )
-            .join(F.broadcast(ev_grams), "g")
+        deduped, n1 = stage(docs.join(keep, "doc_id", "left_semi"))
+
+        # 2. boilerplate: drop lines still repeated across >= 2 distinct
+        # (now-unique) docs, rebuild each doc from its surviving lines
+        cleaned, n2 = stage(
+            line_dedup(deduped, min_df=2)
+            .filter(F.col("n_lines_kept") > 0)
+            .select("doc_id", F.col("clean_text").alias("text"))
+        )
+
+        # 3. calibrated quality gate: keep docs at/above the corpus quantile
+        feats = cleaned.withColumn("n_chars", F.length("text"))
+        scored = quality_scores(feats)
+        thr = scored.agg(
+            F.expr(f"percentile(quality, {args.quality_pct / 100.0})").alias("q")
+        )
+        kept_ids = (
+            scored.crossJoin(F.broadcast(thr))
+            .filter(F.col("quality") >= F.col("q"))
             .select("doc_id")
-            .distinct()
         )
-        deduped = deduped.join(contaminated, "doc_id", "left_anti")
-    n4 = deduped.count()
+        final, n3 = stage(cleaned.join(kept_ids, "doc_id", "left_semi"))
 
-    manifest = export_jsonl(deduped, args.out, n_shards=args.shards, id_col="doc_id")
-    from dataingestionplayground_spark.ingest.datacard import write_datacard
+        # 4. optional decontamination vs an eval-set corpus
+        n4 = n3
+        if args.eval_source:
+            ev_docs = read_jsonl_docs(spark, args.eval_source)
+            ev_grams = (
+                ev_docs.select(TX.tokens("content").alias("__tk"))
+                .select(
+                    F.explode(
+                        F.array_distinct(TX.shingles_from_tokens("__tk", 3))
+                    ).alias("g")
+                )
+                .distinct()
+            )
+            contaminated = (
+                final.select("doc_id", TX.tokens("text").alias("__tk"))
+                .select(
+                    "doc_id",
+                    F.explode(
+                        F.array_distinct(TX.shingles_from_tokens("__tk", 3))
+                    ).alias("g"),
+                )
+                .join(F.broadcast(ev_grams), "g")
+                .select("doc_id")
+                .distinct()
+            )
+            final, n4 = stage(final.join(contaminated, "doc_id", "left_anti"))
 
-    write_datacard(deduped, args.out)
+        manifest = export_jsonl(final, args.out, n_shards=args.shards, id_col="doc_id")
+        write_datacard(final, args.out)
+    finally:
+        for df in cached:
+            df.unpersist()
     print(f"input docs:        {n0}")
     print(f"after exact dedup: {n1}")
     print(f"after boilerplate: {n2}")

@@ -21,8 +21,11 @@ DATACARD_NAME = "_DATACARD.json"
 def build_datacard(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> dict:
     """Summarize a (id, text[, source][, lang]) corpus: sizes, token
     totals, quality quartiles, per-source/per-lang distribution, and the
-    exact-duplicate rate. Four aggregation jobs total, each a single
-    map-side-combinable pass — the same cost class at any corpus size.
+    exact-duplicate rate. Two collects (totals, quality quartiles) plus
+    one per ``source``/``lang`` breakdown present, each one
+    map-side-combinable aggregation — the same cost class at any corpus
+    size. Every collect re-reads ``docs``, so pass a cached frame when
+    ``docs`` is costly to compute (the ``curate`` CLI does).
     """
     has_source = "source" in docs.columns
     has_lang = "lang" in docs.columns

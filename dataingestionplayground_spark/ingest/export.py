@@ -45,9 +45,12 @@ def export_jsonl(
         f"cast(conv(substring(md5(cast({id_col} as string)), 1, 8), 16, 10) as bigint) % {n_shards}"
     ).cast("long")
     out = df.withColumn("shard", shard)
-    out.write.mode("overwrite").option("compression", compression).partitionBy(
-        "shard"
-    ).json(path)
+    # rebalance on the shard key: each shard's rows meet in one task and
+    # land in one file, however many partitions ``df`` arrives in (AQE
+    # still splits an oversized shard into advisory-size files)
+    out.hint("rebalance", "shard").write.mode("overwrite").option(
+        "compression", compression
+    ).partitionBy("shard").json(path)
 
     aggs = [F.count(F.lit(1)).cast("long").alias("rows")]
     has_text = text_col is not None and text_col in df.columns

@@ -173,9 +173,9 @@ def test_cli_xml_reader(spark, tmp_path, capsys):
     assert "x1" in capsys.readouterr().out
 
 
-def test_cli_curate_full_funnel(spark, tmp_path, capsys):
+def _curate_fixture(tmp_path):
+    """Five-doc corpus plus a one-doc eval set; returns the curate argv."""
     import json as _json
-    import os
 
     corpus = tmp_path / "corpus.jsonl"
     boiler = "Subscribe to our newsletter today"
@@ -185,7 +185,7 @@ def test_cli_curate_full_funnel(spark, tmp_path, capsys):
         {"doc_id": "a", "text": f"the quick brown fox jumps over the lazy dog\n{boiler}"},
         {"doc_id": "b", "text": f"the quick brown fox jumps over the lazy dog\n{boiler}"},
         {"doc_id": "c", "text": "a completely different sentence with many common english words here"},
-        # doc that is ONLY boilerplate -> dropped at stage 1
+        # doc that is ONLY boilerplate -> dropped at stage 2
         {"doc_id": "d", "text": boiler},
         # contaminated doc: shares a trigram with the eval set
         {"doc_id": "e", "text": "this exact benchmark question appears verbatim in the eval set"},
@@ -193,12 +193,19 @@ def test_cli_curate_full_funnel(spark, tmp_path, capsys):
     corpus.write_text("".join(_json.dumps(r) + "\n" for r in rows))
     ev = tmp_path / "eval.jsonl"
     ev.write_text(_json.dumps({"doc_id": "ev1", "text": "exact benchmark question appears"}) + "\n")
-
-    out_dir = str(tmp_path / "curated")
-    rc = cli.main([
-        "curate", "--source", str(corpus), "--out", out_dir,
+    return [
+        "curate", "--source", str(corpus), "--out", str(tmp_path / "curated"),
         "--eval-source", str(ev), "--quality-pct", "0", "--shards", "2",
-    ])
+    ]
+
+
+def test_cli_curate_full_funnel(spark, tmp_path, capsys):
+    import json as _json
+    import os
+
+    argv = _curate_fixture(tmp_path)
+    out_dir = argv[argv.index("--out") + 1]
+    rc = cli.main(argv)
     out = capsys.readouterr().out
     assert rc == 0
     assert "input docs:        5" in out
@@ -210,6 +217,32 @@ def test_cli_curate_full_funnel(spark, tmp_path, capsys):
     assert manifest["total_rows"] == 2
     back = spark.read.json(out_dir)
     assert {r.doc_id for r in back.select("doc_id").collect()} == {"a", "c"}
+
+
+# Jobs one curate run on the five-doc fixture starts, counted with
+# getJobIdsForGroup in this test's session (local[8], AQE on): 34 with
+# each funnel stage cached once, 92 when every count, the export and the
+# data card re-run the whole funnel. The bound leaves a little room for
+# AQE re-planning, not for a stage that is computed twice.
+CURATE_JOB_BOUND = 40
+
+
+def test_cli_curate_computes_each_stage_once(spark, tmp_path, capsys):
+    sc = spark.sparkContext
+    group = "test-cli-curate-jobs"
+    before = set(sc._jsc.getPersistentRDDs().keys())
+    sc.setJobGroup(group, group)
+    try:
+        rc = cli.main(_curate_fixture(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rc == 0 and "after decontam:    2" in capsys.readouterr().out
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= CURATE_JOB_BOUND, n_jobs
+    # every stage the command cached is released when it returns; a subset
+    # test, not equal sizes, since the ContextCleaner may free blocks of
+    # earlier tests meanwhile
+    assert set(sc._jsc.getPersistentRDDs().keys()) <= before
 
 
 def test_cli_sql_frontend(spark, capsys):

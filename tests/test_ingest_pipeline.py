@@ -348,6 +348,23 @@ def test_export_jsonl_deterministic_shards(spark, tmp_path):
     assert a == b
 
 
+def test_export_jsonl_one_file_per_shard(spark, tmp_path):
+    """A frame spread over many partitions still writes one data file per
+    shard directory, with the same manifest as a one-partition frame."""
+    import os
+
+    from dataingestionplayground_spark.ingest.export import export_jsonl
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    m1 = export_jsonl(docs.coalesce(1), str(tmp_path / "one"), n_shards=4)
+    path = str(tmp_path / "eight")
+    m8 = export_jsonl(docs.repartition(8), path, n_shards=4)
+    assert m8 == m1
+    for k in m8["shards"]:
+        files = [f for f in os.listdir(os.path.join(path, f"shard={k}")) if f.startswith("part-")]
+        assert len(files) == 1, (k, files)
+
+
 def test_delete_from_export_touches_only_affected_shards(spark, tmp_path):
     import os
 
