@@ -26,14 +26,15 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dataingestionplayground_spark.functions import vector as V
 from dataingestionplayground_spark.ingest.store import CollectionStore
 from dataingestionplayground_spark.operators.similarity import (
     _pq_codebook,
-    pq_adc_rank,
     pq_encode_with_codebook,
 )
 
@@ -46,6 +47,119 @@ _CENTS_SCHEMA = T.ArrayType(
         ]
     )
 )
+
+
+# ---------------------------------------------------------------------------
+# Query side of the indexed searches. The query set is collected on the
+# driver ONCE and everything derived from it (probe cells, ADC lookup
+# tables, the vectors for exact rescoring) enters the plan as a folded
+# literal — never as a side DataFrame: a local-list createDataFrame is
+# RDD-backed, so each broadcast of one ran a Spark job of its own.
+# ---------------------------------------------------------------------------
+
+
+def _folded_literal(value, dtype: T.DataType) -> Column:
+    """``value`` as ONE plan literal of type ``dtype``: a JSON string
+    parsed by ``from_json``, which constant folding evaluates once at
+    planning time. (A ``F.lit`` per element would instead grow the plan,
+    and its analysis time, with the element count.) ``default=str``
+    passes date-typed ids as the ISO strings ``from_json`` parses."""
+    return F.from_json(
+        F.lit(json.dumps(value, default=str)), dtype, {"mode": "FAILFAST"}
+    )
+
+
+def _folded_map(entries: dict, key_type: T.DataType, value_type: T.DataType) -> Column:
+    """A folded map literal (see :func:`_folded_literal`)."""
+    kv = T.ArrayType(
+        T.StructType([T.StructField("k", key_type), T.StructField("v", value_type)])
+    )
+    return F.map_from_entries(
+        _folded_literal([{"k": k, "v": v} for k, v in entries.items()], kv)
+    )
+
+
+class _QuerySet:
+    """A caller's query frame, collected on the driver once. Indexed
+    search treats the query set as SMALL: its query-side data enters
+    the plan as literals whose size grows as |queries| x dims, and the
+    caller's frame is never scanned or broadcast again. Rows with a
+    null id are dropped; ids must be unique (they key the literals)."""
+
+    def __init__(self, queries: DataFrame, query_id: str, query_vec: str):
+        self.query_id, self.query_vec = query_id, query_vec
+        self.id_type = queries.schema[query_id].dataType
+        self.vec_type = queries.schema[query_vec].dataType
+        rows = [
+            r for r in queries.select(query_id, query_vec).collect() if r[0] is not None
+        ]
+        self.ids = [r[0] for r in rows]
+        self.vecs = [r[1] for r in rows]
+        if len(set(self.ids)) != len(self.ids):
+            raise ValueError(f"query ids in column {query_id!r} are not unique")
+
+    def matrix(self) -> np.ndarray:
+        return np.vstack([np.asarray(v, dtype=np.float64) for v in self.vecs])
+
+    def row_type(self, name: str, dtype: T.DataType) -> T.StructType:
+        """Per-query literal rows: ``q`` (the id, in the caller's type)
+        plus one payload field."""
+        return T.StructType(
+            [T.StructField("q", self.id_type), T.StructField(name, dtype)]
+        )
+
+    def empty(self, spark: SparkSession, score: str) -> DataFrame:
+        return spark.createDataFrame(
+            [],
+            T.StructType(
+                [
+                    T.StructField(self.query_id, self.id_type, True),
+                    T.StructField("key", T.StringType(), True),
+                    T.StructField(score, T.DoubleType(), True),
+                    T.StructField("rank", T.IntegerType(), True),
+                ]
+            ),
+        )
+
+    def exact_topk(self, cand: DataFrame, k: int) -> DataFrame:
+        """Exact cosine top-k per query over ``cand`` rows (query id,
+        key, embedding); each row's query vector is looked up in one map
+        literal keyed by query id. Returns (query_id, key, score, rank)."""
+        qid, qvec = self.query_id, self.query_vec
+        vectors = _folded_map(dict(zip(self.ids, self.vecs)), self.id_type, self.vec_type)
+        scored = cand.withColumn(qvec, F.element_at(vectors, F.col(qid))).withColumn(
+            "score", V.cosine_similarity("embedding", qvec)
+        )
+        w = Window.partitionBy(qid).orderBy(F.desc_nulls_last("score"), F.asc("key"))
+        return (
+            scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select(qid, "key", "score", "rank")
+        )
+
+
+def _adc_topk(
+    scored: DataFrame, query_id: str, offs: list[int], depth: int, best_per_key: bool
+) -> DataFrame:
+    """ADC top-``depth`` per query over code rows carrying ``__l``, the
+    struct (q, lut) of one query's flat lookup table: the distance is m
+    array lookups, ``lut[offs[s] + code_s]``. ``best_per_key`` keeps a
+    key's smallest distance when soft assignment stores it more than
+    once. Returns (query_id, key, adc_dist, rank), ties to the lowest key."""
+    dist = " + ".join(
+        f"element_at(__l.lut, {off} + code_{s} + 1)" for s, off in enumerate(offs)
+    )
+    scored = scored.select(
+        F.col("__l.q").alias(query_id), "key", F.expr(dist).alias("adc_dist")
+    )
+    if best_per_key:
+        scored = scored.groupBy(query_id, "key").agg(F.min("adc_dist").alias("adc_dist"))
+    w = Window.partitionBy(query_id).orderBy(F.asc("adc_dist"), F.asc("key"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= depth)
+        .select(query_id, "key", F.round("adc_dist", 9).alias("adc_dist"), "rank")
+    )
 
 
 def _index_dir(store: CollectionStore, collection: str) -> str:
@@ -157,7 +271,53 @@ def _load_meta(store: CollectionStore, collection: str) -> dict:
         raise FileNotFoundError(
             f"no PQ index for collection {collection!r}; run build_pq_index first"
         )
-    return json.load(open(path))
+    with open(path) as f:
+        return json.load(f)
+
+
+def _write_meta(path: str, meta: dict) -> None:
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path + ".tmp", "w") as f:
+        json.dump(meta, f)
+    os.replace(path + ".tmp", path)  # a reader never sees a partial file
+
+
+def _ddl(columns: list[str]) -> str:
+    """Schema of an index table from its column names, declared so a
+    read runs no schema-inference job: ids are strings, the merge epoch
+    a long, every other column (codes, cells, cell ranks) an int."""
+    types = {"key": "string", "documentid": "string", "epoch_id": "bigint"}
+    return ", ".join(f"{c} {types.get(c, 'int')}" for c in columns)
+
+
+def _pq_columns(meta: dict) -> list[str]:
+    return ["key", "documentid", *(f"code_{s}" for s in range(meta["m"]))]
+
+
+def _read_cell_table(
+    spark: SparkSession, path: str, meta: dict, base_columns: list[str]
+) -> DataFrame:
+    """A cell-partitioned index table (IVF assignments, IVFPQ codes)
+    read with the column set its meta records. An index whose meta
+    predates that field is inferred — mergeSchema, because a merge
+    stages epoch-tagged rows next to epoch-less base/refresh rows (read
+    back as epoch_id NULL). A table whose every cell partition has been
+    deleted (refresh drops emptied partitions) is an EMPTY frame of
+    ``base_columns``, since a dir with no data files fails inference."""
+    if not _has_parquet(path):
+        return spark.createDataFrame([], _ddl(meta.get("columns", base_columns)))
+    if "columns" not in meta:
+        return spark.read.option("mergeSchema", "true").parquet(path)
+    return spark.read.schema(_ddl(meta["columns"])).parquet(path)
+
+
+def _declare_epoch(meta_path: str, meta: dict, columns: list[str]) -> None:
+    """Record a merge's epoch column in the meta, BEFORE any file
+    carries it: a crash before the write leaves an all-NULL column,
+    never an undeclared one."""
+    if "epoch_id" not in meta.get("columns", ["epoch_id"]):
+        meta["columns"] = columns
+        _write_meta(meta_path, meta)
 
 
 def _pq_staging_dir(store: CollectionStore, collection: str) -> str:
@@ -214,14 +374,13 @@ def read_pq_codes(spark: SparkSession, store: CollectionStore, collection: str) 
     codes are searchable before compaction."""
     codes_path = os.path.join(_index_dir(store, collection), "codes")
     _recover_live_dir(codes_path)  # finish any interrupted compaction swap
-    base = spark.read.parquet(codes_path)
+    schema = _ddl(_pq_columns(_load_meta(store, collection)))
+    base = spark.read.schema(schema).parquet(codes_path)
     staging = _pq_staging_dir(store, collection)
     if not _has_parquet(staging):
         return base
-    from pyspark.sql import Window
-
     cols = base.columns
-    staged = spark.read.parquet(staging)
+    staged = spark.read.schema(f"{schema}, epoch_id bigint").parquet(staging)
     both = (
         base.withColumn("__ep", F.lit(None).cast("long"))
         .select(*cols, "__ep")
@@ -328,7 +487,7 @@ def refresh_pq_index(spark: SparkSession, store: CollectionStore, collection: st
     idx = _index_dir(store, collection)
     codes_path = os.path.join(idx, "codes")
     chunks = store.read(spark, collection).select("key", "documentid", "embedding")
-    codes = spark.read.parquet(codes_path)
+    codes = spark.read.schema(_ddl(_pq_columns(meta))).parquet(codes_path)
 
     new = chunks.join(codes.select("key"), "key", "left_anti")
     appended = new.count()
@@ -343,7 +502,7 @@ def refresh_pq_index(spark: SparkSession, store: CollectionStore, collection: st
             .option("compression", "zstd")
             .parquet(codes_path)
         )
-        codes = spark.read.parquet(codes_path)
+        codes = spark.read.schema(_ddl(_pq_columns(meta))).parquet(codes_path)
 
     orphaned = codes.join(chunks.select("key"), "key", "left_anti").count()
     if orphaned:
@@ -355,6 +514,22 @@ def refresh_pq_index(spark: SparkSession, store: CollectionStore, collection: st
         ).parquet(tmp)
         _swap_live_dir(tmp, codes_path)
     return {"appended": appended, "removed": orphaned}
+
+
+def _pq_luts(meta: dict, E: np.ndarray) -> np.ndarray:
+    """ADC lookup tables, one row per query vector in ``E``, aligned
+    with ``meta["cents"]``: the driver-side twin of the SQL LUT in
+    :func:`~...operators.similarity.pq_adc_rank`, accumulated the same
+    way (float64, sequentially over the ``dsub`` dimensions), so the
+    distances — and their 9-digit rounding — are identical."""
+    dsub = meta["dims"] // meta["m"]
+    sub = np.asarray([int(c[0]) for c in meta["cents"]]) * dsub
+    cents = np.asarray([c[2] for c in meta["cents"]], dtype=np.float64)
+    lut = np.zeros((E.shape[0], len(sub)))
+    for i in range(dsub):
+        d = E[:, sub + i] - cents[None, :, i]
+        lut = lut + d * d
+    return lut
 
 
 def pq_search_indexed(
@@ -371,6 +546,12 @@ def pq_search_indexed(
     scan reads (key, code_0..m-1) — no embeddings, no codebook
     derivation, no encode. Returns (query_id, key, adc_dist, rank).
 
+    The query set is collected on the driver once and must be small:
+    each query's lookup table is computed there from the frozen
+    codebook and reaches the code scan as one folded literal (batch ADC
+    over a large query set belongs to the operator-level
+    :func:`~...operators.similarity.pq_adc_search` and ``pq_adc_rerank``).
+
     With ``rerank=N``, the code-only ADC pass prunes to an N-deep
     shortlist per query, then full-precision vectors are fetched for
     ONLY the shortlisted keys (broadcast join into the collection) and
@@ -384,42 +565,24 @@ def pq_search_indexed(
     top-k over a superset can only keep or gain true neighbors — so
     16*k trades a slightly larger broadcast for the recall floor the
     bench gates at >=0.8). Returns (query_id, key, score, rank)."""
-    from pyspark.sql import Window
-
-    from dataingestionplayground_spark.functions import vector as V
-
     if rerank == "auto":
         rerank = 16 * k
     meta = _load_meta(store, collection)
-    codes = read_pq_codes(spark, store, collection)
-    adc = pq_adc_rank(
-        codes,
-        _codebook_df(spark, meta),
-        queries,
-        max(k, rerank) if rerank else k,
-        meta["m"],
-        meta["n_centroids"],
-        meta["dims"],
-        corpus_id="key",
-        query_id=query_id,
-        query_vec=query_vec,
-    )
+    qs = _QuerySet(queries, query_id, query_vec)
+    if not qs.ids:
+        return qs.empty(spark, "score" if rerank else "adc_dist")
+    luts = _pq_luts(meta, qs.matrix()).tolist()
+    rows = [{"q": q, "lut": lut} for q, lut in zip(qs.ids, luts)]
+    # every query scores every code row: explode the one LUT literal
+    lut_rows = _folded_literal(rows, T.ArrayType(qs.row_type("lut", T.ArrayType(T.DoubleType()))))
+    scored = read_pq_codes(spark, store, collection).withColumn("__l", F.explode(lut_rows))
+    offs = [s * meta["n_centroids"] for s in range(meta["m"])]
+    adc = _adc_topk(scored, query_id, offs, max(k, rerank) if rerank else k, best_per_key=False)
     if not rerank:
         return adc
     short = adc.select(query_id, "key")  # shortlist x |queries|: tiny
-    scored = (
-        store.read(spark, collection)
-        .select("key", "embedding")
-        .join(F.broadcast(short), "key")
-        .join(F.broadcast(queries.select(query_id, query_vec)), query_id)
-        .withColumn("score", V.cosine_similarity("embedding", query_vec))
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc_nulls_last("score"), F.asc("key"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, "key", "score", "rank")
-    )
+    vecs = store.read(spark, collection).select("key", "embedding")
+    return qs.exact_topk(vecs.join(F.broadcast(short), "key"), k)
 
 
 # ---------------------------------------------------------------------------
@@ -536,6 +699,8 @@ def build_ivf_index(
     ).select(
         "key", "documentid", *(("cell_rank", "cell_1") if soft else ()), "cell"
     )
+    # the column set lets readers declare the table's schema
+    meta["columns"] = assigned.columns
     idx = _ivf_dir(store, collection)
     (
         assigned.repartition("cell")
@@ -544,9 +709,7 @@ def build_ivf_index(
         .option("compression", "zstd")
         .parquet(os.path.join(idx, "cells"))
     )
-    os.makedirs(idx, exist_ok=True)
-    with open(os.path.join(idx, _IVF_META), "w") as f:
-        json.dump(meta, f)
+    _write_meta(os.path.join(idx, _IVF_META), meta)
     return meta
 
 
@@ -556,29 +719,16 @@ def _load_ivf_meta(store: CollectionStore, collection: str) -> dict:
         raise FileNotFoundError(
             f"no IVF index for collection {collection!r}; run build_ivf_index first"
         )
-    return json.load(open(path))
-
-
-# assignment-table schema, used to synthesize an EMPTY frame when every
-# cell partition has been deleted (refresh rmtree's emptied partitions;
-# a dir with no data files would otherwise fail schema inference)
-_IVF_ASSIGN_SCHEMA = "key string, documentid string, cell int"
+    with open(path) as f:
+        return json.load(f)
 
 
 def read_ivf_assignments(
     spark: SparkSession, store: CollectionStore, collection: str
 ) -> DataFrame:
     cells = os.path.join(_ivf_dir(store, collection), "cells")
-    has_data = any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(cells)
-        for f in files
-    )
-    if not has_data:
-        return spark.createDataFrame([], _IVF_ASSIGN_SCHEMA)
-    # mergeSchema: merge_ivf_assignments stages epoch-tagged rows next to
-    # epoch-less base/refresh rows (read back as epoch_id NULL)
-    return spark.read.option("mergeSchema", "true").parquet(cells)
+    meta = _load_ivf_meta(store, collection)
+    return _read_cell_table(spark, cells, meta, ["key", "documentid", "cell"])
 
 
 def ivf_index_staleness(
@@ -787,6 +937,7 @@ def merge_ivf_assignments(
     for rc in rank_cols:
         if rc not in existing.columns:  # pre-r15 soft table: no rank info
             existing = existing.withColumn(rc, F.lit(None).cast("int"))
+    _declare_epoch(os.path.join(_ivf_dir(store, collection), _IVF_META), meta, out_cols)
     kept = (
         existing.filter(cond)
         .filter(F.col("epoch_id").isNull() | (F.col("epoch_id") != int(epoch_id)))
@@ -946,105 +1097,61 @@ def ivf_search_indexed(
     query_vec: str = "query_vec",
 ) -> DataFrame:
     """Exact cosine top-k over only the ``n_probe`` nearest cells per
-    query. Probe cells are computed driver-side from the (tiny) query set
-    against the frozen centroid matrix, so the assignment scan carries a
-    LITERAL cell filter — static parquet partition pruning, visible as
-    PartitionFilters in the plan; full-precision vectors are then read
-    for candidate keys only (semi-join into the collection).
+    query. The query set is collected on the driver once and must be
+    small: probe cells are computed there against the frozen centroid
+    matrix, so the assignment scan carries a LITERAL cell filter —
+    static parquet partition pruning, visible as PartitionFilters in the
+    plan — and each assignment row meets the queries probing its cell
+    through one folded map literal; full-precision vectors are then
+    read for candidate keys only (join into the collection).
     Returns (query_id, key, score, rank)."""
-    import numpy as np
-
-    from dataingestionplayground_spark.functions import vector as V
-
     meta = _load_ivf_meta(store, collection)
+    qs = _QuerySet(queries, query_id, query_vec)
+    if not qs.ids:
+        return qs.empty(spark, "score")
     C = np.asarray(meta["cents"], dtype=np.float64)
-    from pyspark.sql import types as T
-
-    qid_field = queries.schema[query_id]
-    q_rows = queries.select(query_id, query_vec).collect()  # query set: tiny by contract
-    if not q_rows:
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    qid_field,
-                    T.StructField("key", T.StringType(), True),
-                    T.StructField("score", T.DoubleType(), True),
-                    T.StructField("rank", T.IntegerType(), True),
-                ]
-            ),
-        )
-    E = np.vstack([np.asarray(r[query_vec], dtype=np.float64) for r in q_rows])
+    E = qs.matrix()
     cn = np.sqrt((C * C).sum(axis=1))
     en = np.sqrt((E * E).sum(axis=1))
     with np.errstate(divide="ignore", invalid="ignore"):
         sims = (E @ C.T) / (en[:, None] * cn[None, :])
     sims = np.where(np.isfinite(sims), sims, -np.inf)
     order = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]  # ties -> lowest cell
-    probes = [
-        (r[query_id], [int(c) for c in order[i]]) for i, r in enumerate(q_rows)
-    ]
-    all_cells = sorted({c for _, cs in probes for c in cs})
+    # cell -> the queries probing it, each with its full probe list
+    by_cell: dict[int, list] = {}
+    for qid, cells in zip(qs.ids, order.tolist()):
+        for c in cells:
+            by_cell.setdefault(c, []).append({"q": qid, "p": cells})
     assigned = read_ivf_assignments(spark, store, collection).filter(
-        F.col("cell").isin(all_cells)  # literal -> static partition pruning
+        F.col("cell").isin(sorted(by_cell))  # literal -> static partition pruning
     )
-    probe_df = F.broadcast(
-        spark.createDataFrame(
-            [(qid, c) for qid, cs in probes for c in cs],
-            T.StructType([qid_field, T.StructField("cell", T.IntegerType(), False)]),
-        )
+    probes = _folded_map(
+        by_cell, T.IntegerType(), T.ArrayType(qs.row_type("p", T.ArrayType(T.IntegerType())))
     )
-    if int(meta.get("assign_top", 1)) > 1:
+    cand = assigned.withColumn("__p", F.explode(F.element_at(probes, F.col("cell"))))
+    soft = int(meta.get("assign_top", 1)) > 1
+    if soft and "cell_rank" in assigned.columns:
         # soft assignment stores a key in several cells; a (query, key)
         # pair reachable through two probed cells must score once, not
         # occupy two of the k result slots. With rank info stored
-        # (r15 schema: cell_rank + cell_1) the duplicate copy is
-        # dropped by a broadcast FILTER — keep a secondary copy only
-        # when this query did NOT probe the key's primary cell — so no
-        # (query, key)-keyed dedup Exchange is added (measured: the
-        # shuffle was +1.1 s on the sf1.0 bench row). Tables written
-        # before the rank schema fall back to the dedup shuffle.
-        if "cell_rank" in assigned.columns:
-            marker = F.broadcast(
-                probe_df.select(
-                    query_id, F.col("cell").alias("cell_1")
-                ).withColumn("__pp", F.lit(True))
-            )
-            cand = (
-                assigned.join(probe_df, "cell")
-                .join(marker, [query_id, "cell_1"], "left")
-                .filter(
-                    (F.coalesce(F.col("cell_rank"), F.lit(1)) == 1)
-                    | F.col("__pp").isNull()
-                )
-                .select(query_id, "key")
-            )
-        else:
-            cand = (
-                assigned.join(probe_df, "cell")
-                .select(query_id, "key")
-                .dropDuplicates([query_id, "key"])
-            )
-    else:
-        cand = assigned.join(probe_df, "cell").select(query_id, "key")
+        # (cell_rank + cell_1 columns) the duplicate copy is dropped
+        # by a row FILTER — keep a secondary copy only when this query
+        # did NOT probe the key's primary cell — so no (query, key)-keyed
+        # dedup Exchange is added (measured: the shuffle was +1.1 s on
+        # the sf1.0 bench row).
+        cand = cand.filter(
+            (F.coalesce(F.col("cell_rank"), F.lit(1)) == 1)
+            | ~F.coalesce(F.array_contains("__p.p", F.col("cell_1")), F.lit(False))
+        )
+    cand = cand.select(F.col("__p.q").alias(query_id), "key")
+    if soft and "cell_rank" not in assigned.columns:
+        # tables written before the rank schema fall back to the dedup shuffle
+        cand = cand.dropDuplicates([query_id, "key"])
     vecs = store.read(spark, collection).select("key", "embedding")
     # `cand` is ~n_probe/n_cells of the whole corpus — distributed-sized,
-    # NEVER broadcast it; only probe_df and the query frame are tiny by
-    # contract. AQE still picks a broadcast join at runtime when the
-    # probed cells happen to be small.
-    scored = (
-        vecs.join(cand, "key")
-        .join(F.broadcast(queries.select(query_id, query_vec)), query_id)
-        .withColumn("score", V.cosine_similarity("embedding", query_vec))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(query_id).orderBy(F.desc_nulls_last("score"), F.asc("key"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, "key", "score", "rank")
-    )
+    # NEVER broadcast it. AQE still picks a broadcast join at runtime
+    # when the probed cells happen to be small.
+    return qs.exact_topk(vecs.join(cand, "key"), k)
 
 
 # ---------------------------------------------------------------------------
@@ -1187,6 +1294,7 @@ def build_ivfpq_index(
         residuals, _codebook_df(spark, meta), m, dims, "key", "res",
         extra_cols=("documentid", "cell"),
     )
+    meta["columns"] = [*_pq_columns(meta), "cell"]
     idx = _ivfpq_dir(store, collection)
     (
         codes.repartition("cell")
@@ -1195,9 +1303,7 @@ def build_ivfpq_index(
         .option("compression", "zstd")
         .parquet(os.path.join(idx, "codes"))
     )
-    os.makedirs(idx, exist_ok=True)
-    with open(os.path.join(idx, _IVFPQ_META), "w") as f:
-        json.dump(meta, f)
+    _write_meta(os.path.join(idx, _IVFPQ_META), meta)
     return meta
 
 
@@ -1207,23 +1313,16 @@ def _load_ivfpq_meta(store: CollectionStore, collection: str) -> dict:
         raise FileNotFoundError(
             f"no IVFPQ index for collection {collection!r}; run build_ivfpq_index first"
         )
-    return json.load(open(path))
+    with open(path) as f:
+        return json.load(f)
 
 
 def read_ivfpq_codes(
     spark: SparkSession, store: CollectionStore, collection: str
 ) -> DataFrame:
     codes = os.path.join(_ivfpq_dir(store, collection), "codes")
-    has_data = any(
-        f.endswith(".parquet") for _, _, files in os.walk(codes) for f in files
-    )
-    if not has_data:
-        meta = _load_ivfpq_meta(store, collection)
-        cols = ", ".join(f"code_{s} int" for s in range(meta["m"]))
-        return spark.createDataFrame([], f"key string, documentid string, {cols}, cell int")
-    # mergeSchema: merge_ivfpq_codes stages epoch-tagged rows next to
-    # epoch-less base/refresh rows (read back as epoch_id NULL)
-    return spark.read.option("mergeSchema", "true").parquet(codes)
+    meta = _load_ivfpq_meta(store, collection)
+    return _read_cell_table(spark, codes, meta, [*_pq_columns(meta), "cell"])
 
 
 def merge_ivfpq_codes(
@@ -1275,6 +1374,7 @@ def merge_ivfpq_codes(
     if len(non_null) < len(hot):
         cond = cond | F.col("cell").isNull()
     out_cols = ["key", "documentid", *code_cols, "epoch_id", "cell"]
+    _declare_epoch(os.path.join(_ivfpq_dir(store, collection), _IVFPQ_META), meta, out_cols)
     kept = (
         existing.filter(cond)
         .filter(F.col("epoch_id").isNull() | (F.col("epoch_id") != int(epoch_id)))
@@ -1434,21 +1534,16 @@ def ivfpq_search_indexed(
 ) -> DataFrame:
     """IVFADC search off the persisted index: probe cells and the
     per-(query, cell) residual ADC lookup tables are computed
-    DRIVER-SIDE from the tiny query set against the frozen quantizers
-    (queries x n_probe x m x k doubles), the code scan carries a
-    LITERAL cell filter (static parquet partition pruning), and scoring
-    is m array lookups per code row. ``rerank='auto'`` (16*k) fetches
-    full-precision vectors for the shortlist only and reranks by exact
-    cosine — the same recall-recovery contract as pq_search_indexed.
+    DRIVER-SIDE from the query set (collected once; small by contract)
+    against the frozen quantizers (queries x n_probe x m x k doubles)
+    and reach the code scan as one folded map literal keyed by cell,
+    the code scan carries a LITERAL cell filter (static parquet
+    partition pruning), and scoring is m array lookups per code row.
+    ``rerank='auto'`` (16*k) fetches full-precision vectors for the
+    shortlist only and reranks by exact cosine — the same
+    recall-recovery contract as pq_search_indexed.
     Returns (query_id, key, score, rank) with rerank, else
     (query_id, key, adc_dist, rank)."""
-    import numpy as np
-
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
-
-    from dataingestionplayground_spark.functions import vector as V
-
     if rerank == "auto":
         rerank = 16 * k
     meta = _load_ivfpq_meta(store, collection)
@@ -1467,79 +1562,36 @@ def ivfpq_search_indexed(
     for s in range(1, m):
         offs[s] = offs[s - 1] + len(cb[s - 1])
 
-    qid_field = queries.schema[query_id]
-    q_rows = queries.select(query_id, query_vec).collect()
-    if not q_rows:
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    qid_field,
-                    T.StructField("key", T.StringType(), True),
-                    T.StructField("score" if rerank else "adc_dist", T.DoubleType(), True),
-                    T.StructField("rank", T.IntegerType(), True),
-                ]
-            ),
-        )
-    lut_rows = []
-    for r in q_rows:
-        q = np.asarray(r[query_vec], dtype=np.float64)
+    qs = _QuerySet(queries, query_id, query_vec)
+    if not qs.ids:
+        return qs.empty(spark, "score" if rerank else "adc_dist")
+    by_cell: dict[int, list] = {}  # cell -> (query, flat offs-addressed LUT)
+    for qid, v in zip(qs.ids, qs.vecs):
+        q = np.asarray(v, dtype=np.float64)
         d2 = ((C - q[None, :]) ** 2).sum(axis=1)
         order = np.argsort(d2, kind="stable")[:n_probe]  # ties -> lowest cell
-        for c in order:
-            qres = q - C[int(c)]
+        for c in order.tolist():
+            qres = q - C[c]
             lut = []
             for s in range(m):
                 sub = qres[s * dsub : (s + 1) * dsub]
                 lut.extend(((cb[s] - sub[None, :]) ** 2).sum(axis=1).tolist())
-            lut_rows.append((r[query_id], int(c), lut))  # flat, offs-addressed
-    all_cells = sorted({c for _, c, _ in lut_rows})
-    lut_df = F.broadcast(
-        spark.createDataFrame(
-            lut_rows,
-            T.StructType(
-                [
-                    qid_field,
-                    T.StructField("cell", T.IntegerType(), False),
-                    T.StructField("lut", T.ArrayType(T.DoubleType()), False),
-                ]
-            ),
-        )
+            by_cell.setdefault(c, []).append({"q": qid, "lut": lut})
+    luts = _folded_map(
+        by_cell, T.IntegerType(), T.ArrayType(qs.row_type("lut", T.ArrayType(T.DoubleType())))
     )
-    codes = read_ivfpq_codes(spark, store, collection).filter(
-        F.col("cell").isin(all_cells)  # literal -> static partition pruning
+    scored = (
+        read_ivfpq_codes(spark, store, collection)
+        .filter(F.col("cell").isin(sorted(by_cell)))  # literal -> static partition pruning
+        .withColumn("__l", F.explode(F.element_at(luts, F.col("cell"))))
     )
-    score = " + ".join(
-        f"element_at(lut, {offs[s]} + code_{s} + 1)" for s in range(m)
-    )
-    depth = max(k, rerank) if rerank else k
-    scored = codes.join(lut_df, "cell").withColumn("adc_dist", F.expr(score))
-    if int(meta.get("assign_top", 1)) > 1:
-        # soft assignment stores a key's code in several cells; a key
-        # reachable through two probed cells scores once (its best ADC
-        # estimate), not twice
-        scored = scored.groupBy(query_id, "key").agg(
-            F.min("adc_dist").alias("adc_dist")
-        )
-    w = Window.partitionBy(query_id).orderBy(F.asc("adc_dist"), F.asc("key"))
-    adc = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= depth)
-        .select(query_id, "key", F.round("adc_dist", 9).alias("adc_dist"), "rank")
-    )
+    # soft assignment stores a key's code in several cells; a key
+    # reachable through two probed cells scores once (its best ADC
+    # estimate), not twice
+    soft = int(meta.get("assign_top", 1)) > 1
+    adc = _adc_topk(scored, query_id, offs, max(k, rerank) if rerank else k, best_per_key=soft)
     if not rerank:
         return adc
     short = adc.select(query_id, "key")
-    rescored = (
-        store.read(spark, collection)
-        .select("key", "embedding")
-        .join(F.broadcast(short), "key")
-        .join(F.broadcast(queries.select(query_id, query_vec)), query_id)
-        .withColumn("score", V.cosine_similarity("embedding", query_vec))
-    )
-    w2 = Window.partitionBy(query_id).orderBy(F.desc_nulls_last("score"), F.asc("key"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id, "key", "score", "rank")
-    )
+    vecs = store.read(spark, collection).select("key", "embedding")
+    return qs.exact_topk(vecs.join(F.broadcast(short), "key"), k)

@@ -4,7 +4,10 @@ chunks, and search scans the prebuilt code table."""
 
 from __future__ import annotations
 
+import itertools
+import json
 import os
+import shutil
 
 import pytest
 
@@ -30,14 +33,28 @@ def md_elements(spark, md_fixture_dir):
     return parse_markdown_df(raw).cache()
 
 
-def _queries_df(spark, texts):
+def _queries_df(spark, texts, int_ids=False):
+    if int_ids:
+        rows = [(10 * i, hash_embed(t)) for i, t in enumerate(texts)]
+        return spark.createDataFrame(rows, "query_id int, query_vec array<float>")
     rows = [(f"q{i}", hash_embed(t)) for i, t in enumerate(texts)]
     return spark.createDataFrame(rows, "query_id string, query_vec array<float>")
 
 
+# 20 two-word queries over the fixture's topics
+_BATCH = [
+    f"{a} {b}"
+    for a, b in itertools.permutations(
+        ["machine", "learning", "roman", "empire", "database"], 2
+    )
+]
+
+
 def test_build_and_search_matches_direct_adc(spark, md_elements, tmp_path):
     """Index-backed search == computing ADC from the raw collection (the
-    index is a cache, not an approximation on top of one)."""
+    index is a cache, not an approximation on top of one). The index
+    computes each query's lookup table on the driver, the operators in
+    SQL: a batch of queries checks that the two agree to the last digit."""
     from dataingestionplayground_spark.operators.similarity import pq_adc_search
 
     store = CollectionStore(str(tmp_path))
@@ -48,13 +65,15 @@ def test_build_and_search_matches_direct_adc(spark, md_elements, tmp_path):
     )
     assert len(meta["cents"]) == M * K and meta["n_centroids"] == K
 
-    q = _queries_df(spark, ["machine learning algorithms", "the roman empire"])
-    got = pq_search_indexed(spark, store, "docs", q, k=5).collect()
     chunks = store.read(spark, "docs").select("key", "embedding")
-    want = pq_adc_search(
-        chunks, q, k=5, m=M, n_centroids=K, dims=DIMS, corpus_id="key"
-    ).collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    for int_ids in (False, True):
+        q = _queries_df(spark, _BATCH, int_ids)
+        hits = pq_search_indexed(spark, store, "docs", q, k=5)
+        want = pq_adc_search(
+            chunks, q, k=5, m=M, n_centroids=K, dims=DIMS, corpus_id="key"
+        ).collect()
+        assert sorted(map(tuple, hits.collect())) == sorted(map(tuple, want))
+        assert hits.schema["query_id"].dataType == q.schema["query_id"].dataType
     # collection listing is not polluted by the index artifact
     assert store.list_collections() == ["docs"]
 
@@ -62,12 +81,23 @@ def test_build_and_search_matches_direct_adc(spark, md_elements, tmp_path):
     # keys decides — must equal the non-indexed pq_adc_rerank operator
     from dataingestionplayground_spark.operators.similarity import pq_adc_rerank
 
-    got_rr = pq_search_indexed(spark, store, "docs", q, k=3, rerank=10).collect()
+    hits_rr = pq_search_indexed(spark, store, "docs", q, k=3, rerank=10)
+    got_rr = hits_rr.collect()
     want_rr = pq_adc_rerank(
         chunks, q, k=3, shortlist=10, m=M, n_centroids=K, dims=DIMS, corpus_id="key"
     ).collect()
     assert sorted(map(tuple, got_rr)) == sorted(map(tuple, want_rr))
     assert {r["rank"] for r in got_rr} <= {1, 2, 3}
+    assert hits_rr.schema["query_id"].dataType == q.schema["query_id"].dataType
+
+    # an empty query set gives an empty, typed frame
+    for rerank, score in ((None, "adc_dist"), ("auto", "score")):
+        empty = pq_search_indexed(spark, store, "docs", q.limit(0), k=5, rerank=rerank)
+        assert empty.collect() == []
+        assert empty.columns == ["query_id", "key", score, "rank"]
+        assert [f.dataType.simpleString() for f in empty.schema] == [
+            q.schema["query_id"].dataType.simpleString(), "string", "double", "int"
+        ]
 
 
 def test_incremental_refresh_appends_only_new(spark, md_elements, tmp_path):
@@ -171,39 +201,45 @@ def test_ivf_search_matches_probed_cells_bruteforce(spark, md_elements, tmp_path
     )
     from pyspark.sql import Window
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
     store, meta = _ivf_fixture(spark, md_elements, tmp_path)
-    q = _queries_df(spark, ["machine learning algorithms", "the roman empire"])
-    got = ivf_search_indexed(spark, store, "ivf", q, k=5, n_probe=2).collect()
+    for int_ids in (False, True):
+        q = _queries_df(spark, ["machine learning algorithms", "the roman empire"], int_ids)
+        hits = ivf_search_indexed(spark, store, "ivf", q, k=5, n_probe=2)
+        got = hits.collect()
+        assert hits.schema["query_id"].dataType == q.schema["query_id"].dataType
 
-    # expected: per query, numpy-probe the 2 nearest frozen centroids,
-    # then exact cosine over assignment rows in those cells only
-    C = np.asarray(meta["cents"], dtype=np.float64)
-    cn = np.sqrt((C * C).sum(axis=1))
-    rows = []
-    for r in q.collect():
-        e = np.asarray(r["query_vec"], dtype=np.float64)
-        sims = (e @ C.T) / (np.sqrt(e @ e) * cn)
-        cells = [int(c) for c in np.argsort(-sims, kind="stable")[:2]]
-        rows.extend((r["query_id"], c) for c in cells)
-    probe = spark.createDataFrame(rows, "query_id string, cell int")
-    cand = read_ivf_assignments(spark, store, "ivf").join(probe, "cell").select("query_id", "key")
-    scored = (
-        store.read(spark, "ivf")
-        .select("key", "embedding")
-        .join(cand, "key")
-        .join(q, "query_id")
-        .withColumn("score", V.cosine_similarity("embedding", "query_vec"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc_nulls_last("score"), F.asc("key"))
-    want = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "key", "score", "rank")
-        .collect()
-    )
-    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
-    assert len(got) > 0
+        # expected: per query, numpy-probe the 2 nearest frozen centroids,
+        # then exact cosine over assignment rows in those cells only
+        C = np.asarray(meta["cents"], dtype=np.float64)
+        cn = np.sqrt((C * C).sum(axis=1))
+        rows = []
+        for r in q.collect():
+            e = np.asarray(r["query_vec"], dtype=np.float64)
+            sims = (e @ C.T) / (np.sqrt(e @ e) * cn)
+            cells = [int(c) for c in np.argsort(-sims, kind="stable")[:2]]
+            rows.extend((r["query_id"], c) for c in cells)
+        probe = spark.createDataFrame(
+            rows, T.StructType([q.schema["query_id"], T.StructField("cell", T.IntegerType())])
+        )
+        cand = read_ivf_assignments(spark, store, "ivf").join(probe, "cell").select("query_id", "key")
+        scored = (
+            store.read(spark, "ivf")
+            .select("key", "embedding")
+            .join(cand, "key")
+            .join(q, "query_id")
+            .withColumn("score", V.cosine_similarity("embedding", "query_vec"))
+        )
+        w = Window.partitionBy("query_id").orderBy(F.desc_nulls_last("score"), F.asc("key"))
+        want = (
+            scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= 5)
+            .select("query_id", "key", "score", "rank")
+            .collect()
+        )
+        assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+        assert len(got) > 0
 
 
 def test_ivf_search_scan_is_partition_pruned(spark, md_elements, tmp_path):
@@ -219,6 +255,41 @@ def test_ivf_search_scan_is_partition_pruned(spark, md_elements, tmp_path):
     assert "PartitionFilters: [cell" in plan.replace("#", " #").replace("  ", " ") or (
         "PartitionFilters" in plan and "cell" in plan
     )
+
+
+def test_ivf_soft_search_on_legacy_table_scores_each_key_once(
+    spark, md_elements, tmp_path
+):
+    """A soft-assigned IVF table written before the rank schema (no
+    cell_rank / cell_1 columns, no column set in the meta) takes the
+    dedup fallback: a key reachable through two probed cells is still
+    returned at most once per query."""
+    from dataingestionplayground_spark.ingest.ann_index import (
+        build_ivf_index,
+        ivf_search_indexed,
+        read_ivf_assignments,
+    )
+
+    store = CollectionStore(str(tmp_path))
+    ingest_corpus(md_elements, store, "legacy", max_tokens=8, overlap=0)
+    meta = build_ivf_index(spark, store, "legacy", n_cells=4, assign_top=2)
+    idx = os.path.join(store.base_path, "_indexes", "legacy", "ivf")
+    rows = read_ivf_assignments(spark, store, "legacy").select("key", "documentid", "cell").collect()
+    keys = {r["key"] for r in rows}
+    assert len(rows) > len(keys)  # soft: keys stored in two cells
+    legacy = spark.createDataFrame(rows, "key string, documentid string, cell int")
+    shutil.rmtree(os.path.join(idx, "cells"))
+    legacy.write.partitionBy("cell").parquet(os.path.join(idx, "cells"))
+    meta.pop("columns", None)
+    with open(os.path.join(idx, "ivf.json"), "w") as f:
+        json.dump(meta, f)
+    assert "cell_rank" not in read_ivf_assignments(spark, store, "legacy").columns
+
+    q = _queries_df(spark, ["machine learning algorithms", "the roman empire"])
+    # every cell probed and k = all rows: each key is reachable twice
+    got = ivf_search_indexed(spark, store, "legacy", q, k=len(rows), n_probe=4).collect()
+    pairs = [(r["query_id"], r["key"]) for r in got]
+    assert len(pairs) == len(set(pairs)) == 2 * len(keys)
 
 
 def test_ivf_refresh_appends_only_new_and_drops_orphans(spark, md_elements, tmp_path):
@@ -471,3 +542,49 @@ def test_ivfpq_refresh_appends_only_new_drops_orphans_and_ensure(
     # search still works over the maintained table
     q = _queries_df(spark, ["machine learning algorithms"])
     assert len(ivfpq_search_indexed(spark, store, "inc", q, k=3).collect()) > 0
+
+
+# Spark jobs one single-query indexed search starts, build plus collect,
+# counted with getJobIdsForGroup in this test's session (local[8], AQE
+# on): the driver collect of the query frame plus the search's own query
+# stages. Measured IVF 4, PQ 5, IVFPQ 5 with query-side data passed as
+# folded literals; IVF 7, PQ 8, IVFPQ 8 when each index read inferred its
+# schema and each RDD-backed side frame (the query frame, probe table,
+# codebook, lookup tables) cost a job per broadcast.
+SEARCH_JOB_BOUND = {"ivf": 4, "pq": 5, "ivfpq": 5}
+
+
+def test_indexed_search_job_budget(spark, md_elements, tmp_path):
+    from dataingestionplayground_spark.ingest.ann_index import (
+        build_ivf_index,
+        build_ivfpq_index,
+        ivf_search_indexed,
+        ivfpq_search_indexed,
+    )
+    from dataingestionplayground_spark.plans import physical_plan
+
+    store = CollectionStore(str(tmp_path))
+    ingest_corpus(md_elements, store, "jobs", max_tokens=8, overlap=0)
+    build_pq_index(spark, store, "jobs", m=M, n_centroids=K, dims=DIMS, codebook_mode="seed")
+    build_ivf_index(spark, store, "jobs", n_cells=4)
+    build_ivfpq_index(spark, store, "jobs", n_cells=4, m=M, n_centroids=K, dims=DIMS)
+    searches = {
+        "ivf": lambda q: ivf_search_indexed(spark, store, "jobs", q, k=3),
+        "pq": lambda q: pq_search_indexed(spark, store, "jobs", q, k=3, rerank="auto"),
+        "ivfpq": lambda q: ivfpq_search_indexed(spark, store, "jobs", q, k=3),
+    }
+    sc = spark.sparkContext
+    for kind, search in searches.items():
+        q = _queries_df(spark, ["machine learning algorithms"])
+        group = f"test-indexed-search-jobs-{kind}"
+        sc.setJobGroup(group, group)
+        try:
+            hits = search(q)
+            rows = hits.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert rows
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert 0 < n_jobs <= SEARCH_JOB_BOUND[kind], (kind, n_jobs)
+        # no RDD-backed side frame anywhere in the plan
+        assert "ExistingRDD" not in physical_plan(hits), kind
