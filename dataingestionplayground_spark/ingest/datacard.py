@@ -21,12 +21,14 @@ DATACARD_NAME = "_DATACARD.json"
 def build_datacard(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> dict:
     """Summarize a (id, text[, source][, lang]) corpus: sizes, token
     totals, quality quartiles, per-source/per-lang distribution, and the
-    exact-duplicate rate. Two collects (totals, quality quartiles) plus
-    one per ``source``/``lang`` breakdown present, each one
-    map-side-combinable aggregation — the same cost class at any corpus
-    size. Every collect re-reads ``docs``, so pass a cached frame when
-    ``docs`` is costly to compute (the ``curate`` CLI does).
+    exact-duplicate rate. One collect for the totals and quality
+    quartiles plus one per ``source``/``lang`` breakdown present, each
+    one map-side-combinable aggregation — the same cost class at any
+    corpus size. Every collect re-reads ``docs``, so pass a cached frame
+    when ``docs`` is costly to compute (the ``curate`` CLI does).
     """
+    from dataingestionplayground_spark.queries.textq import quality_features, quality_score
+
     has_source = "source" in docs.columns
     has_lang = "lang" in docs.columns
 
@@ -35,26 +37,28 @@ def build_datacard(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
         F.col(text_col).alias("text"),
         *([F.col("source")] if has_source else []),
         *([F.col("lang")] if has_lang else []),
-    ).withColumn("n_toks", TX.token_count("text").cast("long"))
+    )
+    feats = base.select(
+        "text", F.length("text").alias("n_chars"), *quality_features()
+    ).withColumn("quality", quality_score())
 
-    totals = base.agg(
+    def quartile(p: float):
+        # percentile skips nulls, so the CASE keeps the rows quality_scores
+        # keeps (n_toks > 0)
+        return F.round(
+            F.expr(f"percentile(CASE WHEN n_toks > 0 THEN quality END, {p})"), 6
+        )
+
+    totals = feats.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_toks").cast("long").alias("total_tokens"),
         F.min("n_toks").cast("long").alias("min_tokens"),
         F.max("n_toks").cast("long").alias("max_tokens"),
         F.expr("percentile(n_toks, 0.5)").alias("median_tokens"),
         F.countDistinct(TX.fingerprint("text")).cast("long").alias("n_unique_texts"),
-    ).collect()[0]
-
-    scored = base.filter(F.col("n_toks") > 0).withColumn(
-        "n_chars", F.length("text")
-    )
-    from dataingestionplayground_spark.queries.textq import quality_scores
-
-    q = quality_scores(scored).agg(
-        F.round(F.expr("percentile(quality, 0.25)"), 6).alias("q25"),
-        F.round(F.expr("percentile(quality, 0.5)"), 6).alias("q50"),
-        F.round(F.expr("percentile(quality, 0.75)"), 6).alias("q75"),
+        quartile(0.25).alias("q25"),
+        quartile(0.5).alias("q50"),
+        quartile(0.75).alias("q75"),
     ).collect()[0]
 
     card = {
@@ -65,7 +69,11 @@ def build_datacard(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
             "median": totals["median_tokens"],
             "max": totals["max_tokens"],
         },
-        "quality_quartiles": {"q25": q["q25"], "q50": q["q50"], "q75": q["q75"]},
+        "quality_quartiles": {
+            "q25": totals["q25"],
+            "q50": totals["q50"],
+            "q75": totals["q75"],
+        },
         "exact_duplicate_rate": round(
             1.0 - totals["n_unique_texts"] / totals["n_docs"], 6
         )

@@ -2,32 +2,41 @@
 that turns near-dup PAIRS (MinHash-LSH output) into dedup CLUSTERS
 ("keep one document per duplicate cluster").
 
-Algorithm: min-label propagation with pointer jumping. Each iteration
-(1) adopts the smallest label reachable in one hop (join + min-agg) and
-(2) path-halves: label := label(label) — the pointer-jump makes label
-chains collapse geometrically, so convergence is O(log diameter)
-iterations (plain one-hop propagation alone would be O(diameter): a
-20-hop near-dup chain would exhaust a 20-iteration budget). The driver
-loop only checks a convergence *count* per iteration; all data stays
-distributed. Raises if the budget is exhausted before the fixed point —
-a silently unconverged result would split one duplicate cluster into
-several and keep multiple "representatives".
+Algorithm: min-label propagation with pointer jumping. Each round
+(1) path-halves, J(v) = least(A(v), A(A(v))), so chains of stale labels
+pointing toward the component minimum collapse geometrically and
+convergence takes O(log diameter) rounds (one-hop propagation alone
+would be O(diameter): a 20-hop near-dup chain would exhaust a 20-round
+budget; an arm whose labels point toward a local minimum still costs a
+round per hop), then (2) hops: A'(v) = min of J over
+v and its neighbors (join + min-agg). All data stays distributed; each
+round is ONE eager materialization, and that same action counts the
+nodes whose hop changed their jumped label.
+
+Convergence rule: the round whose hop changes nothing (A' = J) is the
+last. hop(J) = J means J(v) <= J(u) across every edge in both
+directions, so J is constant on each component; labels only decrease and
+always name a node of the component, so that constant is the component
+minimum. The rule holds for any orderable id type. Raises if the budget
+is exhausted before the fixed point — a silently unconverged result
+would split one duplicate cluster into several and keep multiple
+"representatives".
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
 def _release_local_checkpoint(df: DataFrame) -> None:
     """Free a localCheckpoint-ed frame's cached blocks NOW instead of
-    waiting for the async ContextCleaner (ADVICE r16: each pointer-jump
-    round adds two lineage-severed block sets; prior rounds' blocks
-    otherwise accumulate until GC catches up, growing storage-memory
-    pressure with iteration count). Best-effort: a checkpointed frame's
-    analyzed plan is a LogicalRDD whose rdd we can unpersist directly;
-    anything else is left to the ContextCleaner as before."""
+    waiting for the async ContextCleaner: each round materializes one
+    lineage-severed block set, and earlier rounds' blocks would otherwise
+    accumulate until GC catches up, growing storage-memory pressure with
+    the round count. Best-effort: a checkpointed frame's analyzed plan is
+    a LogicalRDD whose rdd we can unpersist directly; anything else is
+    left to the ContextCleaner."""
     try:
         node = df._jdf.queryExecution().analyzed()
         if node.getClass().getSimpleName() == "LogicalRDD":
@@ -55,129 +64,76 @@ def connected_components(
     )
     # SELF-LOOPS fold "least(own label, neighbor min)" into the one
     # neighbor-min aggregation: with (u, u) present, min over the
-    # neighborhood already includes u's own label, so each round is ONE
-    # join + groupBy instead of join + groupBy + a second labels join.
+    # neighborhood already includes u's own label, so each hop is ONE
+    # join + groupBy, and the (u, u) row alone carries J(u) as `own`.
     # Pre-partitioning the persisted edge table on the per-round join key
     # (dst) lets every round's join reuse the cached partitioning — the
     # big (2|E|+|V|) side is shuffled once, not once per round.
+    # No .distinct(): min-label propagation is multiplicity-blind (min
+    # over a multiset = min over its set), every in-repo pair source
+    # already emits distinct (id_a < id_b) pairs, and the three union legs
+    # cannot collide (self-loops have src=dst, the two orientations are
+    # disjoint under id_a < id_b). Duplicate-heavy external inputs cost
+    # extra per-round join mass, never correctness.
     n_part = spark.sparkContext.defaultParallelism
-    # r17: no .distinct() on the edge table — min-label propagation is
-    # multiplicity-blind (min over a multiset = min over its set), every
-    # in-repo pair source already emits distinct (id_a < id_b) pairs,
-    # and the three union legs cannot collide (self-loops have src=dst,
-    # the two orientations are disjoint under id_a < id_b). The distinct
-    # was a full (2|E|+|V|) exchange paid once per call purely to guard
-    # against duplicate-heavy EXTERNAL inputs, which only cost extra
-    # per-round join mass, never correctness.
     edges = (
         sym.union(sym.select(F.col("src"), F.col("src").alias("dst")))
         .repartition(n_part, "dst")
         .persist()
     )
-    # initial label: min over self + neighbors. Each iteration's result
-    # is localCheckpoint-ed: the pointer-jump references `labels` twice
-    # per round, so without lineage truncation the logical plan grows
-    # geometrically and Catalyst itself OOMs long before the data does
-    # (persist caches blocks but does NOT shrink the analyzed plan).
+    # initial label A_0: min over self + neighbors. Every round's labels
+    # are localCheckpoint-ed: the pointer jump references them twice, so
+    # without lineage truncation the logical plan grows geometrically and
+    # Catalyst itself OOMs long before the data does (persist caches
+    # blocks but does NOT shrink the analyzed plan).
     labels = (
         edges.groupBy("src")
         .agg(F.min("dst").alias("component"))
         .select(F.col("src").alias("id"), "component")
         .localCheckpoint(eager=True)
     )
-
-    from pyspark.sql.types import IntegralType
-
-    # integral only: casting fractional ids to decimal(38,0) ROUNDS, so a
-    # round of sub-unit label decreases could leave the rounded sum
-    # unchanged and declare convergence prematurely — float/double/
-    # decimal ids take the join-based changed-count path instead
-    numeric_ids = isinstance(labels.schema["component"].dataType, IntegralType)
-
-    def _label_sum(df: DataFrame):
-        # labels only ever DECREASE (every update is a least(...)), so an
-        # unchanged sum across rounds <=> an unchanged label vector — a
-        # join-free convergence check, decimal so 63-bit ids cannot
-        # overflow the running total at cluster scale. Non-integral ids
-        # fall back to the join-based changed-count below.
-        return df.agg(
-            F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-
-    def _changed(new: DataFrame, old: DataFrame) -> int:
-        return (
-            new.alias("n")
-            .join(old.alias("o"), "id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-
-    # prev_sum starts at the INITIAL labels' sum (one tiny agg over
-    # already-checkpointed blocks), so a label vector that is already a
-    # fixed point after the init hop converges after ONE loop round
-    # instead of two. Near-dup graphs are mostly tiny cliques whose min
-    # is everyone's neighbor, so init convergence is the common case; a
-    # chain that needs k propagate rounds still takes k + 1 (the
-    # confirmation round is inherent to fixed-point iteration).
-    prev_sum = _label_sum(labels) if numeric_ids else None
     converged = False
     rounds = 0
     for _ in range(max_iter):
         rounds += 1
-        # propagate: node label := min over (self + neighbors)' labels —
-        # the self-loops make the single aggregation cover the least()
-        # with the node's own label
-        hopped = (
-            edges.join(
-                labels.select(
-                    F.col("id").alias("dst"), F.col("component").alias("d_comp")
-                ),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("d_comp").alias("component"))
-            .select(F.col("src").alias("id"), "component")
-            # r16: the pointer jump references `hopped` twice (probe +
-            # parent side) and aliased self-join sides do not
-            # ReuseExchange — without this materialization the round's
-            # edge join + aggregation runs TWICE per round (measured
-            # -7% locally; at scale it halves the per-round 2|E| work)
-            .localCheckpoint(eager=True)
-        )
-        # pointer jump (path halving): component := component's component.
-        # Labels are node ids, so the lookup is a self-join; chains of
-        # stale labels collapse geometrically -> O(log diameter) rounds.
-        # One jump per round: near-dup graphs have tiny diameter, so a
-        # second jump per round costs a full self-join shuffle without
-        # saving a round (measured slower at sf0.1-0.5).
-        parent = hopped.select(
+        # pointer jump (path halving): J(v) = least(A(v), A(A(v))). Labels
+        # are node ids, so the lookup is a left self-join; both sides scan
+        # the same checkpoint, so nothing upstream runs twice. One jump
+        # per round: near-dup graphs have tiny diameter, so a second jump
+        # costs a full self-join shuffle without saving a round.
+        parent = labels.select(
             F.col("id").alias("component"), F.col("component").alias("g_comp")
         )
+        jumped = labels.join(parent, "component", "left").select(
+            F.col("id").alias("dst"), F.least("component", "g_comp").alias("j")
+        )
+        # hop: node label := min of J over (self + neighbors); the
+        # self-loop row alone yields `own` = J(v). The hop is
+        # materialized before anything reads it twice: aliased self-join
+        # sides do not ReuseExchange, so a lazy hop read by both the
+        # next jump and a separate check would run its edge join twice.
+        changed = Observation()
         new_labels = (
-            hopped.join(parent, "component", "left")
-            .select(
-                "id",
-                F.least(
-                    "component", F.coalesce("g_comp", "component")
-                ).alias("component"),
+            edges.join(jumped, "dst")
+            .groupBy("src")
+            .agg(
+                F.min("j").alias("component"),
+                F.expr("min(j) FILTER (WHERE src = dst)").alias("own"),
             )
+            .observe(
+                changed,
+                F.count(F.when(F.col("component") != F.col("own"), 1)).alias("n"),
+            )
+            .select(F.col("src").alias("id"), "component")
             .localCheckpoint(eager=True)
         )
-        # r17 (ADVICE r16): hopped is consumed once new_labels is
-        # materialized, and the PREVIOUS round's labels once the
-        # convergence check has read them — release both eagerly so the
-        # per-round block footprint stays at 2 frames instead of
-        # growing with the iteration count
-        _release_local_checkpoint(hopped)
-        if numeric_ids:
-            cur_sum = _label_sum(new_labels)  # tiny agg over checkpointed blocks
-            done = cur_sum == prev_sum
-            prev_sum = cur_sum
-        else:
-            done = _changed(new_labels, labels) == 0
+        # the previous labels are consumed once new_labels is
+        # materialized: release them so the block footprint stays at one
+        # frame instead of growing with the round count
         _release_local_checkpoint(labels)
         labels = new_labels
-        if done:
+        # hop(J) = J: J, and so the hop's output, is the fixed point
+        if changed.get["n"] == 0:
             converged = True
             break
     edges.unpersist()

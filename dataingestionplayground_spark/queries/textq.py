@@ -67,20 +67,30 @@ _QUALITY_SQL = (
 )
 
 
+def quality_features():
+    """The per-doc inputs of the quality score besides ``n_chars``:
+    (n_toks, n_stop, len_sum) columns over ``text``."""
+    return [
+        TX.token_count("text").alias("n_toks"),
+        TX.stopword_hits("text", "en").alias("n_stop"),
+        F.length(F.expr("replace(text, ' ', '')")).alias("len_sum"),
+    ]
+
+
+def quality_score():
+    """The quality score over (n_chars, n_toks, n_stop, len_sum) columns;
+    null where ``n_toks`` is 0."""
+    return F.expr(_QUALITY_SQL)
+
+
 def quality_scores(docs):
     """(doc_id, n_toks, n_stop, quality) for any frame with
     (doc_id, text, n_chars) — pure Catalyst expressions, so it works
     unchanged on BATCH and STREAMING frames (streaming/documents.py wraps
     it as the stream twin; the oracle checks the batch side)."""
-    feats = docs.select(
-        "doc_id",
-        "n_chars",
-        TX.token_count("text").alias("n_toks"),
-        TX.stopword_hits("text", "en").alias("n_stop"),
-        F.length(F.expr("replace(text, ' ', '')")).alias("len_sum"),
-    )
+    feats = docs.select("doc_id", "n_chars", *quality_features())
     return feats.filter(F.col("n_toks") > 0).select(
-        "doc_id", "n_toks", "n_stop", F.expr(_QUALITY_SQL).alias("quality")
+        "doc_id", "n_toks", "n_stop", quality_score().alias("quality")
     )
 
 

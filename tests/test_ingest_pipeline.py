@@ -541,3 +541,48 @@ def test_export_manifest_pins_schema(spark, tmp_path):
     json.dump(legacy, open(mpath, "w"))
     m3 = delete_from_export(spark, str(tmp_path / "exp"), ["c"])
     assert m3["total_rows"] == 1
+
+
+# Spark jobs build_datacard starts on a cached (doc_id, text) frame of
+# the sf0.001 documents, counted with getJobIdsForGroup in this test's
+# session (local[8], AQE on): 3 with the quality quartiles computed in
+# the totals aggregate, 5 when they took a separate collect.
+DATACARD_JOB_BOUND = 3
+
+
+def test_datacard_quartiles_one_aggregate(spark):
+    import numpy as np
+
+    from dataingestionplayground_spark.ingest.datacard import build_datacard
+    from dataingestionplayground_spark.queries.textq import quality_scores
+
+    docs = (
+        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        .select("doc_id", "text")
+        .cache()
+    )
+    docs.count()
+    sc = spark.sparkContext
+    group = "test-datacard-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        card = build_datacard(docs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # the quartiles of quality_scores over the same frame, the card's
+    # n_chars (length of the text) included
+    scored = quality_scores(docs.withColumn("n_chars", F.length("text")))
+    want = scored.agg(
+        *[
+            F.round(F.expr(f"percentile(quality, {p})"), 6).alias(k)
+            for k, p in (("q25", 0.25), ("q50", 0.5), ("q75", 0.75))
+        ]
+    ).collect()[0]
+    assert card["quality_quartiles"] == want.asDict()
+    vals = [r.quality for r in scored.select("quality").collect()]
+    np_q = np.percentile(vals, [25, 50, 75])
+    assert np.allclose(list(want.asDict().values()), np_q, atol=1e-6)
+    docs.unpersist()
+    assert 0 < n_jobs <= DATACARD_JOB_BOUND, n_jobs

@@ -216,11 +216,10 @@ def test_connected_components_long_chain_pointer_jumping(spark):
 
 
 def test_connected_components_round_counts(spark):
-    """r7 verdict item 5: the per-round cost cut must not come at the
-    price of MORE rounds. The min-neighbor init + hop + path-halving
-    structure resolves a 16-hop chain in <=5 rounds (one-hop propagation
-    alone would need 16), and an LSH-style clique union in 2 (one real
-    round + the unavoidable confirmation round)."""
+    """A per-round cost cut must not come at the price of MORE rounds.
+    The min-neighbor init + path-halving + hop structure resolves a
+    16-hop chain in <=5 rounds (one-hop propagation alone would need 16),
+    and an LSH-style clique union in at most 2."""
     from dataingestionplayground_spark.operators.graph import connected_components
 
     chain = spark.createDataFrame(
@@ -231,8 +230,9 @@ def test_connected_components_round_counts(spark):
     assert set(comp.values()) == {0} and st["rounds"] <= 5
 
     # two overlapping band-bucket cliques (the shape LSH pairs produce):
-    # the bridge node 3 leaves clique {3..6} at label 3 after init, so
-    # one real propagate round + one confirmation round
+    # the bridge node 3 leaves clique {3..6} at label 3 after init; the
+    # first round's jump resolves it through label(3) = 0, and the hop
+    # after it confirms
     cliques = [(a, b) for grp in ([0, 1, 2, 3], [3, 4, 5, 6]) for a in grp for b in grp if a < b]
     pairs = spark.createDataFrame(cliques, "id_a long, id_b long")
     st = {}
@@ -240,9 +240,8 @@ def test_connected_components_round_counts(spark):
     assert set(comp.values()) == {0} and st["rounds"] <= 2
 
     # a SINGLE clique converges at the init hop itself (everyone's
-    # neighborhood contains the min) — r17 seeds the convergence sum
-    # with the initial labels, so the loop detects this in ONE round
-    # instead of burning a second, pure-confirmation round
+    # neighborhood contains the min), and the first round's hop changes
+    # nothing, so the loop detects this in ONE round
     one = [(a, b) for a in range(4) for b in range(4) if a < b]
     st = {}
     comp = {
@@ -255,10 +254,10 @@ def test_connected_components_round_counts(spark):
 
 
 def test_connected_components_fractional_ids_use_exact_path(spark):
-    """Float ids must NOT take the decimal-sum convergence shortcut:
-    decimal(38,0) rounds sub-unit label decreases, which could declare
-    convergence prematurely. The join-based changed-count path must
-    still produce exact components for fractional ids."""
+    """Float ids converge exactly: the convergence check compares each
+    node's hopped label with its own jumped label, so it sees sub-unit
+    label decreases that any rounded aggregate of the labels would
+    miss."""
     from dataingestionplayground_spark.operators.graph import connected_components
 
     # sub-unit-spaced ids: every label decrease is fractional, so a
@@ -269,6 +268,85 @@ def test_connected_components_fractional_ids_use_exact_path(spark):
     )
     comp = {r.id: r.component for r in connected_components(pairs).collect()}
     assert comp == {0.1: 0.1, 0.2: 0.1, 0.3: 0.1, 0.4: 0.1, 7.5: 7.5, 7.6: 7.5}
+
+
+def _components_oracle(edges):
+    """Union-find reference: node -> least node id of its component."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+def test_connected_components_string_ids(spark):
+    """String ids (the curate workload's doc-id type) converge by the same
+    rule as numeric ids: labels are the lexicographic minimum and the
+    round bounds of the long-id cases hold."""
+    from dataingestionplayground_spark.operators.graph import connected_components
+
+    # a 16-hop chain over unpadded numerals, whose lexicographic order
+    # differs from the numeric one along the chain ("10" < "2")
+    chain = [(str(i), str(i + 1)) for i in range(16)]
+    st = {}
+    pairs = spark.createDataFrame(chain, "id_a string, id_b string")
+    comp = {r.id: r.component for r in connected_components(pairs, stats=st).collect()}
+    assert comp == _components_oracle(chain) and set(comp.values()) == {"0"}
+    assert st["rounds"] <= 5
+
+    # two overlapping cliques bridged at "h", plus a disjoint one
+    groups = (["d", "f", "h", "k"], ["h", "m", "a9", "z"], ["q", "r", "s"])
+    cliques = [(a, b) for g in groups for a in g for b in g if a < b]
+    st = {}
+    pairs = spark.createDataFrame(cliques, "id_a string, id_b string")
+    comp = {r.id: r.component for r in connected_components(pairs, stats=st).collect()}
+    assert comp == _components_oracle(cliques)
+    assert set(comp.values()) == {"a9", "q"} and st["rounds"] <= 2
+
+
+def test_connected_components_empty_pairs(spark):
+    from dataingestionplayground_spark.operators.graph import connected_components
+
+    st = {}
+    pairs = spark.createDataFrame([], "id_a string, id_b string")
+    assert connected_components(pairs, stats=st).collect() == []
+    assert st["rounds"] == 1
+
+
+# Spark jobs one connected_components call on the 16-hop string-id chain
+# starts, collect included, counted with getJobIdsForGroup in this test's
+# session (local[8], AQE on): 26 or 27 over its 4 rounds with one eager
+# materialization per round that also reports convergence; 48 or 49 when
+# each round checkpointed the hop and the jump separately and ran a
+# join-based changed-count action on top.
+CC_JOB_BOUND = 27
+
+
+def test_connected_components_job_budget(spark):
+    from dataingestionplayground_spark.operators.graph import connected_components
+
+    chain = [(f"d{i:02d}", f"d{i + 1:02d}") for i in range(16)]
+    pairs = spark.createDataFrame(chain, "id_a string, id_b string").cache()
+    pairs.count()
+    sc = spark.sparkContext
+    group = "test-cc-jobs"
+    st = {}
+    sc.setJobGroup(group, group)
+    try:
+        rows = connected_components(pairs, stats=st).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        pairs.unpersist()
+    assert {r.id: r.component for r in rows} == _components_oracle(chain)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= CC_JOB_BOUND, (st["rounds"], n_jobs)
 
 
 def test_connected_components_raises_when_budget_exhausted(spark):
