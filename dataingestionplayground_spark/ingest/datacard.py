@@ -22,21 +22,17 @@ def build_datacard(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     """Summarize a (id, text[, source][, lang]) corpus: sizes, token
     totals, quality quartiles, per-source/per-lang distribution, and the
     exact-duplicate rate. One collect for the totals and quality
-    quartiles plus one per ``source``/``lang`` breakdown present, each
-    one map-side-combinable aggregation — the same cost class at any
-    corpus size. Every collect re-reads ``docs``, so pass a cached frame
-    when ``docs`` is costly to compute (the ``curate`` CLI does).
+    quartiles plus one grouping-sets collect for the ``source``/``lang``
+    breakdowns present, each one map-side-combinable aggregation — the
+    same cost class at any corpus size. Every collect re-reads ``docs``,
+    so pass a cached frame when ``docs`` is costly to compute (the
+    ``curate`` CLI does).
     """
     from dataingestionplayground_spark.queries.textq import quality_features, quality_score
 
-    has_source = "source" in docs.columns
-    has_lang = "lang" in docs.columns
-
+    dims = [d for d in ("source", "lang") if d in docs.columns]
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("text"),
-        *([F.col("source")] if has_source else []),
-        *([F.col("lang")] if has_lang else []),
+        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"), *dims
     )
     feats = base.select(
         "text", F.length("text").alias("n_chars"), *quality_features()
@@ -80,20 +76,19 @@ def build_datacard(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
         if totals["n_docs"]
         else 0.0,
     }
-    if has_source:
-        card["by_source"] = {
-            r["source"]: r["n"]
-            for r in base.groupBy("source")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
+    if dims:
+        # GROUPING SETS ((source), (lang)): every breakdown in one
+        # aggregate; grouping(d) = 0 marks the rows of d's set
+        rows = (
+            base.groupingSets([[d] for d in dims], *dims)
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n"),
+                *[F.grouping(d).alias(f"__g_{d}") for d in dims],
+            )
             .collect()
-        }
-    if has_lang:
-        card["by_lang"] = {
-            r["lang"]: r["n"]
-            for r in base.groupBy("lang")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .collect()
-        }
+        )
+        for d in dims:
+            card[f"by_{d}"] = {r[d]: r["n"] for r in rows if r[f"__g_{d}"] == 0}
     return card
 
 

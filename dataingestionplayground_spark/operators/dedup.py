@@ -13,6 +13,16 @@ Four families, all shuffle-conscious:
 * **n-gram Jaccard**: exact pairwise similarity via shingle-equi-join +
   group count — the verification stage after LSH candidate generation.
 
+:func:`banded_pairs` owns the band join for every banded near-dup pair
+set — MinHash (:func:`minhash_lsh_pairs`, :func:`minhash_lsh_pairs_between`)
+and the image, audio and video fingerprint pairs in ``queries.ingestq``.
+It emits each pair once, at its first colliding band, so no pair-level
+``distinct`` follows the join; callers verify on the carried columns.
+The streaming screens (``streaming.ingest.stream_lsh_screen`` and
+``stream_video_screen``) are the exception: their maintained tables
+store one row per band (long format), which lacks the other bands' keys
+the first-band rule compares.
+
 Hashing is *portable* (md5-based, no engine-specific hash) so every stage
 is reproducible in the DuckDB correctness oracle and across engine
 versions — a property Spark's ``hash()``/``xxhash64()`` does not give.
@@ -50,11 +60,10 @@ def _shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFram
     ``.distinct()`` here would shuffle the largest intermediate of the
     whole dedup pipeline for nothing.
 
-    r16 (optimization): the input fans out when the upstream scan has
-    fewer splits than cores (single-row-group files) — the tokenize +
-    shingle + md5-lane work above this frame is the most CPU-expensive
-    stage of the whole dedup family and was running near-single-threaded
-    locally (profiled: one 1.3 s task on local[32]). No-op at scale.
+    The input fans out when the upstream scan has fewer splits than
+    cores (single-row-group files): the tokenize + shingle + md5-lane
+    work above this frame is the most CPU-expensive stage of the dedup
+    family and would otherwise run in one task. No-op at scale.
     """
     from dataingestionplayground_spark.session import fan_out_small_scan
 
@@ -90,21 +99,103 @@ def _lane_expr_duck(i: int, col: str = "shingle") -> str:
     return "(" + " + ".join(terms) + ")"
 
 
+def _signatures_wide(
+    df: DataFrame, id_col: str, text_col: str, num_hashes: int, shingle_n: int
+) -> DataFrame:
+    """(id, mh0..mh{num_hashes-1}): one shuffle, ``num_hashes``
+    min-aggregates over the shingle rows (map-side partial min, no
+    hash-index explosion). Portable md5-lane hashing (:func:`_lane_expr`)."""
+    if num_hashes > 8:
+        raise ValueError("lane scheme provides 8 hashes; extend _lane_expr for more")
+    return _shingle_rows(df, id_col, text_col, shingle_n).groupBy(id_col).agg(
+        *[F.expr(f"min({_lane_expr(i)})").alias(f"mh{i}") for i in range(num_hashes)]
+    )
+
+
+def _band_keys(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    rows_per_band: int,
+    shingle_n: int,
+) -> DataFrame:
+    """(id, k0..k{n_bands-1}): band b's key is its ``rows_per_band``
+    lane mins joined by '|'. Banding is a projection of the wide
+    signature, so it adds no shuffle."""
+    sig = _signatures_wide(df, id_col, text_col, num_hashes, shingle_n)
+    return sig.select(
+        id_col,
+        *[
+            F.concat_ws("|", *[f"mh{b * rows_per_band + j}" for j in range(rows_per_band)])
+            .alias(f"k{b}")
+            for b in range(num_hashes // rows_per_band)
+        ],
+    )
+
+
+def banded_pairs(
+    df: DataFrame, id_col: str, keys: list[str], other: DataFrame | None = None
+) -> DataFrame:
+    """Candidate pairs of rows that share a key in at least one band.
+
+    ``df`` holds ``(id_col, *keys, carried...)``; band j of a row is
+    ``(j, keys[j])``. The rows are stacked into (band, key) rows and
+    equi-joined on them. Self form (``other`` is None): pairs within
+    ``df`` with ``id_a < id_b``. Asymmetric form: ``other`` has the same
+    columns and every (``df`` row, ``other`` row) pair qualifies, with
+    no id filter — the batch-vs-corpus screen of an incremental ingest.
+
+    Each pair is emitted once, at its first colliding band: the join row
+    of band j survives only if ``keys[i]`` differs on the two sides for
+    every i < j. The keys ride along on every band row, so the rule is a
+    flat compare per earlier band inside the join (codegen, no lambdas)
+    and no ``distinct`` over the pair mass is needed — the band-key join
+    is the only exchange over pairs. A null key never collides.
+
+    Returns ``id_a``, ``id_b`` and every other column ``c`` of ``df`` as
+    ``c_a``/``c_b``, so the caller can verify on the carried values.
+    In the self form both join sides are the same subplan under two
+    aliases, so Spark's ReuseExchange computes it once. The join is
+    skew-safe because identical band keys mean near-identical rows (AQE
+    skew-join splits the rare hot bucket).
+    """
+    stacked = ", ".join(f"{j}, `{k}`" for j, k in enumerate(keys))
+
+    def band_rows(frame: DataFrame) -> DataFrame:
+        return frame.select(
+            "*", F.expr(f"stack({len(keys)}, {stacked}) as (__band, __key)")
+        )
+
+    rows = band_rows(df)
+    a = rows.alias("a")
+    b = (rows if other is None else band_rows(other)).alias("b")
+    cond = (F.col("a.__band") == F.col("b.__band")) & (F.col("a.__key") == F.col("b.__key"))
+    if other is None:
+        cond &= F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    for i, k in enumerate(keys[:-1]):
+        # a row of a band after i survives only if key i did not collide
+        # (a null key never does)
+        cond &= (F.col("a.__band") <= i) | F.coalesce(
+            F.col(f"a.`{k}`") != F.col(f"b.`{k}`"), F.lit(True)
+        )
+    carried = [c for c in df.columns if c != id_col]
+    return a.join(b, cond).select(
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"),
+        *[F.col(f"{s}.`{c}`").alias(f"{c}_{s}") for c in carried for s in "ab"],
+    )
+
+
 def minhash_signatures(
     df: DataFrame, id_col: str, text_col: str, num_hashes: int = 8, shingle_n: int = 3
 ) -> DataFrame:
     """MinHash signature rows (id, h, minhash).
 
-    One shuffle: ``num_hashes`` min-aggregates over the shingle rows
-    (map-side partial min, no hash-index explosion), then an unpivot of
-    the tiny per-doc result. Portable md5-lane hashing (:func:`_lane_expr`).
+    One shuffle (:func:`_signatures_wide`), then an unpivot of the tiny
+    per-doc result.
     """
-    if num_hashes > 8:
-        raise ValueError("lane scheme provides 8 hashes; extend _lane_expr for more")
-    shingles = _shingle_rows(df, id_col, text_col, shingle_n)
-    sig_wide = shingles.groupBy(id_col).agg(
-        *[F.expr(f"min({_lane_expr(i)})").alias(f"mh{i}") for i in range(num_hashes)]
-    )
+    sig_wide = _signatures_wide(df, id_col, text_col, num_hashes, shingle_n)
     stack = ", ".join(f"{i}, mh{i}" for i in range(num_hashes))
     return sig_wide.select(
         id_col, F.expr(f"stack({num_hashes}, {stack}) as (h, minhash)")
@@ -119,46 +210,14 @@ def minhash_lsh_pairs(
     rows_per_band: int = 2,
     shingle_n: int = 3,
 ) -> DataFrame:
-    """Candidate near-duplicate pairs via banded MinHash-LSH.
+    """Candidate near-duplicate pairs (id_a < id_b) via banded MinHash-LSH.
 
-    Signature -> bands of ``rows_per_band`` hashes -> band-key equi-join.
-    The only shuffle over pairs is on (band, band_key) — skew-safe because
-    identical band keys mean near-identical docs (AQE skew-join splits the
-    rare hot bucket).
+    Wide signature (one shuffle) -> bands of ``rows_per_band`` lanes ->
+    :func:`banded_pairs` self-join, each pair once at its first
+    colliding band. The only shuffle over pairs is on (band, band_key).
     """
-    if num_hashes > 8:
-        raise ValueError("lane scheme provides 8 hashes; extend _lane_expr for more")
-    # wide signature (one shuffle), bands assembled as concat of lane mins —
-    # no second shuffle for banding. Both self-join sides shuffle the same
-    # band subplan on the same keys, so Spark's ReuseExchange computes the
-    # scan->shingle->agg lineage ONCE and replays the shuffle files for the
-    # other side (verified in the executed plan: one ReusedExchange) — no
-    # persist needed, so no cached-block leak across calls (at warehouse
-    # scale you'd still materialize signatures as their own table).
-    shingles = _shingle_rows(df, id_col, text_col, shingle_n)
-    sig_wide = shingles.groupBy(id_col).agg(
-        *[F.expr(f"min({_lane_expr(i)})").alias(f"mh{i}") for i in range(num_hashes)]
-    )
-    n_bands = num_hashes // rows_per_band
-    band_rows = []
-    for b in range(n_bands):
-        lanes = [f"mh{b * rows_per_band + j}" for j in range(rows_per_band)]
-        band_rows.append(f"{b}, concat_ws('|', {', '.join(lanes)})")
-    bands = sig_wide.select(
-        id_col, F.expr(f"stack({n_bands}, {', '.join(band_rows)}) as (band, band_key)")
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
+    keys = _band_keys(df, id_col, text_col, num_hashes, rows_per_band, shingle_n)
+    return banded_pairs(keys, id_col, keys.columns[1:]).select("id_a", "id_b")
 
 
 def _bit_expr(b: int, substring_fn: str = "substring") -> str:
@@ -348,19 +407,11 @@ def minhash_bands(
     corpora banded with the same parameters are screenable against
     each other by a plain equi-join on (band, band_key), no access to
     the original text required."""
-    if num_hashes > 8:
-        raise ValueError("lane scheme provides 8 hashes; extend _lane_expr for more")
-    n_bands = num_hashes // rows_per_band
-    band_rows = []
-    for b in range(n_bands):
-        lanes = [f"mh{b * rows_per_band + j}" for j in range(rows_per_band)]
-        band_rows.append(f"{b}, concat_ws('|', {', '.join(lanes)})")
-    sig_wide = _shingle_rows(df, id_col, text_col, shingle_n).groupBy(id_col).agg(
-        *[F.expr(f"min({_lane_expr(i)})").alias(f"mh{i}") for i in range(num_hashes)]
-    )
-    return sig_wide.select(
+    keys = _band_keys(df, id_col, text_col, num_hashes, rows_per_band, shingle_n)
+    stacked = ", ".join(f"{b}, {k}" for b, k in enumerate(keys.columns[1:]))
+    return keys.select(
         id_col,
-        F.expr(f"stack({n_bands}, {', '.join(band_rows)}) as (band, band_key)"),
+        F.expr(f"stack({len(keys.columns) - 1}, {stacked}) as (band, band_key)"),
     )
 
 
@@ -384,27 +435,15 @@ def minhash_lsh_pairs_between(
     key (at warehouse scale its signatures live as a maintained table,
     the inverted-index pattern, so only the batch side is computed
     per run — :func:`minhash_bands` +
-    ``streaming.ingest.stream_lsh_screen``). Identical band keys mean
-    near-identical docs, so the equi-join stays skew-safe under AQE
-    like the self-join form.
+    ``streaming.ingest.stream_lsh_screen``). The asymmetric form of
+    :func:`banded_pairs`: each (new, old) pair once, at its first
+    colliding band.
     """
 
-    def bands_of(df):
-        return minhash_bands(
-            df, id_col, text_col, num_hashes, rows_per_band, shingle_n
-        )
-
-    nb = bands_of(new_df).alias("n")
-    ob = bands_of(old_df).alias("o")
-    return (
-        nb.join(
-            ob,
-            (F.col("n.band") == F.col("o.band"))
-            & (F.col("n.band_key") == F.col("o.band_key")),
-        )
-        .select(
-            F.col(f"n.{id_col}").alias("new_id"),
-            F.col(f"o.{id_col}").alias("old_id"),
-        )
-        .distinct()
+    new_keys, old_keys = (
+        _band_keys(d, id_col, text_col, num_hashes, rows_per_band, shingle_n)
+        for d in (new_df, old_df)
+    )
+    return banded_pairs(new_keys, id_col, new_keys.columns[1:], old_keys).select(
+        F.col("id_a").alias("new_id"), F.col("id_b").alias("old_id")
     )

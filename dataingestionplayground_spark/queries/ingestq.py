@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from dataingestionplayground_spark.operators.dedup import banded_pairs
 from dataingestionplayground_spark.queries import register
 from dataingestionplayground_spark.session import fan_out_small_scan
 from dataingestionplayground_spark.session import load_table as t
@@ -363,79 +364,44 @@ def _image_fp_frame(spark, sf):
     return d.mapInPandas(build_and_hash, "doc_id long, w_lo long, w_hi long")
 
 
-def _bands4(fp):
-    """Explode a (doc_id, w_lo, w_hi) fingerprint frame into the
-    4 x 16-bit LSH band table (doc_id, band_idx, band_lo, band_hi,
-    w_lo, w_hi) — band_hi is 0 here; the 2-column band key exists so
-    the video modality (whose band key is a whole 64-bit keyframe
-    hash) shares the dedup card's group machinery."""
+_FP_KEYS = ["k0", "k1", "k2", "k3"]
+
+
+def _fp_keys(fp):
+    """(doc_id, w_lo, w_hi, k0..k3): a 64-bit (w_lo, w_hi) fingerprint
+    with its four 16-bit slices — the fingerprint's LSH band keys."""
     return fp.select(
         "doc_id",
         "w_lo",
         "w_hi",
-        F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("band_idx"), (F.col("w_lo") % 65536).alias("band_lo")),
-                F.struct(F.lit(1).alias("band_idx"), F.expr("w_lo div 65536").alias("band_lo")),
-                F.struct(F.lit(2).alias("band_idx"), (F.col("w_hi") % 65536).alias("band_lo")),
-                F.struct(F.lit(3).alias("band_idx"), F.expr("w_hi div 65536").alias("band_lo")),
-            )
-        ).alias("b"),
-    ).select(
+        (F.col("w_lo") % 65536).alias("k0"),
+        F.expr("w_lo div 65536").alias("k1"),
+        (F.col("w_hi") % 65536).alias("k2"),
+        F.expr("w_hi div 65536").alias("k3"),
+    )
+
+
+def _bands4(fp):
+    """The 4 x 16-bit LSH band table (doc_id, band_idx, band_lo,
+    band_hi, w_lo, w_hi) of a (doc_id, w_lo, w_hi) fingerprint frame,
+    one row per band — band_hi is 0 here; the 2-column band key exists
+    so the video modality (whose band key is a whole 64-bit keyframe
+    hash) shares the dedup card's group machinery."""
+    return _fp_keys(fp).select(
         "doc_id",
-        "b.band_idx",
-        "b.band_lo",
+        F.expr("stack(4, 0, k0, 1, k1, 2, k2, 3, k3) as (band_idx, band_lo)"),
         F.lit(0).cast("long").alias("band_hi"),
         "w_lo",
         "w_hi",
     )
 
 
-def _banded_fp_pairs(bands, bound: int):
-    """The shared banded near-dup pair join: equi-join on the band key,
-    id_a < id_b, full-fingerprint Hamming verify at ``bound``.
-
-    r17: each colliding pair is emitted at its SMALLEST colliding band
-    only — the video pipeline's first-matching-slot rule. All 4 x 16-bit
-    band values are pure projections of the carried (w_lo, w_hi), so
-    "no earlier band also collided" is flat codegen-able arithmetic, and
-    the former ``.distinct()`` — an Exchange carrying the FULL
-    multi-band pair mass (near-identical fingerprints collide in all 4
-    bands, so ~4x the quadratic-in-group-size pair count) — is gone:
-    the only Exchange left in the pair stage is the band-key join's
-    own. Candidates are bucket collisions only — never all-pairs."""
-    a = bands.select(
-        F.col("doc_id").alias("id_a"), F.col("w_lo").alias("lo_a"),
-        F.col("w_hi").alias("hi_a"), "band_idx", "band_lo", "band_hi",
-    )
-    b = bands.select(
-        F.col("doc_id").alias("id_b"), F.col("w_lo").alias("lo_b"),
-        F.col("w_hi").alias("hi_b"), "band_idx", "band_lo", "band_hi",
-    )
-    # band k values of both sides, recomputed in-row from the carried
-    # fingerprints (must mirror _bands4's band_lo exactly)
-    bnd = lambda col, k: [
-        F.col(col) % 65536,
-        F.expr(f"{col} div 65536"),
-        F.col(col.replace("lo", "hi")) % 65536,
-        F.expr(f"{col.replace('lo', 'hi')} div 65536"),
-    ][k]
-    differs = lambda k: bnd("lo_a", k) != bnd("lo_b", k)
-    first_band = (
-        (F.col("band_idx") == 0)
-        | ((F.col("band_idx") == 1) & differs(0))
-        | ((F.col("band_idx") == 2) & differs(0) & differs(1))
-        | ((F.col("band_idx") == 3) & differs(0) & differs(1) & differs(2))
-    )
-    cand = (
-        a.join(b, ["band_idx", "band_lo", "band_hi"])
-        .filter((F.col("id_a") < F.col("id_b")) & first_band)
-        .select("id_a", "id_b", "lo_a", "hi_a", "lo_b", "hi_b")
-    )
-    ham = F.expr(
-        "cast(bit_count(lo_a ^ lo_b) + bit_count(hi_a ^ hi_b) as bigint)"
-    )
-    return cand.select("id_a", "id_b", ham.alias("hamming")).filter(
+def _hamming_pairs(pairs, words: list[str], bound: int):
+    """(id_a, id_b, hamming) of ``banded_pairs`` output whose Hamming
+    distance — popcount(x_a XOR x_b) summed over the carried int64
+    ``words`` — is at most ``bound``."""
+    ham = sum(F.bit_count(F.col(f"{w}_a").bitwiseXOR(F.col(f"{w}_b"))) for w in words)
+    return pairs.select("id_a", "id_b", ham.cast("long").alias("hamming")).filter(
         F.col("hamming") <= bound
     )
 
@@ -451,7 +417,8 @@ def multimodal_ahash_pairs(spark, sf):
     # per doc), so the pair set is non-trivial in both directions.
     # Scale: ONE Arrow pass builds+decodes+hashes, banding bounds the
     # join to bucket collisions — never all-pairs.
-    return _banded_fp_pairs(_bands4(_image_fp_frame(spark, sf)), bound=6)
+    pairs = banded_pairs(_fp_keys(_image_fp_frame(spark, sf)), "doc_id", _FP_KEYS)
+    return _hamming_pairs(pairs, ["w_lo", "w_hi"], bound=6)
 
 
 def _dct_basis() -> list:
@@ -945,14 +912,14 @@ def _audio_fp_frame(spark, sf):
 
 @register("multimodal_audio_fp_pairs", oracle=_audio_fp_oracle())
 def multimodal_audio_fp_pairs(spark, sf):
-    # AUDIO near-duplicate detection end to end (r14 verdict item 3) —
-    # the audio twin of multimodal_ahash_pairs: chromaprint-style
-    # 64-bit fingerprints over REAL PCM16 bytes (_audio_fp_frame),
-    # banded into 4 x 16-bit keys, paired by equi-join with a
-    # Hamming<=6 verify. Scale: ONE Arrow pass builds+decodes+
+    # AUDIO near-duplicate detection end to end — the audio twin of
+    # multimodal_ahash_pairs: chromaprint-style 64-bit fingerprints
+    # over REAL PCM16 bytes (_audio_fp_frame), banded into 4 x 16-bit
+    # keys, paired by equi-join with a Hamming<=6 verify. Scale: ONE Arrow pass builds+decodes+
     # fingerprints, banding bounds the join to bucket collisions —
     # never all-pairs.
-    return _banded_fp_pairs(_bands4(_audio_fp_frame(spark, sf)), bound=6)
+    pairs = banded_pairs(_fp_keys(_audio_fp_frame(spark, sf)), "doc_id", _FP_KEYS)
+    return _hamming_pairs(pairs, ["w_lo", "w_hi"], bound=6)
 
 
 # --- video corpus constants (shared literals in BOTH engines' closed
@@ -964,6 +931,7 @@ _V_CUT = 10  # ahash-delta > _V_CUT starts a new shot (a "cut")
 # canonical bound lives in sources/multimodal.py (importable standalone,
 # so the streaming screen's verify leg shares the literal)
 _V_PAIR_T = _mm_const.VIDEO_PAIR_HAMMING_T  # = 12
+_V_WORDS = ["w0", "w1", "w2", "w3"]  # packed keyframe hashes, one per scene slot
 
 
 def _video_frame_hashes(spark, sf, keyframes_only: bool = False, packed: bool = False):
@@ -1194,85 +1162,12 @@ def multimodal_video_fp_pairs(spark, sf):
     # keeps pairs within _V_PAIR_T bits. Same shape a PB-scale video
     # dedup uses: the inverted index bounds candidates to exact-hash
     # collisions, the verify re-scores only those. Scale: ONE shuffle
-    # total — each band row carries its clip's packed 4-hash arrays,
-    # so Hamming is an aggregate over the carried arrays (no verify
-    # re-join), and the first-matching-slot rule (only the SMALLEST
-    # colliding slot emits the pair) replaces the distinct shuffle an
-    # earlier draft needed (41.8 s -> single-exchange plan at sf1.0).
-    return _video_band_pairs(spark, sf).select(
-        "id_a", "id_b", "hamming"
-    )
-
-
-def _video_band_pairs(spark, sf, split_mod: int | None = None):
-    """The single-shuffle keyframe-fingerprint join both video pair
-    queries share: packed per-clip hash arrays explode to band rows
-    carrying the full fingerprint; equal (slot, hash) rows join; the
-    first-matching-slot filter emits each pair exactly once; aligned
-    Hamming comes from the carried arrays. split_mod=None is the
-    symmetric self-join (id_a < id_b); an integer splits batch
-    (doc_id % split_mod == 0) vs corpus for the incremental screen."""
+    # total — the four packed keyframe hashes are banded_pairs' band
+    # keys and ride along on every band row, so Hamming is four
+    # POPCNTs over the carried hashes (no verify re-join), and each
+    # pair is emitted once, at its first colliding slot (no distinct).
     fps = _video_frame_hashes(spark, sf, packed=True)
-    ws = ["w0", "w1", "w2", "w3"]
-    bands = fps.select(
-        "doc_id",
-        *ws,
-        F.explode(
-            F.array(
-                *(
-                    F.struct(
-                        F.lit(i).alias("slot"), F.col(w).alias("w")
-                    )
-                    for i, w in enumerate(ws)
-                )
-            )
-        ).alias("b"),
-    ).select("doc_id", *ws, "b.slot", "b.w")
-    a = bands.select(
-        F.col("doc_id").alias("id_a"),
-        *(F.col(w).alias(f"{w}a") for w in ws),
-        "slot",
-        "w",
-    )
-    b = bands.select(
-        F.col("doc_id").alias("id_b"),
-        *(F.col(w).alias(f"{w}b") for w in ws),
-        "slot",
-        "w",
-    )
-    if split_mod is None:
-        j = a.join(b, ["slot", "w"]).filter(F.col("id_a") < F.col("id_b"))
-    else:
-        j = a.filter(F.col("id_a") % split_mod == 0).join(
-            b.filter(F.col("id_b") % split_mod != 0), ["slot", "w"]
-        )
-    # emit each pair at its SMALLEST colliding slot only — a flat
-    # codegen-able boolean per slot (no array lambdas: higher-order
-    # functions are interpreted per row, which dominated an earlier
-    # draft on the ~quadratic in-group join output)
-    first_slot = (
-        (F.col("slot") == 0)
-        | ((F.col("slot") == 1) & (F.col("w0a") != F.col("w0b")))
-        | (
-            (F.col("slot") == 2)
-            & (F.col("w0a") != F.col("w0b"))
-            & (F.col("w1a") != F.col("w1b"))
-        )
-        | (
-            (F.col("slot") == 3)
-            & (F.col("w0a") != F.col("w0b"))
-            & (F.col("w1a") != F.col("w1b"))
-            & (F.col("w2a") != F.col("w2b"))
-        )
-    )
-    ham = sum(
-        F.bit_count(F.col(f"{w}a").bitwiseXOR(F.col(f"{w}b"))) for w in ws
-    )
-    return (
-        j.filter(first_slot)
-        .select("id_a", "id_b", ham.cast("long").alias("hamming"))
-        .filter(F.col("hamming") <= _V_PAIR_T)
-    )
+    return _hamming_pairs(banded_pairs(fps, "doc_id", _V_WORDS), _V_WORDS, _V_PAIR_T)
 
 
 _V_DROP = _mm_const.VIDEO_DROP_T  # = 4: auto-drop bound (report bound = _V_PAIR_T)
@@ -1318,11 +1213,14 @@ def multimodal_video_fp_incremental(spark, sf):
     # keyframe Hamming (<= _V_PAIR_T reported, <= _V_DROP flagged for
     # auto-drop). Scale: the batch-side band table is O(batch); the
     # corpus side is a maintained signature table at warehouse scale
-    # (zero per-run corpus decode); the shared single-shuffle band join
+    # (zero per-run corpus decode); banded_pairs' batch-vs-corpus form
     # carries both fingerprints, so there is no verify re-join and no
-    # distinct (first-matching-slot rule) — the same plan as the
+    # distinct (first-colliding-slot rule) — the same plan as the
     # self-join pairs, just asymmetric.
-    return _video_band_pairs(spark, sf, split_mod=7).select(
+    fps = _video_frame_hashes(spark, sf, packed=True)
+    batch = F.col("doc_id") % 7 == 0
+    pairs = banded_pairs(fps.filter(batch), "doc_id", _V_WORDS, fps.filter(~batch))
+    return _hamming_pairs(pairs, _V_WORDS, _V_PAIR_T).select(
         F.col("id_a").alias("new_id"),
         F.col("id_b").alias("old_id"),
         "hamming",

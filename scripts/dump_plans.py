@@ -23,7 +23,7 @@ SHOW = [
     ("join_multiway", "6-way join: broadcast dims, AQE-planned fact joins"),
     ("sort_limit_topk", "TakeOrderedAndProject — top-k without a global sort"),
     ("events_asof_join", "as-of join: union + single sort-shuffle window"),
-    ("dedup_minhash_lsh_pairs", "minhash: small-scan fan-out (r16) under HashAggregate lane-mins, band self-join"),
+    ("dedup_minhash_lsh_pairs", "minhash: small-scan fan-out under HashAggregate lane-mins, band self-join emitting each pair at its first colliding band (no pair-level HashAggregate)"),
     ("vector_knn_bruteforce", "two-phase top-k: partial per-partition heap below the final window exchange"),
     ("vector_ivf_ann", "IVF: broadcast centroid assignment, bucket equi-join, rerank"),
     ("text_fingerprint", "min rolling-hash inside the projection — no explode, no shuffle"),

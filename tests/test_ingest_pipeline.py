@@ -586,3 +586,47 @@ def test_datacard_quartiles_one_aggregate(spark):
     assert np.allclose(list(want.asDict().values()), np_q, atol=1e-6)
     docs.unpersist()
     assert 0 < n_jobs <= DATACARD_JOB_BOUND, n_jobs
+
+
+# build_datacard on a cached (doc_id, text, source, lang) frame of the
+# sf0.001 documents, same session: 5 jobs with both breakdowns in one
+# grouping-sets aggregate, 7 when each breakdown took its own collect.
+DATACARD_BREAKDOWN_JOB_BOUND = 5
+
+
+def test_datacard_breakdowns_one_aggregate(spark, sf_dir):
+    from dataingestionplayground_spark.ingest.datacard import build_datacard
+
+    docs = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .select("doc_id", "text", "source", "lang")
+        .cache()
+    )
+    docs.count()
+    sc = spark.sparkContext
+    group = "test-datacard-breakdown-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        card = build_datacard(docs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    only_source = build_datacard(docs.drop("lang"))
+    only_lang = build_datacard(docs.drop("source"))
+    docs.unpersist()
+
+    # the card of this frame as computed with one group-by collect per
+    # breakdown
+    want = {
+        "n_docs": 500,
+        "total_tokens": 27939,
+        "tokens": {"min": 10, "median": 56.0, "max": 99},
+        "quality_quartiles": {"q25": 0.415575, "q50": 0.534039, "q75": 0.620659},
+        "exact_duplicate_rate": 0.0,
+        "by_source": {f"src{i}": 25 for i in range(20)},
+        "by_lang": {"de": 71, "en": 193, "es": 80, "fr": 82, "zh": 74},
+    }
+    assert card == want
+    assert only_source == {k: v for k, v in want.items() if k != "by_lang"}
+    assert only_lang == {k: v for k, v in want.items() if k != "by_source"}
+    assert 0 < n_jobs <= DATACARD_BREAKDOWN_JOB_BOUND, n_jobs

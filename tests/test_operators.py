@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from dataingestionplayground_spark.operators import (
@@ -18,6 +19,12 @@ from dataingestionplayground_spark.operators import (
     range_join,
     sessionize,
     simhash,
+)
+from dataingestionplayground_spark.operators.dedup import (
+    banded_pairs,
+    minhash_bands,
+    minhash_lsh_pairs_between,
+    minhash_signatures,
 )
 
 
@@ -107,6 +114,142 @@ def test_minhash_finds_near_dups(spark):
     pairs = {(r.id_a, r.id_b) for r in minhash_lsh_pairs(df, "id", "txt").collect()}
     assert (1, 2) in pairs
     assert (1, 3) not in pairs and (2, 3) not in pairs
+
+
+def _pair_oracle(left, right=None):
+    """Brute-force banded pairs over (id, k_0, ..., k_{n-1}) tuples: every
+    pair sharing a non-null key in the same band, each exactly once;
+    id_a < id_b when ``right`` is None (self form)."""
+    self_form = right is None
+    right = left if self_form else right
+    return sorted(
+        (a[0], b[0])
+        for a in left
+        for b in right
+        if (not self_form or a[0] < b[0])
+        and any(x is not None and x == y for x, y in zip(a[1:], b[1:]))
+    )
+
+
+def _id_pairs(df):
+    # a sorted list, not a set: a pair emitted twice must show
+    return sorted((r.id_a, r.id_b) for r in df.collect())
+
+
+_BAND_DDL = "id long, k0 string, k1 string, k2 string, v long"
+
+
+def test_banded_pairs_first_band_with_null_keys(spark):
+    rows = [
+        (1, "a", "p", "x", 100),
+        (2, "a", "q", "x", 200),  # with 1 in bands 0 and 2
+        (3, "b", "p", None, 300),  # with 1 in band 1
+        (4, None, "p", "x", 400),  # with 1 and 3 in band 1 (k0 null), 2 in band 2
+        (5, None, None, None, 500),  # null keys never collide
+        (6, "c", "r", "y", 600),
+    ]
+    out = banded_pairs(spark.createDataFrame(rows, _BAND_DDL), "id", ["k0", "k1", "k2"])
+    assert out.columns == [
+        "id_a", "id_b", "k0_a", "k0_b", "k1_a", "k1_b", "k2_a", "k2_b", "v_a", "v_b"
+    ]
+    got = out.collect()
+    assert sorted((r.id_a, r.id_b) for r in got) == _pair_oracle(
+        [r[:4] for r in rows]
+    )
+    assert all(r.v_a == 100 * r.id_a and r.v_b == 100 * r.id_b for r in got)
+
+
+def test_banded_pairs_empty_frame(spark):
+    empty = spark.createDataFrame([], _BAND_DDL)
+    assert _id_pairs(banded_pairs(empty, "id", ["k0", "k1", "k2"])) == []
+    assert _id_pairs(banded_pairs(empty, "id", ["k0", "k1", "k2"], empty)) == []
+
+
+def test_banded_pairs_hot_key_emits_each_pair_once(spark):
+    # every row collides with every other in every band
+    rows = [(i, "h", "h", "h", i) for i in range(12)]
+    got = _id_pairs(banded_pairs(spark.createDataFrame(rows, _BAND_DDL), "id", ["k0", "k1", "k2"]))
+    assert got == _pair_oracle([r[:4] for r in rows])
+    assert len(got) == 12 * 11 // 2
+
+
+def test_banded_pairs_asymmetric_matches_bruteforce(spark):
+    left = [(1, "a", "p", "x", 1), (7, "b", "q", "y", 7), (8, "h", "h", "h", 8)]
+    # id 1 on both sides with the same keys; 2 < 7 must still pair (no id filter)
+    right = [(1, "a", "p", "x", 1), (2, "z", "q", "y", 2), (9, "h", "h", "h", 9)]
+    got = _id_pairs(
+        banded_pairs(
+            spark.createDataFrame(left, _BAND_DDL),
+            "id",
+            ["k0", "k1", "k2"],
+            spark.createDataFrame(right, _BAND_DDL),
+        )
+    )
+    assert got == _pair_oracle([r[:4] for r in left], [r[:4] for r in right])
+    assert got == [(1, 1), (7, 2), (8, 9)]
+
+
+def test_banded_pairs_random_keys_match_bruteforce(spark):
+    import random
+
+    rng = random.Random(7)
+    key = lambda: rng.choice(["a", "b", "c", "d", None])
+    rows = [(i, key(), key(), key(), i) for i in range(40)]
+    left, right = rows[:15], rows[10:]
+    df = lambda rs: spark.createDataFrame(rs, _BAND_DDL)
+    keys = ["k0", "k1", "k2"]
+    assert _id_pairs(banded_pairs(df(rows), "id", keys)) == _pair_oracle(
+        [r[:4] for r in rows]
+    )
+    assert _id_pairs(banded_pairs(df(left), "id", keys, df(right))) == _pair_oracle(
+        [r[:4] for r in left], [r[:4] for r in right]
+    )
+
+
+def test_minhash_lsh_pairs_match_signature_band_oracle(spark):
+    base = "the quick brown fox jumps over the lazy dog again and again today"
+    docs = [
+        (1, base),
+        (2, base),  # identical: collides in every band
+        (3, base),
+        (4, base.replace("today", "tomorrow")),
+        (5, None),  # no shingles, no signature, no pair
+        (6, "completely different words in this unrelated document about spark"),
+        (7, "completely different words in this unrelated document about flink"),
+    ]
+    df = spark.createDataFrame(docs, "id long, txt string")
+    sig = {}
+    for r in minhash_signatures(df, "id", "txt").collect():
+        sig.setdefault(r.id, [None] * 8)[r.h] = r.minhash
+    bands = [
+        (i, *(f"{mh[2 * b]}|{mh[2 * b + 1]}" for b in range(4)))
+        for i, mh in sorted(sig.items())
+    ]
+    assert 5 not in sig
+    want = _pair_oracle(bands)
+    assert {(1, 2), (1, 3), (2, 3)} <= set(want)
+    assert _id_pairs(minhash_lsh_pairs(df, "id", "txt")) == want
+
+    new = df.filter("id IN (1, 4, 5, 6)")
+    old = df.filter("id IN (1, 2, 5, 7)")  # id 1 on both sides
+    got = sorted(
+        (r.new_id, r.old_id)
+        for r in minhash_lsh_pairs_between(new, old, "id", "txt").collect()
+    )
+    by_id = {b[0]: b for b in bands}
+    assert got == _pair_oracle(
+        [by_id[i] for i in (1, 4, 6)], [by_id[i] for i in (1, 2, 7)]
+    )
+    assert (1, 1) in got
+
+
+def test_minhash_rejects_more_than_eight_hashes(spark):
+    df = spark.createDataFrame([(1, "a b c d")], "id long, txt string")
+    for fn in (minhash_lsh_pairs, minhash_signatures, minhash_bands):
+        with pytest.raises(ValueError):
+            fn(df, "id", "txt", num_hashes=9)
+    with pytest.raises(ValueError):
+        minhash_lsh_pairs_between(df, df, "id", "txt", num_hashes=9)
 
 
 def test_simhash_hamming_close_for_near_dups(spark):

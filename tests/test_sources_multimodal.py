@@ -374,14 +374,14 @@ def test_video_pair_join_packed_matches_naive_reference(spark):
     from dataingestionplayground_spark.queries.ingestq import (
         _V_PAIR_T,
         _V_SCENE,
-        _video_band_pairs,
         _video_frame_hashes,
+        multimodal_video_fp_pairs,
     )
 
     sf = "/root/testdata/sf0.001"
     fast = {
         (r["id_a"], r["id_b"], r["hamming"])
-        for r in _video_band_pairs(spark, sf).collect()
+        for r in multimodal_video_fp_pairs(spark, sf).collect()
     }
 
     fps = _video_frame_hashes(spark, sf, keyframes_only=True).select(
