@@ -442,13 +442,14 @@ def cmd_list(args, cfg) -> int:
 
 def cmd_index(args, cfg) -> int:
     """Vector-index lifecycle for a collection (the operational surface
-    of the maintained indexes, r14), --kind ivf|pq: build (retrain),
+    of the maintained indexes), --kind ivf|pq|ivfpq: build (retrain),
     refresh (reconcile with the store: anti-join appends + orphan
     drops), merge (epoch-staged increment of a chunk-batch parquet),
-    signal (IVF occupancy-skew retrain gate), compact (fold committed
-    epoch stages into the base artifact)."""
+    signal (occupancy-skew retrain gate of a cell-partitioned index),
+    compact (fold committed epoch stages into the base artifact)."""
     from dataingestionplayground_spark.ingest import CollectionStore
     from dataingestionplayground_spark.ingest.ann_index import (
+        _embedding_dims,
         build_ivf_index,
         build_ivfpq_index,
         build_pq_index,
@@ -474,13 +475,11 @@ def cmd_index(args, cfg) -> int:
     kind = args.kind
     if args.action == "build":
         if kind == "pq":
-            first = store.read(spark, collection).select("embedding").first()
-            dims = len(first["embedding"]) if first else 384
+            dims = _embedding_dims(spark, store, collection)
             meta = build_pq_index(spark, store, collection, dims=dims)
             print(f"built PQ index: {meta['m']}x{meta['n_centroids']} codebook")
         elif kind == "ivfpq":
-            first = store.read(spark, collection).select("embedding").first()
-            dims = len(first["embedding"]) if first else 384
+            dims = _embedding_dims(spark, store, collection)
             meta = build_ivfpq_index(
                 spark, store, collection, n_cells=args.cells, dims=dims,
                 assign_top=args.assign_top,
@@ -505,9 +504,9 @@ def cmd_index(args, cfg) -> int:
             print("error: merge requires --batch <parquet of chunk rows>", file=sys.stderr)
             return 2
         if args.epoch is None:
-            # r15 ADVICE: a constant default epoch made two successive
-            # merges look like a retry of the same epoch — the second
-            # silently replaced the first's staged rows
+            # no default epoch: with a constant one, two successive
+            # merges would look like a retry of the same epoch and the
+            # second would silently replace the first's staged rows
             print(
                 "error: merge requires --epoch <id> (each batch its own "
                 "monotonically increasing epoch; a repeated epoch is "
@@ -526,9 +525,9 @@ def cmd_index(args, cfg) -> int:
             n = merge_ivf_assignments(spark, store, collection, batch, args.epoch)
             print(f"merged epoch {args.epoch}: {n} cell partitions touched")
     elif args.action == "signal":
-        # r15 ADVICE: dispatch per kind — signal used to always read the
-        # IVF metadata, failing confusingly (or reporting the wrong
-        # index's skew) for --kind pq/ivfpq
+        # each cell-partitioned kind reads its own meta and table; PQ has
+        # no cells, so it is rejected rather than answered from another
+        # index's meta
         if kind == "ivf":
             s = ivf_retrain_signal(spark, store, collection, args.threshold)
         elif kind == "ivfpq":

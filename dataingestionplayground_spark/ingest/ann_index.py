@@ -1,23 +1,34 @@
-"""Store-backed, incrementally-maintained PQ index (round-2 verdict
-item 5): instead of re-deriving codebooks and re-encoding the whole
-corpus on every search call, the product-quantization codes become a
-COLLECTION-SIDE ARTIFACT — built once, appended incrementally as
-documents ingest (the same anti-join-on-key pattern the chunk sink
-uses), and read directly by search.
+"""Store-backed, incrementally-maintained vector indexes: instead of
+re-deriving quantizers and re-encoding the whole corpus on every search
+call, an index is a COLLECTION-SIDE ARTIFACT — built once, maintained
+incrementally as documents ingest (the same anti-join-on-key pattern
+the chunk sink uses), and read directly by search.
 
 Layout, under the collection store's base path (underscore-prefixed so
 collection listings skip it, mirroring Spark's ``_``-file convention)::
 
-    <base>/_indexes/<collection>/pq/codes/   parquet: key, documentid, code_0..m-1
-    <base>/_indexes/<collection>/pq/pq.json  params + the frozen codebook
+    <base>/_indexes/<collection>/pq/codes/          parquet: key, documentid, code_0..m-1
+    <base>/_indexes/<collection>/pq/codes_epochs/   merge staging, partitioned by epoch_id
+    <base>/_indexes/<collection>/pq/pq.json         params + the frozen codebook
+    <base>/_indexes/<collection>/ivf/cells/         assignments, partitioned by cell
+    <base>/_indexes/<collection>/ivf/ivf.json       params + the frozen centroids
+    <base>/_indexes/<collection>/ivfpq/codes/       residual codes, partitioned by cell
+    <base>/_indexes/<collection>/ivfpq/ivfpq.json   params + both frozen quantizers
 
-The codebook is FROZEN at build time and stored in ``pq.json``:
-incremental refresh encodes new vectors against the original centroids
-(codes from different codebooks are incomparable — this is how every
-production PQ index behaves; rebuild when drift warrants it). At scale
-the refresh cost is O(new chunks), the search scan reads ``m`` int
-codes per chunk instead of the float vectors, and deletions rewrite
-only the codes table.
+Quantizers are FROZEN at build time and stored in the meta: maintenance
+encodes new vectors against the original centroids (codes from
+different codebooks are incomparable — this is how every production
+index behaves; rebuild when drift warrants it). At scale the refresh
+cost is O(new chunks), and deletions rewrite only the index table.
+
+The IVF assignment table and the IVFPQ code table share one stored
+format — rows partitioned by ``cell``, merges staged as epoch-tagged
+rows inside the touched cells, rewrites limited to the touched cells —
+and one maintainer (:func:`_merge_cells`, :func:`_compact_cells`,
+:func:`_refresh_cells`); the two kinds differ only in the encoder that
+turns chunk rows into table rows. The PQ table has no cell to
+partition by, so its merges stage into a separate epoch-partitioned
+table that a compaction folds into the base with one full rewrite.
 """
 
 from __future__ import annotations
@@ -25,6 +36,8 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections.abc import Callable
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -34,8 +47,13 @@ from pyspark.sql import types as T
 from dataingestionplayground_spark.functions import vector as V
 from dataingestionplayground_spark.ingest.store import CollectionStore
 from dataingestionplayground_spark.operators.similarity import (
+    _assign_cells_matmul,
+    _l2_assign,
     _pq_codebook,
+    _seed_centroids,
+    kmeans_centroids,
     pq_encode_with_codebook,
+    sampled_kmeans_centroids,
 )
 
 _CENTS_SCHEMA = T.ArrayType(
@@ -162,10 +180,130 @@ def _adc_topk(
     )
 
 
-def _index_dir(store: CollectionStore, collection: str) -> str:
+# ---------------------------------------------------------------------------
+# Index storage shared by every kind: the index dir, the meta file, the
+# declared table schema and the crash-recoverable table swap.
+# ---------------------------------------------------------------------------
+
+
+def _index_dir(store: CollectionStore, collection: str, kind: str) -> str:
     # _path validates the collection name (and runs crash recovery)
     store._path(collection)
-    return os.path.join(store.base_path, "_indexes", collection, "pq")
+    return os.path.join(store.base_path, "_indexes", collection, kind)
+
+
+def _meta_path(store: CollectionStore, collection: str, kind: str) -> str:
+    return os.path.join(_index_dir(store, collection, kind), f"{kind}.json")
+
+
+def _load_meta(store: CollectionStore, collection: str, kind: str) -> dict:
+    path = _meta_path(store, collection, kind)
+    if not os.path.exists(path):
+        raise FileNotFoundError(
+            f"no {kind.upper()} index for collection {collection!r}; "
+            f"run build_{kind}_index first"
+        )
+    with open(path) as f:
+        return json.load(f)
+
+
+def _load_ivf_meta(store: CollectionStore, collection: str) -> dict:
+    """The IVF meta under the name the index tests import."""
+    return _load_meta(store, collection, "ivf")
+
+
+def _write_meta(path: str, meta: dict) -> None:
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path + ".tmp", "w") as f:
+        json.dump(meta, f)
+    os.replace(path + ".tmp", path)  # a reader never sees a partial file
+
+
+def _ddl(columns: list[str]) -> str:
+    """Schema of an index table from its column names, declared so a
+    read runs no schema-inference job: ids are strings, the merge epoch
+    a long, every other column (codes, cells, cell ranks) an int."""
+    types = {"key": "string", "documentid": "string", "epoch_id": "bigint"}
+    return ", ".join(f"{c} {types.get(c, 'int')}" for c in columns)
+
+
+def _pq_columns(meta: dict) -> list[str]:
+    return ["key", "documentid", *(f"code_{s}" for s in range(meta["m"]))]
+
+
+def _declare_epoch(meta_path: str, meta: dict, columns: list[str]) -> None:
+    """Record a merge's epoch column in the meta, BEFORE any file
+    carries it: a crash before the write leaves an all-NULL column,
+    never an undeclared one."""
+    if "epoch_id" not in meta.get("columns", ["epoch_id"]):
+        meta["columns"] = columns
+        _write_meta(meta_path, meta)
+
+
+def _has_parquet(path: str) -> bool:
+    return os.path.isdir(path) and any(
+        f.endswith(".parquet") for _, _, files in os.walk(path) for f in files
+    )
+
+
+def _swap_live_dir(tmp: str, live: str) -> None:
+    """Crash-recoverable table swap: promote the fully written ``tmp``
+    (which MUST be ``live + ".new"``) to ``live``. The complete ``.new``
+    directory exists on disk before ``live`` is ever touched, so every
+    crash point is recoverable by :func:`_recover_live_dir` (run by
+    readers): live missing + ``.new`` present → finish the promotion;
+    leftover ``.old`` → clear it. (Renaming ``live`` away before the new
+    table is complete would leave a window with no live directory.)"""
+    assert tmp == live + ".new", "swap tmp must be the recoverable .new name"
+    old = live + ".old"
+    if os.path.exists(old):  # leftover from an interrupted prior swap
+        shutil.rmtree(old)
+    os.rename(live, old)
+    os.rename(tmp, live)
+    shutil.rmtree(old)
+
+
+def _recover_live_dir(live: str) -> None:
+    """Finish an interrupted :func:`_swap_live_dir`. Only promotes
+    ``.new`` when ``live`` is MISSING — that state is reachable solely
+    after the writer finished ``.new`` and renamed ``live`` away, so a
+    partial ``.new`` (crash mid-write, ``live`` intact) is never
+    promoted; the next rewrite simply overwrites it."""
+    new = live + ".new"
+    old = live + ".old"
+    if not os.path.exists(live):
+        if os.path.isdir(new):
+            os.rename(new, live)
+        elif os.path.isdir(old):  # defense in depth: unreachable via
+            os.rename(old, live)  # _swap_live_dir, but never strand data
+    if os.path.exists(live) and os.path.exists(old):
+        shutil.rmtree(old)
+
+
+def _staleness(
+    spark: SparkSession, store: CollectionStore, collection: str, indexed: DataFrame
+) -> dict:
+    """(missing, orphaned) chunk-key counts of an index table: missing =
+    chunks with no index row (ingested after the last refresh);
+    orphaned = index rows whose chunk no longer exists (deleted
+    documents)."""
+    keys = store.read(spark, collection).select("key")
+    indexed = indexed.select("key")
+    return {
+        "missing": keys.join(indexed, "key", "left_anti").count(),
+        "orphaned": indexed.join(keys, "key", "left_anti").count(),
+    }
+
+
+def _embedding_dims(spark: SparkSession, store: CollectionStore, collection: str) -> int:
+    """Width of the collection's stored embeddings (384 when it is empty)."""
+    first = store.read(spark, collection).select("embedding").first()
+    return len(first["embedding"]) if first else 384
+
+
+# ---------------------------------------------------------------------------
+# PQ index: compressed CODES per chunk (scan cost), not partitioned.
+# ---------------------------------------------------------------------------
 
 
 def _codebook_df(spark: SparkSession, meta: dict) -> DataFrame:
@@ -174,14 +312,14 @@ def _codebook_df(spark: SparkSession, meta: dict) -> DataFrame:
 
 
 def _auto_centroids(n_rows: int) -> int:
-    """Codebook-resolution scaling policy (r11 verdict item 3): a
-    FROZEN fixed-k codebook's ADC code space saturates as the corpus
-    grows — driver-measured raw ADC recall@10 at the bench config fell
-    0.70 (sf0.5, 10k rows) -> 0.36 (sf1.0, 20k rows) while the exact
-    rerank held 0.88. Auto mode steps per-subspace centroid count with
-    corpus size so raw-shortlist quality degrades by policy, not by
-    accident; each step 4x's the distinguishable code points per
-    subspace while codes stay one byte (k <= 256)."""
+    """Codebook-resolution scaling policy: a FROZEN fixed-k codebook's
+    ADC code space saturates as the corpus grows — driver-measured raw
+    ADC recall@10 at the bench config fell 0.70 (sf0.5, 10k rows) ->
+    0.36 (sf1.0, 20k rows) while the exact rerank held 0.88. Auto mode
+    steps per-subspace centroid count with corpus size so raw-shortlist
+    quality degrades by policy, not by accident; each step 4x's the
+    distinguishable code points per subspace while codes stay one byte
+    (k <= 256)."""
     if n_rows < 50_000:
         return 16
     if n_rows < 500_000:
@@ -203,11 +341,11 @@ def build_pq_index(
     dict. Encoding is the zero-shuffle broadcast-codebook expression;
     the only cluster work is one corpus scan + the parquet write.
 
-    Defaults (r8 verdict item 2): 8 subspaces x 16 kmeans-refined
-    centroids — the old 4x8 seeded codebook carried 12 bits/vector,
-    too coarse for a usable ADC shortlist (bench recall@10 0.12 raw /
-    0.38 at rerank=50); 8x16 kmeans + 'auto' rerank depth clears the
-    0.8 recall floor the bench comparator now gates.
+    Defaults: 8 subspaces x 16 kmeans-refined centroids — a 4x8 seeded
+    codebook carries 12 bits/vector, too coarse for a usable ADC
+    shortlist (bench recall@10 0.12 raw / 0.38 at rerank=50); 8x16
+    kmeans + 'auto' rerank depth clears the 0.8 recall floor the bench
+    comparator gates.
 
     ``n_centroids='auto'`` applies the resolution policy
     (:func:`_auto_centroids`): k tracks the corpus size at BUILD time
@@ -247,7 +385,7 @@ def build_pq_index(
         # the resolved k is recorded so a later reader can tell whether
         # this index was sized by the policy or pinned by hand
         meta["n_centroids_policy"] = policy
-    idx = _index_dir(store, collection)
+    idx = _index_dir(store, collection, "pq")
     codes = pq_encode_with_codebook(
         chunks, _codebook_df(spark, meta), m, dims, "key", "embedding",
         extra_cols=("documentid",),
@@ -264,105 +402,8 @@ def build_pq_index(
     return meta
 
 
-def _load_meta(store: CollectionStore, collection: str) -> dict:
-    idx = _index_dir(store, collection)
-    path = os.path.join(idx, "pq.json")
-    if not os.path.exists(path):
-        raise FileNotFoundError(
-            f"no PQ index for collection {collection!r}; run build_pq_index first"
-        )
-    with open(path) as f:
-        return json.load(f)
-
-
-def _write_meta(path: str, meta: dict) -> None:
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(path + ".tmp", "w") as f:
-        json.dump(meta, f)
-    os.replace(path + ".tmp", path)  # a reader never sees a partial file
-
-
-def _ddl(columns: list[str]) -> str:
-    """Schema of an index table from its column names, declared so a
-    read runs no schema-inference job: ids are strings, the merge epoch
-    a long, every other column (codes, cells, cell ranks) an int."""
-    types = {"key": "string", "documentid": "string", "epoch_id": "bigint"}
-    return ", ".join(f"{c} {types.get(c, 'int')}" for c in columns)
-
-
-def _pq_columns(meta: dict) -> list[str]:
-    return ["key", "documentid", *(f"code_{s}" for s in range(meta["m"]))]
-
-
-def _read_cell_table(
-    spark: SparkSession, path: str, meta: dict, base_columns: list[str]
-) -> DataFrame:
-    """A cell-partitioned index table (IVF assignments, IVFPQ codes)
-    read with the column set its meta records. An index whose meta
-    predates that field is inferred — mergeSchema, because a merge
-    stages epoch-tagged rows next to epoch-less base/refresh rows (read
-    back as epoch_id NULL). A table whose every cell partition has been
-    deleted (refresh drops emptied partitions) is an EMPTY frame of
-    ``base_columns``, since a dir with no data files fails inference."""
-    if not _has_parquet(path):
-        return spark.createDataFrame([], _ddl(meta.get("columns", base_columns)))
-    if "columns" not in meta:
-        return spark.read.option("mergeSchema", "true").parquet(path)
-    return spark.read.schema(_ddl(meta["columns"])).parquet(path)
-
-
-def _declare_epoch(meta_path: str, meta: dict, columns: list[str]) -> None:
-    """Record a merge's epoch column in the meta, BEFORE any file
-    carries it: a crash before the write leaves an all-NULL column,
-    never an undeclared one."""
-    if "epoch_id" not in meta.get("columns", ["epoch_id"]):
-        meta["columns"] = columns
-        _write_meta(meta_path, meta)
-
-
 def _pq_staging_dir(store: CollectionStore, collection: str) -> str:
-    return os.path.join(_index_dir(store, collection), "codes_epochs")
-
-
-def _has_parquet(path: str) -> bool:
-    return os.path.isdir(path) and any(
-        f.endswith(".parquet") for _, _, files in os.walk(path) for f in files
-    )
-
-
-def _swap_live_dir(tmp: str, live: str) -> None:
-    """Crash-recoverable table swap (r15 ADVICE): promote the fully
-    written ``tmp`` (which MUST be ``live + ".new"``) to ``live``. The
-    old two-rename dance had a window — after ``rename(live, old)`` and
-    before ``rename(tmp, live)`` a crash left NO live directory at all.
-    Here the complete ``.new`` directory exists on disk before ``live``
-    is ever touched, so every crash point is recoverable by
-    :func:`_recover_live_dir` (run by readers): live missing + ``.new``
-    present → finish the promotion; leftover ``.old`` → clear it."""
-    assert tmp == live + ".new", "swap tmp must be the recoverable .new name"
-    old = live + ".old"
-    if os.path.exists(old):  # leftover from an interrupted prior swap
-        shutil.rmtree(old)
-    os.rename(live, old)
-    os.rename(tmp, live)
-    shutil.rmtree(old)
-
-
-def _recover_live_dir(live: str) -> None:
-    """Finish an interrupted :func:`_swap_live_dir`. Only promotes
-    ``.new`` when ``live`` is MISSING — that state is reachable solely
-    after the writer finished ``.new`` and renamed ``live`` away, so a
-    partial ``.new`` (crash mid-write, ``live`` intact) is never
-    promoted; the next rewrite simply overwrites it."""
-    new = live + ".new"
-    old = live + ".old"
-    if not os.path.exists(live):
-        if os.path.isdir(new):
-            os.rename(new, live)
-        elif os.path.isdir(old):  # defense in depth: unreachable via
-            os.rename(old, live)  # _swap_live_dir, but never strand data
-    if os.path.exists(live) and os.path.exists(old):
-        shutil.rmtree(old)
+    return os.path.join(_index_dir(store, collection, "pq"), "codes_epochs")
 
 
 def read_pq_codes(spark: SparkSession, store: CollectionStore, collection: str) -> DataFrame:
@@ -372,9 +413,9 @@ def read_pq_codes(spark: SparkSession, store: CollectionStore, collection: str) 
     code shadows its base row; base rows read as epoch NULL and lose
     ties last). Search and staleness both read through here, so staged
     codes are searchable before compaction."""
-    codes_path = os.path.join(_index_dir(store, collection), "codes")
+    codes_path = os.path.join(_index_dir(store, collection, "pq"), "codes")
     _recover_live_dir(codes_path)  # finish any interrupted compaction swap
-    schema = _ddl(_pq_columns(_load_meta(store, collection)))
+    schema = _ddl(_pq_columns(_load_meta(store, collection, "pq")))
     base = spark.read.schema(schema).parquet(codes_path)
     staging = _pq_staging_dir(store, collection)
     if not _has_parquet(staging):
@@ -405,15 +446,14 @@ def merge_pq_codes(
     batch: DataFrame,
     epoch_id: int,
 ) -> int:
-    """Epoch-staged code APPEND for the PQ index (the other half of r13
-    verdict item 5): encode a chunk batch against the FROZEN codebook
-    and stage it as the epoch's own partition — a foreachBatch retry
-    rewrites exactly its own epoch directory (the drift-log discipline),
-    so replays converge byte-identically, and a key re-delivered across
-    epochs is shadowed at read time (newest epoch wins). Fold committed
-    epochs into the base table with :func:`compact_pq_codes`. Returns
-    rows staged."""
-    meta = _load_meta(store, collection)
+    """Epoch-staged code APPEND for the PQ index: encode a chunk batch
+    against the FROZEN codebook and stage it as the epoch's own
+    partition — a foreachBatch retry rewrites exactly its own epoch
+    directory (the drift-log discipline), so replays converge
+    byte-identically, and a key re-delivered across epochs is shadowed
+    at read time (newest epoch wins). Fold committed epochs into the
+    base table with :func:`compact_pq_codes`. Returns rows staged."""
+    meta = _load_meta(store, collection, "pq")
     codes = pq_encode_with_codebook(
         batch.select("key", "documentid", "embedding"),
         _codebook_df(spark, meta),
@@ -425,34 +465,28 @@ def merge_pq_codes(
     ).withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
     codes = codes.localCheckpoint(eager=True)  # counted + written once
     n = codes.count()
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            codes.write.mode("overwrite")
-            .partitionBy("epoch_id")
-            .option("compression", "zstd")
-            .parquet(_pq_staging_dir(store, collection))
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        codes.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("epoch_id")
+        .option("compression", "zstd")
+        .parquet(_pq_staging_dir(store, collection))
+    )
     return n
 
 
 def compact_pq_codes(spark: SparkSession, store: CollectionStore, collection: str) -> int:
     """Fold staged epoch partitions into the base code table (the
     refresh rewrite pattern: write to ``codes.new``, then the
-    crash-recoverable :func:`_swap_live_dir` — r15 ADVICE closed the
-    window where a crash between the two renames left no ``codes``
-    directory at all) and clear the staging area. Run only AFTER the
-    maintaining stream's checkpoint has committed those epochs. Returns
-    staged rows folded."""
+    crash-recoverable :func:`_swap_live_dir`) and clear the staging
+    area. Run only AFTER the maintaining stream's checkpoint has
+    committed those epochs. Returns staged rows folded."""
     staging = _pq_staging_dir(store, collection)
     if not _has_parquet(staging):
         return 0
     n = spark.read.parquet(staging).count()
     merged = read_pq_codes(spark, store, collection).localCheckpoint(eager=True)
-    codes_path = os.path.join(_index_dir(store, collection), "codes")
+    codes_path = os.path.join(_index_dir(store, collection, "pq"), "codes")
     tmp = codes_path + ".new"
     merged.repartition("documentid").write.mode("overwrite").option(
         "compression", "zstd"
@@ -463,15 +497,9 @@ def compact_pq_codes(spark: SparkSession, store: CollectionStore, collection: st
 
 
 def index_staleness(spark: SparkSession, store: CollectionStore, collection: str) -> dict:
-    """(missing, orphaned) chunk-key counts: missing = chunks with no
-    code row (ingested after the last refresh); orphaned = code rows
-    whose chunk no longer exists (deleted documents)."""
-    keys = store.read(spark, collection).select("key")
-    codes = read_pq_codes(spark, store, collection).select("key")
-    return {
-        "missing": keys.join(codes, "key", "left_anti").count(),
-        "orphaned": codes.join(keys, "key", "left_anti").count(),
-    }
+    """(missing, orphaned) chunk-key counts of the PQ code table
+    (see :func:`_staleness`)."""
+    return _staleness(spark, store, collection, read_pq_codes(spark, store, collection))
 
 
 def refresh_pq_index(spark: SparkSession, store: CollectionStore, collection: str) -> dict:
@@ -482,9 +510,9 @@ def refresh_pq_index(spark: SparkSession, store: CollectionStore, collection: st
     first, so the reconcile below sees one authoritative table.
     Returns {"appended": n, "removed": n}."""
     compact_pq_codes(spark, store, collection)
-    meta = _load_meta(store, collection)
+    meta = _load_meta(store, collection, "pq")
     m, dims = meta["m"], meta["dims"]
-    idx = _index_dir(store, collection)
+    idx = _index_dir(store, collection, "pq")
     codes_path = os.path.join(idx, "codes")
     chunks = store.read(spark, collection).select("key", "documentid", "embedding")
     codes = spark.read.schema(_ddl(_pq_columns(meta))).parquet(codes_path)
@@ -558,16 +586,16 @@ def pq_search_indexed(
     exact cosine picks the final top-k — the amortized, store-backed
     twin of :func:`~...operators.similarity.pq_adc_rerank`: ADC's
     quantization recall loss is largely recovered while the scan stays
-    code-only. ``rerank='auto'`` uses the production depth 16*k (r8
-    verdict item 2: a fixed shallow depth starves recall when the code
-    resolution is coarse relative to the corpus; recall@10 is monotone
-    in depth — a deeper ADC shortlist is a superset, and exact-cosine
-    top-k over a superset can only keep or gain true neighbors — so
-    16*k trades a slightly larger broadcast for the recall floor the
-    bench gates at >=0.8). Returns (query_id, key, score, rank)."""
+    code-only. ``rerank='auto'`` uses the production depth 16*k: a
+    fixed shallow depth starves recall when the code resolution is
+    coarse relative to the corpus; recall@10 is monotone in depth — a
+    deeper ADC shortlist is a superset, and exact-cosine top-k over a
+    superset can only keep or gain true neighbors — so 16*k trades a
+    slightly larger broadcast for the recall floor the bench gates at
+    >=0.8. Returns (query_id, key, score, rank)."""
     if rerank == "auto":
         rerank = 16 * k
-    meta = _load_meta(store, collection)
+    meta = _load_meta(store, collection, "pq")
     qs = _QuerySet(queries, query_id, query_vec)
     if not qs.ids:
         return qs.empty(spark, "score" if rerank else "adc_dist")
@@ -586,27 +614,297 @@ def pq_search_indexed(
 
 
 # ---------------------------------------------------------------------------
-# IVF index: the second member of the store-backed index family. Where the
-# PQ index persists compressed CODES (scan cost), the IVF index persists
-# the coarse CELL ASSIGNMENT, partitioned by cell — so a search with
-# n_probe cells triggers parquet PARTITION PRUNING and never reads the
-# other cells' files at all: the index turns top-k from a corpus scan
-# into a probed-cells scan. Same lifecycle as PQ: centroids FROZEN at
-# build time (ivf.json), refresh encodes only new chunks (anti-join),
-# deletion rewrites only the affected cell partitions.
+# Cell-partitioned index tables. The IVF index persists each chunk's
+# coarse CELL ASSIGNMENT and the IVFPQ index its residual-PQ codes, both
+# partitioned by cell — so a search with n_probe cells triggers parquet
+# PARTITION PRUNING and never reads the other cells' files at all. Both
+# freeze their coarse centroids at build time; maintenance encodes only
+# new chunks (anti-join) and rewrites only the affected cell partitions.
 # ---------------------------------------------------------------------------
 
-_IVF_META = "ivf.json"
 
-
-def _ivf_dir(store: CollectionStore, collection: str) -> str:
-    store._path(collection)
-    return os.path.join(store.base_path, "_indexes", collection, "ivf")
+def _coarse_centroids(
+    chunks: DataFrame, n_cells: int, centroid_mode: str, kmeans_iters: int
+) -> DataFrame:
+    """(centroid_id, cent_vec) coarse centroids: ``'seed'`` takes the
+    lowest-key chunks; ``'kmeans'`` refines them with the deterministic
+    decimal-routed Lloyd iterations; ``'sampled'`` converges on a
+    bounded driver-side sample first and spends the distributed
+    iterations refining."""
+    if centroid_mode == "kmeans":
+        return kmeans_centroids(chunks, n_cells, kmeans_iters, "key", "embedding")
+    if centroid_mode == "sampled":
+        return sampled_kmeans_centroids(chunks, n_cells, kmeans_iters, "key", "embedding")
+    if centroid_mode == "seed":
+        return _seed_centroids(chunks, "key", "embedding", n_cells)
+    raise ValueError(
+        f"centroid_mode must be 'seed', 'kmeans', or 'sampled': {centroid_mode!r}"
+    )
 
 
 def _ivf_cents_df(spark: SparkSession, meta: dict) -> DataFrame:
-    rows = [(i, [float(x) for x in v]) for i, v in enumerate(meta["cents"])]
+    """The frozen coarse centroids as a (centroid_id, cent_vec) frame:
+    an IVF meta's ``cents``, an IVFPQ meta's ``coarse`` (its ``cents``
+    is the residual codebook)."""
+    vectors = meta["coarse"] if "coarse" in meta else meta["cents"]
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vectors)]
     return spark.createDataFrame(rows, "centroid_id int, cent_vec array<float>")
+
+
+def _assign_ivf(spark: SparkSession, meta: dict, chunks: DataFrame) -> DataFrame:
+    """IVF table rows (key, documentid[, cell_rank, cell_1], cell) for
+    chunk rows: each chunk in its argmax-cosine cell, with soft
+    assignment (``assign_top > 1``) also in its next-nearest cells
+    (within ``assign_margin`` of the best when set), each copy carrying
+    its rank and the chunk's primary cell. The fan-out is part of the
+    frozen quantizer, so build, merge and refresh all assign through
+    here and maintained == rebuilt holds."""
+    top = int(meta.get("assign_top", 1))
+    soft = top > 1
+    return _assign_cells_matmul(
+        chunks, _ivf_cents_df(spark, meta), "key", "embedding",
+        extra_cols=("documentid",), keep=top, emit_rank=soft,
+        soft_margin=meta.get("assign_margin"),
+    ).select("key", "documentid", *(("cell_rank", "cell_1") if soft else ()), "cell")
+
+
+def _residualize(
+    chunks: DataFrame, cents_df: DataFrame, dims: int, keep: int = 1
+) -> DataFrame:
+    """(key, documentid, cell, res) — L2 nearest coarse cell(s) (ties
+    to the lowest id) + the double-valued residual, via the broadcast
+    expression assigner shared with the batch operator. ``keep > 1`` is
+    the IVFADC face of soft assignment: a key is residual-encoded
+    against EACH of its ``keep`` nearest cells (the residual, and so
+    the stored code, is per-cell)."""
+    cents = cents_df.select("centroid_id", "cent_vec")
+    asg = _l2_assign(
+        chunks.select("key", "documentid", "embedding"),
+        cents,
+        "embedding",
+        "key",
+        dims,
+        keep=max(1, int(keep)),
+    )
+    ids = chunks.select("key", "documentid")
+    return (
+        asg.withColumnRenamed("__res", "res")
+        .withColumnRenamed("centroid_id", "cell")
+        .join(ids, "key")
+    )
+
+
+def _encode_ivfpq(spark: SparkSession, meta: dict, chunks: DataFrame) -> DataFrame:
+    """IVFPQ table rows (key, documentid, code_0..m-1, cell) for chunk
+    rows: each chunk's residual against its ``assign_top`` nearest
+    frozen coarse cells, PQ-encoded with the frozen residual codebook."""
+    residuals = _residualize(
+        chunks, _ivf_cents_df(spark, meta), meta["dims"],
+        keep=int(meta.get("assign_top", 1)),
+    )
+    return pq_encode_with_codebook(
+        residuals, _codebook_df(spark, meta), meta["m"], meta["dims"],
+        "key", "res", extra_cols=("documentid", "cell"),
+    ).select(*_pq_columns(meta), "cell")
+
+
+class _CellKind(NamedTuple):
+    """One kind of cell-partitioned index: its dir and meta file name,
+    the table's dir under it, the column set a meta predating its
+    ``columns`` field implies, and the encoder that turns chunk rows
+    into table rows (key, documentid, *payload, cell) against the
+    frozen quantizers."""
+
+    name: str
+    table: str
+    legacy_columns: Callable[[dict], list[str]]
+    encode: Callable[[SparkSession, dict, DataFrame], DataFrame]
+
+
+_IVF = _CellKind("ivf", "cells", lambda meta: ["key", "documentid", "cell"], _assign_ivf)
+_IVFPQ = _CellKind("ivfpq", "codes", lambda meta: [*_pq_columns(meta), "cell"], _encode_ivfpq)
+
+
+def _cells_path(store: CollectionStore, collection: str, kind: _CellKind) -> str:
+    return os.path.join(_index_dir(store, collection, kind.name), kind.table)
+
+
+def _read_cells(
+    spark: SparkSession, store: CollectionStore, collection: str, kind: _CellKind
+) -> DataFrame:
+    """The table read with the column set its meta records. An index
+    whose meta predates that field is inferred — mergeSchema, because a
+    merge stages epoch-tagged rows next to epoch-less base/refresh rows
+    (read back as epoch_id NULL). A table whose every cell partition
+    has been deleted (refresh drops emptied partitions) is an EMPTY
+    frame, since a dir with no data files fails inference."""
+    path = _cells_path(store, collection, kind)
+    meta = _load_meta(store, collection, kind.name)
+    if not _has_parquet(path):
+        return spark.createDataFrame([], _ddl(meta.get("columns", kind.legacy_columns(meta))))
+    if "columns" not in meta:
+        return spark.read.option("mergeSchema", "true").parquet(path)
+    return spark.read.schema(_ddl(meta["columns"])).parquet(path)
+
+
+def _in_cells(cells: list) -> Column:
+    """``cell IN (cells)``, also matching a NULL cell when ``cells``
+    holds None (IN never matches NULL)."""
+    cond = F.col("cell").isin([c for c in cells if c is not None])
+    return cond | F.col("cell").isNull() if None in cells else cond
+
+
+def _write_cells(df: DataFrame, path: str, mode: str) -> None:
+    """Write ``df`` into the cell-partitioned table at ``path``. An
+    overwrite is dynamic — it replaces only the cell partitions present
+    in ``df`` — and is set on the writer, so the session conf is never
+    changed."""
+    (
+        df.repartition("cell")
+        .write.mode(mode)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("cell")
+        .option("compression", "zstd")
+        .parquet(path)
+    )
+
+
+def _merge_cells(
+    spark: SparkSession,
+    store: CollectionStore,
+    collection: str,
+    kind: _CellKind,
+    batch: DataFrame,
+    epoch_id: int,
+) -> int:
+    """Epoch-staged merge of a chunk batch into the touched cells (see
+    :func:`merge_ivf_assignments`). Returns cell partitions touched."""
+    meta = _load_meta(store, collection, kind.name)
+    fresh = (
+        kind.encode(spark, meta, batch.select("key", "documentid", "embedding"))
+        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
+        .localCheckpoint(eager=True)  # consumed for cells, keys, and the write
+    )
+    hot = [r["cell"] for r in fresh.select("cell").distinct().collect()]
+    if not hot:
+        return 0
+    existing = _read_cells(spark, store, collection, kind)
+    if "epoch_id" not in existing.columns:
+        existing = existing.withColumn("epoch_id", F.lit(None).cast("long"))
+    payload = [c for c in fresh.columns if c not in ("key", "documentid", "cell", "epoch_id")]
+    for c in payload:
+        if c not in existing.columns:  # a soft IVF table written before rank columns
+            existing = existing.withColumn(c, F.lit(None).cast("int"))
+    out_cols = ["key", "documentid", *payload, "epoch_id", "cell"]
+    _declare_epoch(_meta_path(store, collection, kind.name), meta, out_cols)
+    kept = (
+        existing.filter(_in_cells(hot))
+        .filter(F.col("epoch_id").isNull() | (F.col("epoch_id") != int(epoch_id)))
+        .join(fresh.select("key"), "key", "left_anti")
+        .select(*out_cols)
+    )
+    merged = kept.unionByName(fresh.select(*out_cols)).localCheckpoint(eager=True)
+    _write_cells(merged, _cells_path(store, collection, kind), "overwrite")
+    return len(hot)
+
+
+def _compact_cells(
+    spark: SparkSession, store: CollectionStore, collection: str, kind: _CellKind
+) -> int:
+    """Fold epoch-tagged rows down to epoch-NULL rows (see
+    :func:`compact_ivf_assignments`). Returns cell partitions rewritten."""
+    table = _read_cells(spark, store, collection, kind)
+    if "epoch_id" not in table.columns:
+        return 0
+    staged = [
+        r["cell"]
+        for r in table.filter(F.col("epoch_id").isNotNull()).select("cell").distinct().collect()
+    ]
+    if not staged:
+        return 0
+    payload = [c for c in table.columns if c not in ("key", "documentid", "cell", "epoch_id")]
+    folded = (
+        table.filter(_in_cells(staged))
+        .withColumn("epoch_id", F.lit(None).cast("long"))
+        .select("key", "documentid", *payload, "epoch_id", "cell")
+        .localCheckpoint(eager=True)
+    )
+    _write_cells(folded, _cells_path(store, collection, kind), "overwrite")
+    return len(staged)
+
+
+def _refresh_cells(
+    spark: SparkSession, store: CollectionStore, collection: str, kind: _CellKind
+) -> dict:
+    """Reconcile the table with the store (see :func:`refresh_ivf_index`).
+    Returns {"appended": n, "removed": n}."""
+    meta = _load_meta(store, collection, kind.name)
+    path = _cells_path(store, collection, kind)
+    chunks = store.read(spark, collection).select("key", "documentid", "embedding")
+    table = _read_cells(spark, store, collection, kind)
+
+    new = chunks.join(table.select("key"), "key", "left_anti")
+    appended = new.count()
+    if appended:
+        _write_cells(kind.encode(spark, meta, new), path, "append")
+        table = _read_cells(spark, store, collection, kind)
+
+    orphans = table.join(chunks.select("key"), "key", "left_anti")
+    removed = orphans.count()
+    if removed:
+        hot = [r["cell"] for r in orphans.select("cell").distinct().collect()]
+        kept = (
+            table.filter(_in_cells(hot))
+            .join(chunks.select("key"), "key", "left_semi")
+            .localCheckpoint(eager=True)
+        )
+        survivors = {r["cell"] for r in kept.select("cell").distinct().collect()}
+        if survivors:
+            _write_cells(kept, path, "overwrite")
+        # a cell whose every row was deleted has no surviving row, so the
+        # dynamic overwrite never rewrites it: drop its partition directory,
+        # or its stale rows are reported as removed on every refresh
+        for c in hot:
+            if c not in survivors:
+                part = "__HIVE_DEFAULT_PARTITION__" if c is None else c
+                shutil.rmtree(os.path.join(path, f"cell={part}"), ignore_errors=True)
+    return {"appended": appended, "removed": removed}
+
+
+def _retrain_signal(
+    spark: SparkSession,
+    store: CollectionStore,
+    collection: str,
+    kind: _CellKind,
+    skew_threshold: float,
+) -> dict:
+    """Occupancy skew of the maintained table (see
+    :func:`ivf_retrain_signal`): one cell-count agg, never a corpus scan."""
+    meta = _load_meta(store, collection, kind.name)
+    counts = (
+        _read_cells(spark, store, collection, kind)
+        .groupBy("cell")
+        .agg(F.count(F.lit(1)).cast("long").alias("n"))
+        .collect()
+    )
+    n_assigned = sum(r["n"] for r in counts)
+    max_cell = max((r["n"] for r in counts), default=0)
+    n_cells = int(meta["n_cells"])
+    max_share = (max_cell / n_assigned) if n_assigned else 0.0
+    skew = max_share * n_cells
+    return {
+        "n_cells": n_cells,
+        "n_assigned": n_assigned,
+        "max_cell_share": round(max_share, 6),
+        "skew": round(skew, 6),
+        "retrain": bool(skew >= skew_threshold),
+    }
+
+
+# ---------------------------------------------------------------------------
+# IVF index: the cell assignment, partitioned by cell — the index turns
+# top-k from a corpus scan into a probed-cells scan.
+# ---------------------------------------------------------------------------
 
 
 def build_ivf_index(
@@ -628,57 +926,36 @@ def build_ivf_index(
     BY CELL. One corpus scan per kmeans iteration + one partitioned
     write — all one-time build cost.
 
-    kmeans centroids matter here (r9): raw lowest-key seeds land inside
-    the corpus's natural clusters unevenly (the bench embeddings are
+    kmeans centroids matter here: raw lowest-key seeds land inside the
+    corpus's natural clusters unevenly (the bench embeddings are
     label-clustered), measured at recall@10 0.68 with n_probe=2 of 8
     seeded cells vs ~1.0 with 16 kmeans cells probing the same corpus
     fraction (4).
 
-    ``assign_top`` (r14 verdict item 2) is SOFT assignment: each chunk
-    is stored in its ``assign_top`` nearest cells, so a neighborhood
-    that straddles a cell boundary stays reachable from both sides.
-    This is the structural recall lever for a k-means partition whose
-    boundaries cut query neighborhoods — measured on the sf0.1 bench
-    embeddings (16 cells, n_probe=4): recall@10 0.66 at assign_top=1 vs
-    0.86 at assign_top=2, robust across seedings, where centroid-
-    training improvements alone moved recall by seed luck (0.58-0.91).
-    Cost: the assignment table and each probed cell hold ``assign_top``x
-    rows (the full-precision vectors are NOT duplicated — candidates
+    ``assign_top`` is SOFT assignment: each chunk is stored in its
+    ``assign_top`` nearest cells, so a neighborhood that straddles a
+    cell boundary stays reachable from both sides. This is the
+    structural recall lever for a k-means partition whose boundaries
+    cut query neighborhoods — measured on the sf0.1 bench embeddings
+    (16 cells, n_probe=4): recall@10 0.66 at assign_top=1 vs 0.86 at
+    assign_top=2, robust across seedings, where centroid-training
+    improvements alone moved recall by seed luck (0.58-0.91). Cost: the
+    assignment table and each probed cell hold ``assign_top``x rows
+    (the full-precision vectors are NOT duplicated — candidates
     semi-join into the collection). Recorded in the meta; merge/refresh
     maintain it so maintained == rebuilt parity holds.
 
-    ``assign_margin`` (r16 verdict item 3, boundary-only fan-out):
-    with ``assign_top > 1``, store a secondary copy ONLY when its
-    cosine similarity is within ``assign_margin`` of the chunk's best
-    cell — chunks deep inside a cell stay single-assigned, so the
-    assignment table grows by the measured boundary fraction instead
-    of a flat ``assign_top``x while boundary-straddling neighborhoods
-    keep their second entry point (the recall lever). Frozen into the
-    meta like assign_top: merge/refresh reproduce the same fan-out
-    rule, so maintained == rebuilt still holds."""
-    from dataingestionplayground_spark.operators.similarity import (
-        _assign_cells_matmul,
-        _seed_centroids,
-        kmeans_centroids,
-    )
-
+    ``assign_margin`` (boundary-only fan-out): with ``assign_top > 1``,
+    store a secondary copy ONLY when its cosine similarity is within
+    ``assign_margin`` of the chunk's best cell — chunks deep inside a
+    cell stay single-assigned, so the assignment table grows by the
+    measured boundary fraction instead of a flat ``assign_top``x while
+    boundary-straddling neighborhoods keep their second entry point
+    (the recall lever). Frozen into the meta like assign_top:
+    merge/refresh reproduce the same fan-out rule, so maintained ==
+    rebuilt still holds."""
     chunks = store.read(spark, collection).select("key", "documentid", "embedding")
-    if centroid_mode == "kmeans":
-        cents = kmeans_centroids(chunks, n_cells, kmeans_iters, "key", "embedding")
-    elif centroid_mode == "sampled":
-        from dataingestionplayground_spark.operators.similarity import (
-            sampled_kmeans_centroids,
-        )
-
-        cents = sampled_kmeans_centroids(
-            chunks, n_cells, kmeans_iters, "key", "embedding"
-        )
-    elif centroid_mode == "seed":
-        cents = _seed_centroids(chunks, "key", "embedding", n_cells)
-    else:
-        raise ValueError(
-            f"centroid_mode must be 'seed', 'kmeans', or 'sampled': {centroid_mode!r}"
-        )
+    cents = _coarse_centroids(chunks, n_cells, centroid_mode, kmeans_iters)
     meta = {
         "n_cells": cents.count(),
         "centroid_mode": centroid_mode,
@@ -691,44 +968,24 @@ def build_ivf_index(
             for r in cents.orderBy("centroid_id").collect()
         ],
     }
-    soft = meta["assign_top"] > 1
-    assigned = _assign_cells_matmul(
-        chunks, _ivf_cents_df(spark, meta), "key", "embedding",
-        extra_cols=("documentid",), keep=meta["assign_top"], emit_rank=soft,
-        soft_margin=meta["assign_margin"],
-    ).select(
-        "key", "documentid", *(("cell_rank", "cell_1") if soft else ()), "cell"
-    )
+    assigned = _assign_ivf(spark, meta, chunks)
     # the column set lets readers declare the table's schema
     meta["columns"] = assigned.columns
-    idx = _ivf_dir(store, collection)
     (
         assigned.repartition("cell")
         .write.mode("overwrite")
         .partitionBy("cell")
         .option("compression", "zstd")
-        .parquet(os.path.join(idx, "cells"))
+        .parquet(_cells_path(store, collection, _IVF))
     )
-    _write_meta(os.path.join(idx, _IVF_META), meta)
+    _write_meta(_meta_path(store, collection, "ivf"), meta)
     return meta
-
-
-def _load_ivf_meta(store: CollectionStore, collection: str) -> dict:
-    path = os.path.join(_ivf_dir(store, collection), _IVF_META)
-    if not os.path.exists(path):
-        raise FileNotFoundError(
-            f"no IVF index for collection {collection!r}; run build_ivf_index first"
-        )
-    with open(path) as f:
-        return json.load(f)
 
 
 def read_ivf_assignments(
     spark: SparkSession, store: CollectionStore, collection: str
 ) -> DataFrame:
-    cells = os.path.join(_ivf_dir(store, collection), "cells")
-    meta = _load_ivf_meta(store, collection)
-    return _read_cell_table(spark, cells, meta, ["key", "documentid", "cell"])
+    return _read_cells(spark, store, collection, _IVF)
 
 
 def ivf_index_staleness(
@@ -736,12 +993,7 @@ def ivf_index_staleness(
 ) -> dict:
     """(missing, orphaned) chunk-key counts for the IVF assignment table
     — the IVF twin of ``index_staleness``."""
-    keys = store.read(spark, collection).select("key")
-    assigned = read_ivf_assignments(spark, store, collection).select("key")
-    return {
-        "missing": keys.join(assigned, "key", "left_anti").count(),
-        "orphaned": assigned.join(keys, "key", "left_anti").count(),
-    }
+    return _staleness(spark, store, collection, read_ivf_assignments(spark, store, collection))
 
 
 def ensure_index(
@@ -758,14 +1010,13 @@ def ensure_index(
         raise ValueError(
             f"unknown index kind {kind!r} (expected 'pq', 'ivf', or 'ivfpq')"
         )
-    load = {"pq": _load_meta, "ivf": _load_ivf_meta, "ivfpq": _load_ivfpq_meta}[kind]
+    # build_* and refresh_* are looked up as module attributes at call
+    # time, so a wrapper installed on the module (a tracer) sees the call
     try:
-        load(store, collection)
+        _load_meta(store, collection, kind)
     except FileNotFoundError:
         if kind in ("pq", "ivfpq"):
-            first = store.read(spark, collection).select("embedding").first()
-            dims = len(first["embedding"]) if first else 384
-            build_kwargs.setdefault("dims", dims)
+            build_kwargs.setdefault("dims", _embedding_dims(spark, store, collection))
             build = build_pq_index if kind == "pq" else build_ivfpq_index
             build(spark, store, collection, **build_kwargs)
         else:
@@ -790,77 +1041,10 @@ def refresh_ivf_index(spark: SparkSession, store: CollectionStore, collection: s
     """Incremental maintenance against the FROZEN centroids: assign only
     chunks without an assignment row (anti-join on key) and append into
     their cell partitions; drop rows for deleted chunks by rewriting only
-    the cell partitions that contained them."""
-    from dataingestionplayground_spark.operators.similarity import _assign_cells_matmul
-
-    meta = _load_ivf_meta(store, collection)
-    idx = _ivf_dir(store, collection)
-    cells_path = os.path.join(idx, "cells")
-    chunks = store.read(spark, collection).select("key", "documentid", "embedding")
-    assigned = read_ivf_assignments(spark, store, collection)
-
-    new = chunks.join(assigned.select("key"), "key", "left_anti")
-    appended = new.count()
-    if appended:
-        soft = int(meta.get("assign_top", 1)) > 1
-        (
-            _assign_cells_matmul(
-                new, _ivf_cents_df(spark, meta), "key", "embedding",
-                extra_cols=("documentid",), keep=int(meta.get("assign_top", 1)),
-                emit_rank=soft,
-                soft_margin=meta.get("assign_margin"),
-            )
-            .select(
-                "key", "documentid",
-                *(("cell_rank", "cell_1") if soft else ()), "cell",
-            )
-            .repartition("cell")
-            .write.mode("append")
-            .partitionBy("cell")
-            .option("compression", "zstd")
-            .parquet(cells_path)
-        )
-        assigned = read_ivf_assignments(spark, store, collection)
-
-    orphans = assigned.join(chunks.select("key"), "key", "left_anti")
-    removed = orphans.count()
-    if removed:
-        # dynamic partition overwrite: ONLY the cells that lost a chunk
-        # are rewritten — the untouched partitions' files stay in place
-        hot_cells = [r["cell"] for r in orphans.select("cell").distinct().collect()]
-        non_null = [c for c in hot_cells if c is not None]
-        cond = F.col("cell").isin(non_null)
-        if len(non_null) < len(hot_cells):  # null cell: isin never matches it
-            cond = cond | F.col("cell").isNull()
-        kept = (
-            assigned.filter(cond)
-            .join(chunks.select("key"), "key", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-        survivors = {r["cell"] for r in kept.select("cell").distinct().collect()}
-        if survivors:
-            (
-                kept.repartition("cell")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("cell")
-                .option("compression", "zstd")
-                .parquet(cells_path)
-            )
-        # dynamic overwrite only rewrites partitions PRESENT in `kept`:
-        # a cell whose every chunk was deleted has zero surviving rows,
-        # so its partition would never be rewritten and the stale rows
-        # would be re-reported as `removed` on every refresh — drop the
-        # emptied partition directories explicitly
-        for c in hot_cells:
-            if c not in survivors:
-                part = (
-                    "cell=__HIVE_DEFAULT_PARTITION__"
-                    if c is None
-                    else f"cell={c}"
-                )
-                shutil.rmtree(os.path.join(cells_path, part), ignore_errors=True)
-    return {"appended": appended, "removed": removed}
+    the cell partitions that contained them (dynamic partition
+    overwrite: the untouched partitions' files stay in place), and
+    remove the partition of a cell left with no row."""
+    return _refresh_cells(spark, store, collection, _IVF)
 
 
 def merge_ivf_assignments(
@@ -871,15 +1055,16 @@ def merge_ivf_assignments(
     epoch_id: int,
 ) -> int:
     """Epoch-staged streaming maintenance of the IVF assignment table —
-    the merge_dup_rate_state discipline applied to the vector index
-    (r13 verdict item 5: at 100 TB a full IVF retrain per crawl
-    increment is the textbook scale-killer; the index must ingest
-    increments like every other maintained artifact).
+    the merge_dup_rate_state discipline applied to the vector index: at
+    100 TB a full IVF retrain per crawl increment is the textbook
+    scale-killer, so the index ingests increments like every other
+    maintained artifact.
 
     Each batch of chunk rows (key, documentid, embedding) is assigned
     against the FROZEN centroids from the index metadata (one broadcast
-    Arrow matmul stage — the corpus never shuffles) and staged into the
-    touched cell partitions tagged with ``epoch_id``. Exactly-once under
+    Arrow matmul stage — the corpus never shuffles), with the soft fan-out
+    of :func:`build_ivf_index`, and staged into the touched cell
+    partitions tagged with ``epoch_id``. Exactly-once under
     foreachBatch retries: merging epoch E first drops rows already
     tagged E in the touched cells, then drops stored rows whose key
     re-arrives in this batch (same-embedding cross-epoch redelivery
@@ -896,70 +1081,7 @@ def merge_ivf_assignments(
     point. Retrain is a SIGNAL, not a side effect: read
     :func:`ivf_retrain_signal` after merging. Returns cell partitions
     touched."""
-    from dataingestionplayground_spark.operators.similarity import (
-        _assign_cells_matmul,
-    )
-
-    meta = _load_ivf_meta(store, collection)
-    cells_path = os.path.join(_ivf_dir(store, collection), "cells")
-    soft = int(meta.get("assign_top", 1)) > 1
-    rank_cols = ("cell_rank", "cell_1") if soft else ()
-    fresh = (
-        _assign_cells_matmul(
-            batch.select("key", "documentid", "embedding"),
-            _ivf_cents_df(spark, meta),
-            "key",
-            "embedding",
-            extra_cols=("documentid",),
-            # soft assignment is part of the frozen quantizer contract:
-            # the maintainer must store each key in the same assign_top
-            # cells (and the same boundary margin) the builder would,
-            # or maintained != rebuilt
-            keep=int(meta.get("assign_top", 1)),
-            emit_rank=soft,
-            soft_margin=meta.get("assign_margin"),
-        )
-        .select("key", "documentid", *rank_cols, "cell")
-        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
-        .localCheckpoint(eager=True)  # consumed for cells, keys, and the write
-    )
-    hot = [r["cell"] for r in fresh.select("cell").distinct().collect()]
-    if not hot:
-        return 0
-    existing = read_ivf_assignments(spark, store, collection)
-    if "epoch_id" not in existing.columns:
-        existing = existing.withColumn("epoch_id", F.lit(None).cast("long"))
-    non_null = [c for c in hot if c is not None]
-    cond = F.col("cell").isin(non_null)
-    if len(non_null) < len(hot):  # null cell: isin never matches it
-        cond = cond | F.col("cell").isNull()
-    out_cols = ["key", "documentid", *rank_cols, "epoch_id", "cell"]
-    for rc in rank_cols:
-        if rc not in existing.columns:  # pre-r15 soft table: no rank info
-            existing = existing.withColumn(rc, F.lit(None).cast("int"))
-    _declare_epoch(os.path.join(_ivf_dir(store, collection), _IVF_META), meta, out_cols)
-    kept = (
-        existing.filter(cond)
-        .filter(F.col("epoch_id").isNull() | (F.col("epoch_id") != int(epoch_id)))
-        .join(fresh.select("key"), "key", "left_anti")
-        .select(*out_cols)
-    )
-    merged = kept.unionByName(fresh.select(*out_cols)).localCheckpoint(
-        eager=True
-    )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.repartition("cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .option("compression", "zstd")
-            .parquet(cells_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return len(hot)
+    return _merge_cells(spark, store, collection, _IVF, batch, epoch_id)
 
 
 def compact_ivf_assignments(
@@ -972,48 +1094,11 @@ def compact_ivf_assignments(
     caveat: a replayed compacted-away epoch can no longer find its rows
     and would re-append them). Returns cell partitions rewritten.
 
-    r15 ADVICE: only cells that actually HOLD epoch-tagged rows are
-    rewritten (dynamic partition overwrite of the touched cells), and a
-    table with nothing staged short-circuits to 0 — repeated compaction
-    of a quiet index used to be a full-table rewrite every call."""
-    assigned = read_ivf_assignments(spark, store, collection)
-    if "epoch_id" not in assigned.columns:
-        return 0
-    staged_cells = [
-        r["cell"]
-        for r in assigned.filter(F.col("epoch_id").isNotNull())
-        .select("cell")
-        .distinct()
-        .collect()
-    ]
-    if not staged_cells:
-        return 0
-    non_null = [c for c in staged_cells if c is not None]
-    cond = F.col("cell").isin(non_null)
-    if len(non_null) < len(staged_cells):  # isin never matches NULL
-        cond = cond | F.col("cell").isNull()
-    rank_cols = [c for c in ("cell_rank", "cell_1") if c in assigned.columns]
-    merged = (
-        assigned.filter(cond)
-        .withColumn("epoch_id", F.lit(None).cast("long"))
-        .select("key", "documentid", *rank_cols, "epoch_id", "cell")
-        .localCheckpoint(eager=True)
-    )
-    cells = staged_cells
-    cells_path = os.path.join(_ivf_dir(store, collection), "cells")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.repartition("cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .option("compression", "zstd")
-            .parquet(cells_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return len(cells)
+    Only cells that actually HOLD epoch-tagged rows are rewritten
+    (dynamic partition overwrite of the touched cells), and a table
+    with nothing staged short-circuits to 0, so repeated compaction of
+    a quiet index is not a full-table rewrite."""
+    return _compact_cells(spark, store, collection, _IVF)
 
 
 def ivf_retrain_signal(
@@ -1031,59 +1116,7 @@ def ivf_retrain_signal(
     ADC/rerank cost concentrates — retrain (re-run build_ivf_index)
     instead of merging further. Reading the signal costs one
     assignment-table agg (cell counts), never a corpus scan."""
-    meta = _load_ivf_meta(store, collection)
-    counts = (
-        read_ivf_assignments(spark, store, collection)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .collect()
-    )
-    n_assigned = sum(r["n"] for r in counts)
-    max_cell = max((r["n"] for r in counts), default=0)
-    n_cells = int(meta["n_cells"])
-    max_share = (max_cell / n_assigned) if n_assigned else 0.0
-    skew = max_share * n_cells
-    return {
-        "n_cells": n_cells,
-        "n_assigned": n_assigned,
-        "max_cell_share": round(max_share, 6),
-        "skew": round(skew, 6),
-        "retrain": bool(skew >= skew_threshold),
-    }
-
-
-def ivfpq_retrain_signal(
-    spark: SparkSession,
-    store: CollectionStore,
-    collection: str,
-    skew_threshold: float = 2.0,
-) -> dict:
-    """The IVFADC twin of :func:`ivf_retrain_signal` (r15 ADVICE: the
-    CLI used to route ``signal --kind ivfpq`` to the IVF metadata and
-    report the wrong index's skew). Occupancy is read from the
-    maintained CODE table's coarse-cell column — one cell-count agg,
-    never a corpus scan. Skew here degrades both the probe balance AND
-    the residual codebook fit (residuals are trained per the original
-    cell geometry), so the same threshold semantics apply."""
-    meta = _load_ivfpq_meta(store, collection)
-    counts = (
-        read_ivfpq_codes(spark, store, collection)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .collect()
-    )
-    n_assigned = sum(r["n"] for r in counts)
-    max_cell = max((r["n"] for r in counts), default=0)
-    n_cells = int(meta["n_cells"])
-    max_share = (max_cell / n_assigned) if n_assigned else 0.0
-    skew = max_share * n_cells
-    return {
-        "n_cells": n_cells,
-        "n_assigned": n_assigned,
-        "max_cell_share": round(max_share, 6),
-        "skew": round(skew, 6),
-        "retrain": bool(skew >= skew_threshold),
-    }
+    return _retrain_signal(spark, store, collection, _IVF, skew_threshold)
 
 
 def ivf_search_indexed(
@@ -1105,7 +1138,7 @@ def ivf_search_indexed(
     through one folded map literal; full-precision vectors are then
     read for candidate keys only (join into the collection).
     Returns (query_id, key, score, rank)."""
-    meta = _load_ivf_meta(store, collection)
+    meta = _load_meta(store, collection, "ivf")
     qs = _QuerySet(queries, query_id, query_vec)
     if not qs.ids:
         return qs.empty(spark, "score")
@@ -1155,51 +1188,12 @@ def ivf_search_indexed(
 
 
 # ---------------------------------------------------------------------------
-# IVFPQ index: the third member — the IVFADC composition (Jégou et al.
-# 2011) as a PERSISTED artifact. Where the PQ index compresses the scan
-# and the IVF index prunes it, IVFPQ does both: the stored table holds
-# residual-PQ codes PARTITIONED BY COARSE CELL, so a probed search
-# partition-prunes to n_probe cells AND reads only int codes inside
-# them. Same lifecycle contract: centroids + residual codebook FROZEN
-# at build (ivfpq.json); refresh assigns/encodes only new chunks
-# against the frozen quantizers (anti-join); deletion rewrites only the
-# affected cell partitions.
+# IVFPQ index: the IVFADC composition (Jégou et al. 2011) as a PERSISTED
+# artifact. Where the PQ index compresses the scan and the IVF index
+# prunes it, IVFPQ does both: residual-PQ codes partitioned by coarse
+# cell, so a probed search partition-prunes to n_probe cells AND reads
+# only int codes inside them. Both quantizers are frozen at build.
 # ---------------------------------------------------------------------------
-
-_IVFPQ_META = "ivfpq.json"
-
-
-def _ivfpq_dir(store: CollectionStore, collection: str) -> str:
-    store._path(collection)
-    return os.path.join(store.base_path, "_indexes", collection, "ivfpq")
-
-
-def _residualize(
-    chunks: DataFrame, cents_df: DataFrame, dims: int, keep: int = 1
-) -> DataFrame:
-    """(key, documentid, cell, res) — L2 nearest coarse cell(s) (ties
-    to the lowest id) + the double-valued residual, via the broadcast
-    expression assigner shared with the batch operator. ``keep > 1`` is
-    the IVFADC face of soft assignment (r15): a key is residual-encoded
-    against EACH of its ``keep`` nearest cells (the residual, and so
-    the stored code, is per-cell)."""
-    from dataingestionplayground_spark.operators.similarity import _l2_assign
-
-    cents = cents_df.select("centroid_id", "cent_vec")
-    asg = _l2_assign(
-        chunks.select("key", "documentid", "embedding"),
-        cents,
-        "embedding",
-        "key",
-        dims,
-        keep=max(1, int(keep)),
-    )
-    ids = chunks.select("key", "documentid")
-    return (
-        asg.withColumnRenamed("__res", "res")
-        .withColumnRenamed("centroid_id", "cell")
-        .join(ids, "key")
-    )
 
 
 def build_ivfpq_index(
@@ -1221,46 +1215,22 @@ def build_ivfpq_index(
     centroid the codebook models a zero-centered ball, so the same m x k
     budget spends its precision on local structure.
 
-    ``assign_top`` (r15): soft coarse assignment — each chunk is
+    ``assign_top``: soft coarse assignment — each chunk is
     residual-encoded into its N nearest cells (a per-cell residual, so
     a per-cell code), the IVFADC twin of build_ivf_index's recall
     lever; the codebook itself trains on the argmax residuals only
     (keep=1), so assign_top changes WHERE codes live, never the frozen
     quantizers. Meta-recorded; merge/refresh maintain the same
     fan-out; search keeps each key's best ADC distance."""
-    from dataingestionplayground_spark.operators.similarity import (
-        _pq_codebook,
-        _seed_centroids,
-        kmeans_centroids,
-    )
-
     if dims % m != 0:
         raise ValueError(f"dims {dims} not divisible by m {m}")
     chunks = store.read(spark, collection).select("key", "documentid", "embedding")
-    if centroid_mode == "kmeans":
-        cents = kmeans_centroids(chunks, n_cells, kmeans_iters, "key", "embedding")
-    elif centroid_mode == "sampled":
-        from dataingestionplayground_spark.operators.similarity import (
-            sampled_kmeans_centroids,
-        )
-
-        cents = sampled_kmeans_centroids(
-            chunks, n_cells, kmeans_iters, "key", "embedding"
-        )
-    elif centroid_mode == "seed":
-        cents = _seed_centroids(chunks, "key", "embedding", n_cells)
-    else:
-        raise ValueError(
-            f"centroid_mode must be 'seed', 'kmeans', or 'sampled': {centroid_mode!r}"
-        )
+    cents = _coarse_centroids(chunks, n_cells, centroid_mode, kmeans_iters)
     coarse = [
         [float(x) for x in r["cent_vec"]]
         for r in cents.orderBy("centroid_id").collect()
     ]
-    cents_df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(coarse)], "centroid_id int, cent_vec array<float>"
-    )
-    residuals = _residualize(chunks, cents_df, dims)
+    residuals = _residualize(chunks, _ivf_cents_df(spark, {"coarse": coarse}), dims)
     codebook = _pq_codebook(residuals, m, n_centroids, dims, "key", "res", codebook_mode)
     cb_rows = codebook.collect()[0]["cents"]
     # kmeans refinement DROPS a seed that wins no vectors, and residual
@@ -1286,43 +1256,25 @@ def build_ivfpq_index(
         "coarse": coarse,
         "cents": [(c["s"], c["cid"], [float(x) for x in c["v"]]) for c in cb_rows],
     }
-    if meta["assign_top"] > 1:
-        # re-residualize with the soft fan-out for the STORED codes
-        # (codebook training above stays on the argmax residuals)
-        residuals = _residualize(chunks, cents_df, dims, keep=meta["assign_top"])
-    codes = pq_encode_with_codebook(
-        residuals, _codebook_df(spark, meta), m, dims, "key", "res",
-        extra_cols=("documentid", "cell"),
-    )
+    # the STORED codes take the soft fan-out; the codebook above trained
+    # on the argmax residuals
+    codes = _encode_ivfpq(spark, meta, chunks)
     meta["columns"] = [*_pq_columns(meta), "cell"]
-    idx = _ivfpq_dir(store, collection)
     (
         codes.repartition("cell")
         .write.mode("overwrite")
         .partitionBy("cell")
         .option("compression", "zstd")
-        .parquet(os.path.join(idx, "codes"))
+        .parquet(_cells_path(store, collection, _IVFPQ))
     )
-    _write_meta(os.path.join(idx, _IVFPQ_META), meta)
+    _write_meta(_meta_path(store, collection, "ivfpq"), meta)
     return meta
-
-
-def _load_ivfpq_meta(store: CollectionStore, collection: str) -> dict:
-    path = os.path.join(_ivfpq_dir(store, collection), _IVFPQ_META)
-    if not os.path.exists(path):
-        raise FileNotFoundError(
-            f"no IVFPQ index for collection {collection!r}; run build_ivfpq_index first"
-        )
-    with open(path) as f:
-        return json.load(f)
 
 
 def read_ivfpq_codes(
     spark: SparkSession, store: CollectionStore, collection: str
 ) -> DataFrame:
-    codes = os.path.join(_ivfpq_dir(store, collection), "codes")
-    meta = _load_ivfpq_meta(store, collection)
-    return _read_cell_table(spark, codes, meta, [*_pq_columns(meta), "cell"])
+    return _read_cells(spark, store, collection, _IVFPQ)
 
 
 def merge_ivfpq_codes(
@@ -1332,129 +1284,35 @@ def merge_ivfpq_codes(
     batch: DataFrame,
     epoch_id: int,
 ) -> int:
-    """Epoch-staged streaming maintenance for the IVFADC index — the
-    third member of the maintained-index family (IVF assignments, PQ
-    codes, and now their composition): each chunk batch is assigned to
-    its FROZEN coarse cell, residual-encoded against the FROZEN PQ
-    codebook, and epoch-staged into the touched cell partitions with
-    the merge_ivf_assignments discipline (same-epoch retries replace
-    their own rows; cross-epoch key redelivery upserts in place; base
-    rows from build_ivfpq_index read as epoch NULL and are never
-    replaced). Updates that MOVE a key across cells, and deletions,
-    reconcile through :func:`refresh_ivfpq_index`. Returns cell
-    partitions touched."""
-    meta = _load_ivfpq_meta(store, collection)
-    codes_path = os.path.join(_ivfpq_dir(store, collection), "codes")
-    cents_df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(meta["coarse"])],
-        "centroid_id int, cent_vec array<float>",
-    )
-    residuals = _residualize(
-        batch.select("key", "documentid", "embedding"), cents_df, meta["dims"],
-        keep=int(meta.get("assign_top", 1)),  # frozen-quantizer contract
-    )
-    code_cols = [f"code_{s}" for s in range(meta["m"])]
-    fresh = (
-        pq_encode_with_codebook(
-            residuals, _codebook_df(spark, meta), meta["m"], meta["dims"],
-            "key", "res", extra_cols=("documentid", "cell"),
-        )
-        .select("key", "documentid", *code_cols, "cell")
-        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
-        .localCheckpoint(eager=True)  # consumed for cells, keys, the write
-    )
-    hot = [r["cell"] for r in fresh.select("cell").distinct().collect()]
-    if not hot:
-        return 0
-    existing = read_ivfpq_codes(spark, store, collection)
-    if "epoch_id" not in existing.columns:
-        existing = existing.withColumn("epoch_id", F.lit(None).cast("long"))
-    non_null = [c for c in hot if c is not None]
-    cond = F.col("cell").isin(non_null)
-    if len(non_null) < len(hot):
-        cond = cond | F.col("cell").isNull()
-    out_cols = ["key", "documentid", *code_cols, "epoch_id", "cell"]
-    _declare_epoch(os.path.join(_ivfpq_dir(store, collection), _IVFPQ_META), meta, out_cols)
-    kept = (
-        existing.filter(cond)
-        .filter(F.col("epoch_id").isNull() | (F.col("epoch_id") != int(epoch_id)))
-        .join(fresh.select("key"), "key", "left_anti")
-        .select(*out_cols)
-    )
-    merged = kept.unionByName(fresh.select(*out_cols)).localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.repartition("cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .option("compression", "zstd")
-            .parquet(codes_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return len(hot)
+    """Epoch-staged streaming maintenance for the IVFADC index: each
+    chunk batch is assigned to its FROZEN coarse cell, residual-encoded
+    against the FROZEN PQ codebook, and epoch-staged into the touched
+    cell partitions by the same maintainer as
+    :func:`merge_ivf_assignments` (same-epoch retries replace their own
+    rows; cross-epoch key redelivery upserts in place; base rows from
+    build_ivfpq_index read as epoch NULL and are never replaced).
+    Updates that MOVE a key across cells, and deletions, reconcile
+    through :func:`refresh_ivfpq_index`. Returns cell partitions
+    touched."""
+    return _merge_cells(spark, store, collection, _IVFPQ, batch, epoch_id)
 
 
 def compact_ivfpq_codes(
     spark: SparkSession, store: CollectionStore, collection: str
 ) -> int:
     """Fold per-epoch IVFADC code rows down to epoch-NULL rows (codes
-    are facts keyed by chunk — the fold just drops the tag). Run only
-    AFTER the maintaining stream's checkpoint has committed those
-    epochs. Returns cell partitions rewritten.
-
-    r15 ADVICE: same touched-cells-only discipline as
-    :func:`compact_ivf_assignments` — nothing staged short-circuits to
-    0, and only cells holding epoch-tagged rows are rewritten."""
-    codes = read_ivfpq_codes(spark, store, collection)
-    if "epoch_id" not in codes.columns:
-        return 0
-    staged_cells = [
-        r["cell"]
-        for r in codes.filter(F.col("epoch_id").isNotNull())
-        .select("cell")
-        .distinct()
-        .collect()
-    ]
-    if not staged_cells:
-        return 0
-    non_null = [c for c in staged_cells if c is not None]
-    cond = F.col("cell").isin(non_null)
-    if len(non_null) < len(staged_cells):  # isin never matches NULL
-        cond = cond | F.col("cell").isNull()
-    merged = (
-        codes.filter(cond)
-        .withColumn("epoch_id", F.lit(None).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    cells = staged_cells
-    codes_path = os.path.join(_ivfpq_dir(store, collection), "codes")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.repartition("cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .option("compression", "zstd")
-            .parquet(codes_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return len(cells)
+    are facts keyed by chunk — the fold just drops the tag), rewriting
+    only the cells that hold epoch-tagged rows; nothing staged
+    short-circuits to 0. Run only AFTER the maintaining stream's
+    checkpoint has committed those epochs. Returns cell partitions
+    rewritten."""
+    return _compact_cells(spark, store, collection, _IVFPQ)
 
 
 def ivfpq_index_staleness(
     spark: SparkSession, store: CollectionStore, collection: str
 ) -> dict:
-    keys = store.read(spark, collection).select("key")
-    codes = read_ivfpq_codes(spark, store, collection).select("key")
-    return {
-        "missing": keys.join(codes, "key", "left_anti").count(),
-        "orphaned": codes.join(keys, "key", "left_anti").count(),
-    }
+    return _staleness(spark, store, collection, read_ivfpq_codes(spark, store, collection))
 
 
 def refresh_ivfpq_index(
@@ -1465,60 +1323,22 @@ def refresh_ivfpq_index(
     residual-encoded with the frozen codebook, and appended into their
     cell partitions; deleted chunks rewrite only the cells that held
     them (the IVF deletion pattern, emptied partitions dropped)."""
-    meta = _load_ivfpq_meta(store, collection)
-    idx = _ivfpq_dir(store, collection)
-    codes_path = os.path.join(idx, "codes")
-    chunks = store.read(spark, collection).select("key", "documentid", "embedding")
-    codes = read_ivfpq_codes(spark, store, collection)
+    return _refresh_cells(spark, store, collection, _IVFPQ)
 
-    new = chunks.join(codes.select("key"), "key", "left_anti")
-    appended = new.count()
-    if appended:
-        cents_df = spark.createDataFrame(
-            [(i, v) for i, v in enumerate(meta["coarse"])],
-            "centroid_id int, cent_vec array<float>",
-        )
-        residuals = _residualize(
-            new, cents_df, meta["dims"], keep=int(meta.get("assign_top", 1))
-        )
-        (
-            pq_encode_with_codebook(
-                residuals, _codebook_df(spark, meta), meta["m"], meta["dims"],
-                "key", "res", extra_cols=("documentid", "cell"),
-            )
-            .repartition("cell")
-            .write.mode("append")
-            .partitionBy("cell")
-            .option("compression", "zstd")
-            .parquet(codes_path)
-        )
-        codes = read_ivfpq_codes(spark, store, collection)
 
-    orphans = codes.join(chunks.select("key"), "key", "left_anti")
-    removed = orphans.count()
-    if removed:
-        hot_cells = [r["cell"] for r in orphans.select("cell").distinct().collect()]
-        kept = (
-            codes.filter(F.col("cell").isin(hot_cells))
-            .join(chunks.select("key"), "key", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-        survivors = {r["cell"] for r in kept.select("cell").distinct().collect()}
-        if survivors:
-            (
-                kept.repartition("cell")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("cell")
-                .option("compression", "zstd")
-                .parquet(codes_path)
-            )
-        for c in hot_cells:
-            if c not in survivors:
-                shutil.rmtree(
-                    os.path.join(codes_path, f"cell={c}"), ignore_errors=True
-                )
-    return {"appended": appended, "removed": removed}
+def ivfpq_retrain_signal(
+    spark: SparkSession,
+    store: CollectionStore,
+    collection: str,
+    skew_threshold: float = 2.0,
+) -> dict:
+    """The IVFADC twin of :func:`ivf_retrain_signal`, read from the IVFPQ
+    meta and the maintained CODE table's coarse-cell column — one
+    cell-count agg, never a corpus scan. Skew here degrades both the
+    probe balance AND the residual codebook fit (residuals are trained
+    per the original cell geometry), so the same threshold semantics
+    apply."""
+    return _retrain_signal(spark, store, collection, _IVFPQ, skew_threshold)
 
 
 def ivfpq_search_indexed(
@@ -1546,7 +1366,7 @@ def ivfpq_search_indexed(
     (query_id, key, adc_dist, rank)."""
     if rerank == "auto":
         rerank = 16 * k
-    meta = _load_ivfpq_meta(store, collection)
+    meta = _load_meta(store, collection, "ivfpq")
     m, dims = meta["m"], meta["dims"]
     dsub = dims // m
     C = np.asarray(meta["coarse"], dtype=np.float64)

@@ -4,9 +4,10 @@ whose inputs changed, never recompute the world.
 The 100 TB pattern: a day-partitioned aggregate table downstream of an
 event stream. A full rebuild scans everything; the incremental refresh
 scans ONLY the changed days' events and overwrites ONLY those partition
-directories (``partitionOverwriteMode=dynamic``), leaving every other
-partition byte-identical. Correctness contract: refresh(changed_days)
-after new data == full rebuild (tested).
+directories (dynamic partition overwrite, set as a writer option by
+:func:`_overwrite_partitions`), leaving every other partition
+byte-identical. Correctness contract: refresh(changed_days) after new
+data == full rebuild (tested).
 """
 
 from __future__ import annotations
@@ -15,6 +16,18 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def _overwrite_partitions(df: DataFrame, path: str, column: str) -> None:
+    """Write ``df`` into the table at ``path`` partitioned by ``column``,
+    replacing ONLY the partitions present in ``df``: dynamic partition
+    overwrite, set on the writer so the session conf is never changed.
+    Every maintained table here (and every per-epoch log) is rewritten
+    through this one primitive, so a retried batch rewrites exactly its
+    own partitions."""
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        column
+    ).parquet(path)
 
 
 def daily_event_rollup(events: DataFrame) -> DataFrame:
@@ -49,12 +62,7 @@ def refresh_rollup(
     fresh = daily_event_rollup(
         events.filter(F.to_date("ts").isin(days))
     ).filter(F.col("day").isin(days))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        fresh.write.mode("overwrite").partitionBy("day").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    _overwrite_partitions(fresh, path, "day")
     return len(days)
 
 
@@ -98,12 +106,7 @@ def refresh_distinct_rollup(
     fresh = daily_distinct_sketch_rollup(
         events.filter(F.to_date("ts").isin(days))
     ).filter(F.col("day").isin(days))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        fresh.write.mode("overwrite").partitionBy("day").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    _overwrite_partitions(fresh, path, "day")
     return len(days)
 
 
@@ -147,12 +150,7 @@ def refresh_topk_rollup(
     fresh = daily_topk_sketch_rollup(
         events.filter(F.to_date("ts").isin(days))
     ).filter(F.col("day").isin(days))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        fresh.write.mode("overwrite").partitionBy("day").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    _overwrite_partitions(fresh, path, "day")
     return len(days)
 
 
@@ -236,12 +234,7 @@ def merge_topk_rollup(
         merged = kept.unionByName(fresh).localCheckpoint(eager=True)
     else:
         merged = fresh
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("day").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    _overwrite_partitions(merged, path, "day")
     return len(days)
 
 
@@ -265,12 +258,7 @@ def compact_topk_rollup(spark: SparkSession, path: str) -> int:
         .localCheckpoint(eager=True)  # sever lineage from the path we rewrite
     )
     n = merged.count()
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("day").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    _overwrite_partitions(merged, path, "day")
     return n
 
 
@@ -317,12 +305,7 @@ def merge_distinct_rollup(spark: SparkSession, batch: DataFrame, path: str) -> i
         )
     else:
         merged = fresh
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("day").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    _overwrite_partitions(merged, path, "day")
     return len(days)
 
 
@@ -435,24 +418,17 @@ def merge_upsert(
         eager=True
     )
 
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(path)
-        # dynamic overwrite only replaces partitions PRESENT in the
-        # output: a bucket emptied by deletes would keep its stale
-        # directory. Overwrite those explicitly with a 0-row file so
-        # readers see the deletion (and the dir stays schema-readable).
-        present = {
-            r.bucket for r in merged.select("bucket").distinct().collect()
-        }
-        for b in touched:
-            if b not in present:
-                merged.drop("bucket").limit(0).write.mode("overwrite").parquet(
-                    f"{path}/bucket={b}"
-                )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    _overwrite_partitions(merged, path, "bucket")
+    # dynamic overwrite only replaces partitions PRESENT in the output:
+    # a bucket emptied by deletes would keep its stale directory.
+    # Overwrite those explicitly with a 0-row file so readers see the
+    # deletion (and the dir stays schema-readable).
+    present = {r.bucket for r in merged.select("bucket").distinct().collect()}
+    for b in touched:
+        if b not in present:
+            merged.drop("bucket").limit(0).write.mode("overwrite").parquet(
+                f"{path}/bucket={b}"
+            )
     return len(touched)
 
 
@@ -544,12 +520,7 @@ def merge_inverted_index(spark: SparkSession, docs_batch: DataFrame, path: str) 
         merged = merged.localCheckpoint(eager=True)
     else:
         merged = fresh.select("term", "bucket", "postings")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    _overwrite_partitions(merged, path, "bucket")
     return len(buckets)
 
 
@@ -796,12 +767,7 @@ def merge_scd2_dimension(
     # materialize BEFORE overwriting: the plan reads the very files the
     # dynamic overwrite replaces (same rule as merge_keyed_table)
     merged = canon.localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    _overwrite_partitions(merged, path, "bucket")
     return len(buckets)
 
 
@@ -895,12 +861,7 @@ def merge_decay_rollup(
         merged = kept.unionByName(fresh).localCheckpoint(eager=True)
     else:
         merged = fresh
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    _overwrite_partitions(merged, path, "bucket")
     return len(buckets)
 
 
@@ -932,12 +893,7 @@ def compact_decay_rollup(spark: SparkSession, path: str) -> int:
         .localCheckpoint(eager=True)
     )
     buckets = merged.select("bucket").distinct().count()
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    _overwrite_partitions(merged, path, "bucket")
     return buckets
 
 
@@ -1000,12 +956,7 @@ def merge_dup_rate_state(
         ).localCheckpoint(eager=True)
     else:
         merged = fresh.select("fingerprint", "cnt", "epoch_id", "source")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("source").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    _overwrite_partitions(merged, path, "source")
     return len(sources)
 
 
@@ -1044,12 +995,7 @@ def compact_dup_rate_state(spark: SparkSession, path: str) -> int:
         .localCheckpoint(eager=True)
     )
     sources = [r["source"] for r in merged.select("source").distinct().collect()]
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("source").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    _overwrite_partitions(merged, path, "source")
     return len(sources)
 
 
@@ -1077,17 +1023,6 @@ def compact_dup_rate_state(spark: SparkSession, path: str) -> int:
 # pipeline_release_gate over the same documents — pinned in
 # tests/test_r15_ship_stream.py.
 # ---------------------------------------------------------------------------
-
-
-def _ship_write_epoch(spark: SparkSession, df: DataFrame, path: str) -> None:
-    """Write one epoch's rows into ``path`` (partitioned by epoch_id,
-    dynamic overwrite — the retry-idempotence primitive)."""
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy("epoch_id").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 def ship_eval_reference(d: DataFrame) -> DataFrame:
@@ -1131,14 +1066,14 @@ def merge_ship_state(
         F.sum(F.col("quality").cast("decimal(38,6)")).alias("sum_q"),
         F.count("quality").cast("long").alias("n_q"),
     ).withColumn("epoch_id", ep)
-    _ship_write_epoch(spark, shape, f"{path}/shape")
+    _overwrite_partitions(shape, f"{path}/shape", "epoch_id")
 
     fp = (
         feats.groupBy("f")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         .withColumn("epoch_id", ep)
     )
-    _ship_write_epoch(spark, fp, f"{path}/fp")
+    _overwrite_partitions(fp, f"{path}/fp", "epoch_id")
 
     # stream-static gram probe: which eval grams does this batch's
     # TRAIN slice hit? (the eval side is tiny and broadcasts)
@@ -1149,7 +1084,7 @@ def merge_ship_state(
         .join(F.broadcast(eval_grams.select("g").distinct()), "g")
         .withColumn("epoch_id", ep)
     )
-    _ship_write_epoch(spark, hits, f"{path}/hits")
+    _overwrite_partitions(hits, f"{path}/hits", "epoch_id")
 
     # new-snapshot docs classified against the frozen old snapshot
     delta_docs = batch.filter(F.col("doc_id") % 5 == 4)
@@ -1162,7 +1097,7 @@ def merge_ship_state(
             .localCheckpoint(eager=True)
         )
         n_delta = cls.count()
-        _ship_write_epoch(spark, cls, f"{path}/delta")
+        _overwrite_partitions(cls, f"{path}/delta", "epoch_id")
     return {"delta_rows": n_delta}
 
 

@@ -17,6 +17,7 @@ from pyspark.sql import types as T
 
 from dataingestionplayground_spark.ingest.pipeline import build_chunk_records
 from dataingestionplayground_spark.ingest.store import CollectionStore
+from dataingestionplayground_spark.operators.incremental import _overwrite_partitions
 from dataingestionplayground_spark.sources.markdown import parse_markdown_df
 
 RAW_SCHEMA = T.StructType(
@@ -283,12 +284,7 @@ def stream_psi_monitor(
         out = psi_from_dense(dense).withColumn(
             "epoch_id", F.lit(int(epoch_id)).cast("long")
         )
-        prev = sess.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            out.write.mode("overwrite").partitionBy("epoch_id").parquet(log_path)
-        finally:
-            sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        _overwrite_partitions(out, log_path, "epoch_id")
 
     return (
         raw.writeStream.foreachBatch(process_batch)
@@ -489,12 +485,7 @@ def stream_lsh_screen(
             pairs = sess.createDataFrame([], "new_id long, old_id long")
             fresh = bands
         out = pairs.withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
-        prev = sess.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            out.write.mode("overwrite").partitionBy("epoch_id").parquet(log_path)
-        finally:
-            sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        _overwrite_partitions(out, log_path, "epoch_id")
         fresh.localCheckpoint(eager=True).write.mode("append").parquet(bands_path)
 
     return (
@@ -651,12 +642,7 @@ def stream_video_screen(
             )
             fresh = fps
         out = pairs.withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
-        prev = sess.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            out.write.mode("overwrite").partitionBy("epoch_id").parquet(log_path)
-        finally:
-            sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        _overwrite_partitions(out, log_path, "epoch_id")
         fresh.localCheckpoint(eager=True).write.mode("append").parquet(fps_path)
 
     return (
@@ -859,12 +845,7 @@ def stream_embedding_drift(
             .unionByName(sums.select("cell", "pos", "s", "n"))
             .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
         )
-        prev = sess.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            out.write.mode("overwrite").partitionBy("epoch_id").parquet(log_path)
-        finally:
-            sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        _overwrite_partitions(out, log_path, "epoch_id")
 
     raw = spark.readStream.schema(VEC_SCHEMA).json(watch_dir)
     return (

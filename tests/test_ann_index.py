@@ -588,3 +588,153 @@ def test_indexed_search_job_budget(spark, md_elements, tmp_path):
         assert 0 < n_jobs <= SEARCH_JOB_BOUND[kind], (kind, n_jobs)
         # no RDD-backed side frame anywhere in the plan
         assert "ExistingRDD" not in physical_plan(hits), kind
+
+
+# Index maintenance: the merge / replay / compact / refresh-after-delete
+# sequence over one fixture, shared by the session-conf and job-budget
+# tests below.
+def _maintenance_steps(spark, md_elements, tmp_path, kind):
+    """Build a ``kind`` index over the first four fixture docs, ingest
+    the rest as two increments, and return the maintenance steps as
+    (label, thunk) pairs: merge epoch 1, its replay, merge epoch 2,
+    compact, then a document delete followed by refresh."""
+    from dataingestionplayground_spark.ingest import ann_index as A
+
+    build, merge, compact, refresh = {
+        "ivf": (
+            lambda store: A.build_ivf_index(spark, store, "m", n_cells=4),
+            A.merge_ivf_assignments, A.compact_ivf_assignments, A.refresh_ivf_index,
+        ),
+        "ivfpq": (
+            lambda store: A.build_ivfpq_index(
+                spark, store, "m", n_cells=4, m=M, n_centroids=K, dims=DIMS
+            ),
+            A.merge_ivfpq_codes, A.compact_ivfpq_codes, A.refresh_ivfpq_index,
+        ),
+        "pq": (
+            lambda store: A.build_pq_index(
+                spark, store, "m", m=M, n_centroids=K, dims=DIMS, codebook_mode="seed"
+            ),
+            A.merge_pq_codes, A.compact_pq_codes, A.refresh_pq_index,
+        ),
+    }[kind]
+    ids = sorted(r.doc_id for r in md_elements.select("doc_id").distinct().collect())
+    store = CollectionStore(str(tmp_path))
+    ingest_corpus(
+        md_elements.filter(F.col("doc_id").isin(ids[:4])), store, "m",
+        max_tokens=8, overlap=0,
+    )
+    build(store)
+    batches = []
+    for part in (ids[4:5], ids[5:]):
+        ingest_corpus(
+            md_elements.filter(F.col("doc_id").isin(part)), store, "m",
+            max_tokens=8, overlap=0, incremental=True,
+        )
+        batches.append(
+            store.read(spark, "m")
+            .filter(F.col("documentid").isin(part))
+            .select("key", "documentid", "embedding")
+        )
+
+    def delete_then_refresh():
+        store.delete_documents(spark, "m", [ids[0]])
+        return refresh(spark, store, "m")
+
+    return store, [
+        ("merge", lambda: merge(spark, store, "m", batches[0], 1)),
+        ("replay", lambda: merge(spark, store, "m", batches[0], 1)),
+        ("merge2", lambda: merge(spark, store, "m", batches[1], 2)),
+        ("compact", lambda: compact(spark, store, "m")),
+        ("refresh", delete_then_refresh),
+    ]
+
+
+@pytest.mark.parametrize("kind", ["ivf", "ivfpq", "pq"])
+def test_index_maintenance_leaves_session_conf_alone(
+    spark, md_elements, tmp_path, monkeypatch, kind
+):
+    """Dynamic partition overwrite is a writer option: no maintenance
+    call sets ``partitionOverwriteMode`` (or anything else about it) on
+    the shared session, where a concurrent writer would inherit it."""
+    _, steps = _maintenance_steps(spark, md_elements, tmp_path, kind)
+    conf = spark.conf
+    real_set = conf.set
+    keys: list[str] = []
+
+    def recording_set(key, value):
+        keys.append(key)
+        return real_set(key, value)
+
+    monkeypatch.setattr(conf, "set", recording_set)
+    for _, step in steps:
+        step()
+    monkeypatch.undo()
+    assert not [k for k in keys if "partitionOverwriteMode" in k], keys
+
+
+# Spark jobs each maintenance step starts on the fixture above, counted
+# with getJobIdsForGroup in this test's session (local[8], AQE on): a
+# merge (and its replay) runs the encode checkpoint, the touched-cell
+# collect, the merged checkpoint and the partitioned write; compact
+# collects the staged cells, checkpoints and writes; the refresh step
+# includes the store's document delete, both anti-join counts and the
+# rewrite of the cells that held the deleted document.
+MAINTENANCE_JOB_BOUND = {
+    "ivf": {"merge": 10, "replay": 10, "merge2": 10, "compact": 5, "refresh": 22},
+    "ivfpq": {"merge": 15, "replay": 15, "merge2": 15, "compact": 5, "refresh": 22},
+}
+
+
+@pytest.mark.parametrize("kind", ["ivf", "ivfpq"])
+def test_index_maintenance_job_budget(spark, md_elements, tmp_path, kind):
+    _, steps = _maintenance_steps(spark, md_elements, tmp_path, kind)
+    sc = spark.sparkContext
+    counts = {}
+    for label, step in steps:
+        group = f"test-maintenance-jobs-{kind}-{label}"
+        sc.setJobGroup(group, group)
+        try:
+            step()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        counts[label] = len(sc.statusTracker().getJobIdsForGroup(group))
+    bound = MAINTENANCE_JOB_BOUND[kind]
+    assert all(0 < counts[s] <= bound[s] for s in bound), (counts, bound)
+
+
+def test_ensure_index_calls_build_and_refresh_through_module(
+    spark, md_elements, tmp_path, monkeypatch
+):
+    """``ensure_index`` looks ``build_*``/``refresh_*`` up on the module
+    at call time, so a wrapper installed there (the benchmark tracer's
+    spans) sees every call."""
+    from dataingestionplayground_spark.ingest import ann_index as A
+
+    calls: list[str] = []
+
+    def counting(name):
+        real = getattr(A, name)
+
+        def wrapper(*args, **kwargs):
+            calls.append(name)
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(A, name, wrapper)
+
+    for name in ("build_ivf_index", "refresh_ivf_index", "refresh_pq_index"):
+        counting(name)
+    ids = sorted(r.doc_id for r in md_elements.select("doc_id").distinct().collect())
+    store = CollectionStore(str(tmp_path))
+    ingest_corpus(md_elements.filter(F.col("doc_id").isin(ids[:4])), store, "d")
+    assert A.ensure_index(spark, store, "d", "ivf", n_cells=4)["built"]
+    assert A.ensure_index(
+        spark, store, "d", "pq", m=M, n_centroids=K, codebook_mode="seed"
+    )["built"]
+    assert calls == ["build_ivf_index"]
+    ingest_corpus(
+        md_elements.filter(F.col("doc_id").isin(ids[4:])), store, "d", incremental=True
+    )
+    assert A.ensure_index(spark, store, "d", "ivf")["appended"] > 0
+    assert A.ensure_index(spark, store, "d", "pq")["appended"] > 0
+    assert calls == ["build_ivf_index", "refresh_ivf_index", "refresh_pq_index"]
