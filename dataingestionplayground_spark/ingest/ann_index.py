@@ -45,25 +45,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dataingestionplayground_spark.functions import vector as V
+from dataingestionplayground_spark.functions.literal import folded_literal, folded_map
 from dataingestionplayground_spark.ingest.store import CollectionStore
 from dataingestionplayground_spark.operators.similarity import (
     _assign_cells_matmul,
     _l2_assign,
     _pq_codebook,
-    _seed_centroids,
-    kmeans_centroids,
+    _train_centroids,
     pq_encode_with_codebook,
-    sampled_kmeans_centroids,
-)
-
-_CENTS_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("s", T.IntegerType(), False),
-            T.StructField("cid", T.IntegerType(), False),
-            T.StructField("v", T.ArrayType(T.DoubleType()), False),
-        ]
-    )
 )
 
 
@@ -71,30 +60,10 @@ _CENTS_SCHEMA = T.ArrayType(
 # Query side of the indexed searches. The query set is collected on the
 # driver ONCE and everything derived from it (probe cells, ADC lookup
 # tables, the vectors for exact rescoring) enters the plan as a folded
-# literal — never as a side DataFrame: a local-list createDataFrame is
-# RDD-backed, so each broadcast of one ran a Spark job of its own.
+# literal (``functions.literal``) — never as a side DataFrame: a
+# local-list createDataFrame is RDD-backed, so each broadcast of one ran a
+# Spark job of its own.
 # ---------------------------------------------------------------------------
-
-
-def _folded_literal(value, dtype: T.DataType) -> Column:
-    """``value`` as ONE plan literal of type ``dtype``: a JSON string
-    parsed by ``from_json``, which constant folding evaluates once at
-    planning time. (A ``F.lit`` per element would instead grow the plan,
-    and its analysis time, with the element count.) ``default=str``
-    passes date-typed ids as the ISO strings ``from_json`` parses."""
-    return F.from_json(
-        F.lit(json.dumps(value, default=str)), dtype, {"mode": "FAILFAST"}
-    )
-
-
-def _folded_map(entries: dict, key_type: T.DataType, value_type: T.DataType) -> Column:
-    """A folded map literal (see :func:`_folded_literal`)."""
-    kv = T.ArrayType(
-        T.StructType([T.StructField("k", key_type), T.StructField("v", value_type)])
-    )
-    return F.map_from_entries(
-        _folded_literal([{"k": k, "v": v} for k, v in entries.items()], kv)
-    )
 
 
 class _QuerySet:
@@ -144,7 +113,7 @@ class _QuerySet:
         key, embedding); each row's query vector is looked up in one map
         literal keyed by query id. Returns (query_id, key, score, rank)."""
         qid, qvec = self.query_id, self.query_vec
-        vectors = _folded_map(dict(zip(self.ids, self.vecs)), self.id_type, self.vec_type)
+        vectors = folded_map(dict(zip(self.ids, self.vecs)), self.id_type, self.vec_type)
         scored = cand.withColumn(qvec, F.element_at(vectors, F.col(qid))).withColumn(
             "score", V.cosine_similarity("embedding", qvec)
         )
@@ -306,11 +275,6 @@ def _embedding_dims(spark: SparkSession, store: CollectionStore, collection: str
 # ---------------------------------------------------------------------------
 
 
-def _codebook_df(spark: SparkSession, meta: dict) -> DataFrame:
-    row = [tuple(c) for c in meta["cents"]]
-    return spark.createDataFrame([(row,)], T.StructType([T.StructField("cents", _CENTS_SCHEMA)]))
-
-
 def _auto_centroids(n_rows: int) -> int:
     """Codebook-resolution scaling policy: a FROZEN fixed-k codebook's
     ADC code space saturates as the corpus grows — driver-measured raw
@@ -338,8 +302,9 @@ def build_pq_index(
 ) -> dict:
     """Derive the codebook from the collection's current chunks, encode
     every chunk, persist codes + frozen codebook. Returns the metadata
-    dict. Encoding is the zero-shuffle broadcast-codebook expression;
-    the only cluster work is one corpus scan + the parquet write.
+    dict. The codebook is trained driver-held (one seed fetch, then for
+    ``'kmeans'`` one assign-and-aggregate corpus scan) and encoding is
+    the zero-shuffle kernel stage against it; then the parquet write.
 
     Defaults: 8 subspaces x 16 kmeans-refined centroids — a 4x8 seeded
     codebook carries 12 bits/vector, too coarse for a usable ADC
@@ -365,11 +330,7 @@ def build_pq_index(
         n_centroids = _auto_centroids(chunks.count())
         policy = "auto"
     n_centroids = int(n_centroids)
-    codebook = _pq_codebook(chunks, m, n_centroids, dims, "key", "embedding", codebook_mode)
-    cents = [
-        {"s": c["s"], "cid": c["cid"], "v": [float(x) for x in c["v"]]}
-        for c in codebook.collect()[0]["cents"]
-    ]
+    cents = _pq_codebook(chunks, m, n_centroids, dims, "key", "embedding", codebook_mode)
     # seeds come from the k lowest-id vectors: a collection smaller than
     # n_centroids underfills the codebook, and the ADC LUT stride must
     # match the ACTUAL per-subspace centroid count or lookups misalign
@@ -379,7 +340,7 @@ def build_pq_index(
         "n_centroids": effective,
         "dims": dims,
         "codebook_mode": codebook_mode,
-        "cents": [(c["s"], c["cid"], c["v"]) for c in cents],
+        "cents": cents,
     }
     if policy:
         # the resolved k is recorded so a later reader can tell whether
@@ -387,8 +348,7 @@ def build_pq_index(
         meta["n_centroids_policy"] = policy
     idx = _index_dir(store, collection, "pq")
     codes = pq_encode_with_codebook(
-        chunks, _codebook_df(spark, meta), m, dims, "key", "embedding",
-        extra_cols=("documentid",),
+        chunks, cents, m, dims, "key", "embedding", extra_cols=("documentid",)
     )
     (
         codes.repartition("documentid")
@@ -456,7 +416,7 @@ def merge_pq_codes(
     meta = _load_meta(store, collection, "pq")
     codes = pq_encode_with_codebook(
         batch.select("key", "documentid", "embedding"),
-        _codebook_df(spark, meta),
+        meta["cents"],
         meta["m"],
         meta["dims"],
         "key",
@@ -522,7 +482,7 @@ def refresh_pq_index(spark: SparkSession, store: CollectionStore, collection: st
     if appended:
         (
             pq_encode_with_codebook(
-                new, _codebook_df(spark, meta), m, dims, "key", "embedding",
+                new, meta["cents"], m, dims, "key", "embedding",
                 extra_cols=("documentid",),
             )
             .repartition("documentid")
@@ -602,7 +562,7 @@ def pq_search_indexed(
     luts = _pq_luts(meta, qs.matrix()).tolist()
     rows = [{"q": q, "lut": lut} for q, lut in zip(qs.ids, luts)]
     # every query scores every code row: explode the one LUT literal
-    lut_rows = _folded_literal(rows, T.ArrayType(qs.row_type("lut", T.ArrayType(T.DoubleType()))))
+    lut_rows = folded_literal(rows, T.ArrayType(qs.row_type("lut", T.ArrayType(T.DoubleType()))))
     scored = read_pq_codes(spark, store, collection).withColumn("__l", F.explode(lut_rows))
     offs = [s * meta["n_centroids"] for s in range(meta["m"])]
     adc = _adc_topk(scored, query_id, offs, max(k, rerank) if rerank else k, best_per_key=False)
@@ -625,33 +585,18 @@ def pq_search_indexed(
 
 def _coarse_centroids(
     chunks: DataFrame, n_cells: int, centroid_mode: str, kmeans_iters: int
-) -> DataFrame:
-    """(centroid_id, cent_vec) coarse centroids: ``'seed'`` takes the
-    lowest-key chunks; ``'kmeans'`` refines them with the deterministic
-    decimal-routed Lloyd iterations; ``'sampled'`` converges on a
-    bounded driver-side sample first and spends the distributed
-    iterations refining."""
-    if centroid_mode == "kmeans":
-        return kmeans_centroids(chunks, n_cells, kmeans_iters, "key", "embedding")
-    if centroid_mode == "sampled":
-        return sampled_kmeans_centroids(chunks, n_cells, kmeans_iters, "key", "embedding")
-    if centroid_mode == "seed":
-        return _seed_centroids(chunks, "key", "embedding", n_cells)
-    raise ValueError(
-        f"centroid_mode must be 'seed', 'kmeans', or 'sampled': {centroid_mode!r}"
-    )
+) -> list:
+    """Coarse centroid vectors, trained driver-held (row i is cell i):
+    ``'seed'`` takes the lowest-key chunks; ``'kmeans'`` refines them
+    with the deterministic decimal-routed Lloyd iterations;
+    ``'sampled'`` converges on a bounded driver-side sample first and
+    spends the distributed iterations refining. A k-means cell that
+    wins no chunk is dropped, so there can be fewer than ``n_cells``."""
+    cents = _train_centroids(chunks, n_cells, centroid_mode, kmeans_iters, "key", "embedding")
+    return [v for _, v in cents]
 
 
-def _ivf_cents_df(spark: SparkSession, meta: dict) -> DataFrame:
-    """The frozen coarse centroids as a (centroid_id, cent_vec) frame:
-    an IVF meta's ``cents``, an IVFPQ meta's ``coarse`` (its ``cents``
-    is the residual codebook)."""
-    vectors = meta["coarse"] if "coarse" in meta else meta["cents"]
-    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vectors)]
-    return spark.createDataFrame(rows, "centroid_id int, cent_vec array<float>")
-
-
-def _assign_ivf(spark: SparkSession, meta: dict, chunks: DataFrame) -> DataFrame:
+def _assign_ivf(meta: dict, chunks: DataFrame) -> DataFrame:
     """IVF table rows (key, documentid[, cell_rank, cell_1], cell) for
     chunk rows: each chunk in its argmax-cosine cell, with soft
     assignment (``assign_top > 1``) also in its next-nearest cells
@@ -662,48 +607,43 @@ def _assign_ivf(spark: SparkSession, meta: dict, chunks: DataFrame) -> DataFrame
     top = int(meta.get("assign_top", 1))
     soft = top > 1
     return _assign_cells_matmul(
-        chunks, _ivf_cents_df(spark, meta), "key", "embedding",
+        chunks, meta["cents"], "key", "embedding",
         extra_cols=("documentid",), keep=top, emit_rank=soft,
         soft_margin=meta.get("assign_margin"),
     ).select("key", "documentid", *(("cell_rank", "cell_1") if soft else ()), "cell")
 
 
 def _residualize(
-    chunks: DataFrame, cents_df: DataFrame, dims: int, keep: int = 1
+    chunks: DataFrame, coarse: list, dims: int, keep: int = 1
 ) -> DataFrame:
-    """(key, documentid, cell, res) — L2 nearest coarse cell(s) (ties
-    to the lowest id) + the double-valued residual, via the broadcast
-    expression assigner shared with the batch operator. ``keep > 1`` is
-    the IVFADC face of soft assignment: a key is residual-encoded
+    """(key, documentid, cell, res) — L2 nearest coarse cell(s) among
+    the ``coarse`` centroid vectors (ties to the lowest id) + the
+    double-valued residual, via the in-row expression assigner shared
+    with the batch operator. ``keep > 1`` is the IVFADC face of soft
+    assignment: a key is residual-encoded
     against EACH of its ``keep`` nearest cells (the residual, and so
     the stored code, is per-cell)."""
-    cents = cents_df.select("centroid_id", "cent_vec")
     asg = _l2_assign(
-        chunks.select("key", "documentid", "embedding"),
-        cents,
+        chunks,
+        coarse,
         "embedding",
         "key",
         dims,
         keep=max(1, int(keep)),
+        extra_cols=("documentid",),
     )
-    ids = chunks.select("key", "documentid")
-    return (
-        asg.withColumnRenamed("__res", "res")
-        .withColumnRenamed("centroid_id", "cell")
-        .join(ids, "key")
-    )
+    return asg.withColumnRenamed("__res", "res").withColumnRenamed("centroid_id", "cell")
 
 
-def _encode_ivfpq(spark: SparkSession, meta: dict, chunks: DataFrame) -> DataFrame:
+def _encode_ivfpq(meta: dict, chunks: DataFrame) -> DataFrame:
     """IVFPQ table rows (key, documentid, code_0..m-1, cell) for chunk
     rows: each chunk's residual against its ``assign_top`` nearest
     frozen coarse cells, PQ-encoded with the frozen residual codebook."""
     residuals = _residualize(
-        chunks, _ivf_cents_df(spark, meta), meta["dims"],
-        keep=int(meta.get("assign_top", 1)),
+        chunks, meta["coarse"], meta["dims"], keep=int(meta.get("assign_top", 1))
     )
     return pq_encode_with_codebook(
-        residuals, _codebook_df(spark, meta), meta["m"], meta["dims"],
+        residuals, meta["cents"], meta["m"], meta["dims"],
         "key", "res", extra_cols=("documentid", "cell"),
     ).select(*_pq_columns(meta), "cell")
 
@@ -718,7 +658,7 @@ class _CellKind(NamedTuple):
     name: str
     table: str
     legacy_columns: Callable[[dict], list[str]]
-    encode: Callable[[SparkSession, dict, DataFrame], DataFrame]
+    encode: Callable[[dict, DataFrame], DataFrame]
 
 
 _IVF = _CellKind("ivf", "cells", lambda meta: ["key", "documentid", "cell"], _assign_ivf)
@@ -781,7 +721,7 @@ def _merge_cells(
     :func:`merge_ivf_assignments`). Returns cell partitions touched."""
     meta = _load_meta(store, collection, kind.name)
     fresh = (
-        kind.encode(spark, meta, batch.select("key", "documentid", "embedding"))
+        kind.encode(meta, batch.select("key", "documentid", "embedding"))
         .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
         .localCheckpoint(eager=True)  # consumed for cells, keys, and the write
     )
@@ -846,7 +786,7 @@ def _refresh_cells(
     new = chunks.join(table.select("key"), "key", "left_anti")
     appended = new.count()
     if appended:
-        _write_cells(kind.encode(spark, meta, new), path, "append")
+        _write_cells(kind.encode(meta, new), path, "append")
         table = _read_cells(spark, store, collection, kind)
 
     orphans = table.join(chunks.select("key"), "key", "left_anti")
@@ -923,8 +863,13 @@ def build_ivf_index(
     bounded driver-side sample first and spends the distributed
     iterations refining), assign every chunk to its argmax-cosine cell
     with the Arrow matmul stage, and persist the assignment partitioned
-    BY CELL. One corpus scan per kmeans iteration + one partitioned
-    write — all one-time build cost.
+    BY CELL. Training is driver-held: one seed fetch, then per kmeans
+    iteration one corpus scan and one (cell, pos) aggregate whose
+    n_cells x dims means come back as plain arrays; the meta's
+    ``n_cells`` is the number of centroids trained (a k-means cell that
+    wins no chunk is dropped) and the assignment reads the centroid
+    vectors from the meta. Then one partitioned write — all one-time
+    build cost.
 
     kmeans centroids matter here: raw lowest-key seeds land inside the
     corpus's natural clusters unevenly (the bench embeddings are
@@ -957,18 +902,15 @@ def build_ivf_index(
     chunks = store.read(spark, collection).select("key", "documentid", "embedding")
     cents = _coarse_centroids(chunks, n_cells, centroid_mode, kmeans_iters)
     meta = {
-        "n_cells": cents.count(),
+        "n_cells": len(cents),
         "centroid_mode": centroid_mode,
         "assign_top": max(1, int(assign_top)),
         "assign_margin": (
             float(assign_margin) if assign_margin is not None else None
         ),
-        "cents": [
-            [float(x) for x in r["cent_vec"]]
-            for r in cents.orderBy("centroid_id").collect()
-        ],
+        "cents": cents,
     }
-    assigned = _assign_ivf(spark, meta, chunks)
+    assigned = _assign_ivf(meta, chunks)
     # the column set lets readers declare the table's schema
     meta["columns"] = assigned.columns
     (
@@ -1016,7 +958,8 @@ def ensure_index(
         _load_meta(store, collection, kind)
     except FileNotFoundError:
         if kind in ("pq", "ivfpq"):
-            build_kwargs.setdefault("dims", _embedding_dims(spark, store, collection))
+            if "dims" not in build_kwargs:  # the probe is a Spark job
+                build_kwargs["dims"] = _embedding_dims(spark, store, collection)
             build = build_pq_index if kind == "pq" else build_ivfpq_index
             build(spark, store, collection, **build_kwargs)
         else:
@@ -1158,7 +1101,7 @@ def ivf_search_indexed(
     assigned = read_ivf_assignments(spark, store, collection).filter(
         F.col("cell").isin(sorted(by_cell))  # literal -> static partition pruning
     )
-    probes = _folded_map(
+    probes = folded_map(
         by_cell, T.IntegerType(), T.ArrayType(qs.row_type("p", T.ArrayType(T.IntegerType())))
     )
     cand = assigned.withColumn("__p", F.explode(F.element_at(probes, F.col("cell"))))
@@ -1225,14 +1168,9 @@ def build_ivfpq_index(
     if dims % m != 0:
         raise ValueError(f"dims {dims} not divisible by m {m}")
     chunks = store.read(spark, collection).select("key", "documentid", "embedding")
-    cents = _coarse_centroids(chunks, n_cells, centroid_mode, kmeans_iters)
-    coarse = [
-        [float(x) for x in r["cent_vec"]]
-        for r in cents.orderBy("centroid_id").collect()
-    ]
-    residuals = _residualize(chunks, _ivf_cents_df(spark, {"coarse": coarse}), dims)
-    codebook = _pq_codebook(residuals, m, n_centroids, dims, "key", "res", codebook_mode)
-    cb_rows = codebook.collect()[0]["cents"]
+    coarse = _coarse_centroids(chunks, n_cells, centroid_mode, kmeans_iters)
+    residuals = _residualize(chunks, coarse, dims)
+    cb_rows = _pq_codebook(residuals, m, n_centroids, dims, "key", "res", codebook_mode)
     # kmeans refinement DROPS a seed that wins no vectors, and residual
     # distributions (concentrated near zero) make that common — so the
     # codebook can be RAGGED across subspaces. Codes index into each
@@ -1240,8 +1178,8 @@ def build_ivfpq_index(
     # filtered array_position produces), so search must address the flat
     # LUT with per-subspace cumulative offsets, not a fixed m x k stride.
     sub_counts = [0] * m
-    for c in cb_rows:
-        sub_counts[int(c["s"])] += 1
+    for s, _, _ in cb_rows:
+        sub_counts[s] += 1
     if any(n == 0 for n in sub_counts):
         raise ValueError(f"subspace with empty codebook: counts {sub_counts}")
     meta = {
@@ -1254,11 +1192,11 @@ def build_ivfpq_index(
         "codebook_mode": codebook_mode,
         "assign_top": max(1, int(assign_top)),
         "coarse": coarse,
-        "cents": [(c["s"], c["cid"], [float(x) for x in c["v"]]) for c in cb_rows],
+        "cents": cb_rows,
     }
     # the STORED codes take the soft fan-out; the codebook above trained
     # on the argmax residuals
-    codes = _encode_ivfpq(spark, meta, chunks)
+    codes = _encode_ivfpq(meta, chunks)
     meta["columns"] = [*_pq_columns(meta), "cell"]
     (
         codes.repartition("cell")
@@ -1397,7 +1335,7 @@ def ivfpq_search_indexed(
                 sub = qres[s * dsub : (s + 1) * dsub]
                 lut.extend(((cb[s] - sub[None, :]) ** 2).sum(axis=1).tolist())
             by_cell.setdefault(c, []).append({"q": qid, "lut": lut})
-    luts = _folded_map(
+    luts = folded_map(
         by_cell, T.IntegerType(), T.ArrayType(qs.row_type("lut", T.ArrayType(T.DoubleType())))
     )
     scored = (

@@ -3,7 +3,8 @@
 The reference's search: embed the query string, cosine distance against
 the collection, return top-k (k=1 hardcoded) with score
 (``VectorStoreCommands.cs:83-139``). Here: the query embeds driver-side
-(one string), enters the plan as a literal array, and the score is a
+(one string), enters the plan as ONE folded literal (not one literal per
+element, whose analysis cost grows with the dims), and the score is a
 Catalyst expression — one scan, TakeOrdered top-k, no shuffle of the
 corpus. Batched multi-query search reuses operators.similarity.
 """
@@ -12,7 +13,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from dataingestionplayground_spark.functions.literal import folded_literal
 from dataingestionplayground_spark.functions.vector import cosine_similarity
 from dataingestionplayground_spark.ingest.embed import hash_embed
 from dataingestionplayground_spark.ingest.store import CollectionStore
@@ -30,9 +33,14 @@ def search_collection(
     documentid, score), best first."""
     qvec = embed(query)
     chunks = store.read(spark, collection)
-    scored = chunks.withColumn(
-        "query_vec", F.array(*[F.lit(float(x)).cast("float") for x in qvec])
-    ).withColumn("score", cosine_similarity("embedding", "query_vec"))
+    # doubles, then cast: each element rounds to float exactly as a
+    # per-element float cast of the double would
+    query_vec = folded_literal(
+        [float(x) for x in qvec], T.ArrayType(T.DoubleType())
+    ).cast("array<float>")
+    scored = chunks.withColumn("query_vec", query_vec).withColumn(
+        "score", cosine_similarity("embedding", "query_vec")
+    )
     return (
         scored.orderBy(F.desc("score"), F.asc("key"))
         .select("key", "content", "context", "documentid", "score")

@@ -92,7 +92,7 @@ def embedding_drift(
     from dataingestionplayground_spark.functions import vector as V
     from dataingestionplayground_spark.operators.similarity import (
         _assign_cells_matmul,
-        _seed_centroids,
+        _seed_vectors,
     )
 
     ref = ref.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
@@ -100,7 +100,7 @@ def embedding_drift(
     both = ref.withColumn("side", F.lit(0)).unionByName(
         cur.withColumn("side", F.lit(1))
     )
-    cents = _seed_centroids(ref, "vec_id", "embedding", n_cells)
+    cents = _seed_vectors(ref, "vec_id", "embedding", n_cells)
     assigned = _assign_cells_matmul(
         both, cents, "vec_id", "embedding", extra_cols=("side",)
     )
@@ -165,7 +165,7 @@ def embedding_drift_by_group(
     from dataingestionplayground_spark.functions import vector as V
     from dataingestionplayground_spark.operators.similarity import (
         _assign_cells_matmul,
-        _seed_centroids,
+        _seed_vectors,
     )
 
     ref = ref.select(
@@ -181,7 +181,7 @@ def embedding_drift_by_group(
     both = ref.withColumn("side", F.lit(0)).unionByName(
         cur.withColumn("side", F.lit(1))
     )
-    cents = _seed_centroids(
+    cents = _seed_vectors(
         ref.select("vec_id", "embedding"), "vec_id", "embedding", n_cells
     )
     assigned = _assign_cells_matmul(

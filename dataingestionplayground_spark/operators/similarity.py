@@ -19,8 +19,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dataingestionplayground_spark.functions import vector as V
+from dataingestionplayground_spark.functions.literal import folded_literal
 
 
 def knn_brute_force(
@@ -79,23 +81,26 @@ def knn_brute_force(
     )
 
 
-def _seed_centroids(corpus: DataFrame, corpus_id: str, corpus_vec: str, n: int) -> DataFrame:
-    """Deterministic seeds: the ``n`` lowest-id corpus vectors."""
-    cents = (
-        corpus.orderBy(F.asc(corpus_id))
-        .limit(n)
-        .select(
-            F.col(corpus_id).alias("__cent_src"), F.col(corpus_vec).alias("cent_vec")
-        )
-    )
-    # bounded by the limit(n) above (n centroids, never corpus-sized) —
-    # ranked window-free so no unpartitioned WindowExec appears anywhere
-    from dataingestionplayground_spark.operators.prefix import bounded_rank
+def _seed_vectors(corpus: DataFrame, corpus_id: str, corpus_vec: str, n: int) -> list:
+    """Deterministic seeds: the vectors of the ``n`` lowest-id corpus
+    rows, in id order (a seed's centroid id is its list position),
+    fetched with one top-``n`` collect."""
+    rows = corpus.orderBy(F.asc(corpus_id)).limit(int(n)).select(corpus_vec).collect()
+    return [r[0] for r in rows]
 
-    ranked = bounded_rank(cents, [("__cent_src", True)], "__rk")
-    return ranked.withColumn("centroid_id", F.col("__rk") - 1).drop(
-        "__cent_src", "__rk"
+
+def _centroids_frame(
+    spark, cents: list, vec_type: T.DataType = T.ArrayType(T.FloatType())
+) -> DataFrame:
+    """(centroid_id, cent_vec) frame of driver-held ``(id, vector)``
+    centroids."""
+    schema = T.StructType(
+        [
+            T.StructField("centroid_id", T.IntegerType(), False),
+            T.StructField("cent_vec", vec_type, True),
+        ]
     )
+    return spark.createDataFrame([(int(c), v) for c, v in cents], schema)
 
 
 def _assign_cells(df: DataFrame, cents: DataFrame, vec: str, id_col: str, keep: int) -> DataFrame:
@@ -112,6 +117,168 @@ def _assign_cells(df: DataFrame, cents: DataFrame, vec: str, id_col: str, keep: 
     )
 
 
+def _first_best(v, null, higher: bool, nulls: str):
+    """Per row of ``v`` (n x k), the index of the first best entry in
+    Spark SQL's ordering: NaN above every number, ``higher`` or lower
+    numbers first, null entries (``null`` mask) ordered ``nulls``
+    ('first' or 'last') or never chosen ('skip': -1 for a row of
+    nulls). Ties go to the lowest index."""
+    import numpy as np
+
+    nan = np.isnan(v) & ~null
+    num = ~(null | nan)
+    order = [nan, num] if higher else [num, nan]
+    if nulls == "first":
+        order.insert(0, null)
+    elif nulls == "last":
+        order.append(null)
+    best = np.full(v.shape[0], -1, dtype=np.int64)
+    todo = np.ones(v.shape[0], dtype=bool)
+    for cls in order:
+        rows = todo & cls.any(axis=1)
+        if not rows.any():
+            continue
+        hit = cls[rows]
+        if cls is num:
+            score = np.where(hit, -v[rows] if higher else v[rows], np.inf)
+            hit = hit & (score == score.min(axis=1, keepdims=True))
+        best[rows] = np.argmax(hit, axis=1)
+        todo &= ~rows
+    return best
+
+
+def _nearest(
+    df: DataFrame,
+    vec: str,
+    books: list,
+    width: int,
+    metric: str,
+    nulls: str,
+    keep: list,
+    out: list,
+) -> DataFrame:
+    """Nearest-entry search as ONE Arrow-batched ``mapInPandas`` stage,
+    bit-identical to the SQL lambda forms it stands for: the k-means
+    assign (``metric='cosine'``: the best is the HIGHEST
+    :func:`~...functions.vector.cosine_similarity`) and the PQ refine
+    assign and encode (``'l2'``: the LOWEST squared L2,
+    ``(x - c) * (x - c)`` summed).
+
+    ``books[g]`` is ``(labels, vectors)``, the entries of group g in tie
+    order; group g reads ``vec`` elements ``[g*width, (g+1)*width)``.
+    Emits the ``keep`` columns plus ``out[g]``: the label of the best
+    entry of group g (int; NULL when none qualifies).
+
+    Bit identity: every sum accumulates in double, one dimension at a
+    time from 0.0, as the SQL ``aggregate`` folds (elementwise IEEE
+    operations in numpy, never a BLAS dot), and the norms, the product
+    and the division run in the SQL order. The pick follows the SQL
+    ordering through :func:`_first_best`: ties to the first entry, NaN
+    above every number, and null scores — a null or zero-norm row, a
+    null entry — placed by ``nulls``: 'last' for the k-means window
+    (desc nulls last), 'first' for the PQ refine window (asc nulls
+    first), 'skip' for the encoder's ``array_min``/``array_position``.
+    Rows must be null or hold at least ``len(books) * width`` elements
+    (exactly ``width`` for cosine), as the SQL forms index them."""
+    import numpy as np
+    import pandas as pd
+
+    cosine = metric == "cosine"
+    need = len(books) * width
+    prepared = []
+    for labels, vectors in books:
+        C = np.full((len(vectors), width), np.nan)
+        cnull = np.array([v is None for v in vectors], dtype=bool)
+        for j, v in enumerate(vectors):
+            if v is not None:
+                C[j] = np.asarray(v, dtype=np.float64)  # raises on a ragged entry
+        Ct = np.ascontiguousarray(C.T)
+        cn = np.zeros(len(vectors))
+        for i in range(width):
+            cn = cn + Ct[i] * Ct[i]
+        prepared.append((np.asarray(labels, dtype=np.int64), Ct, cnull, np.sqrt(cn)))
+    cols = list(dict.fromkeys([*keep, vec]))
+    src = df.select(*cols)
+    out_schema = T.StructType(
+        [src.schema[c] for c in keep]
+        + [T.StructField(c, T.IntegerType(), True) for c in out]
+    )
+
+    def kernel(batches):
+        for pdf in batches:
+            n = len(pdf)
+            vals = pdf[vec].to_numpy()
+            row_null = np.fromiter((v is None for v in vals), dtype=bool, count=n)
+            E = np.zeros((n, need))
+            present = [np.asarray(v, dtype=np.float64) for v in vals[~row_null]]
+            for a in present:
+                if len(a) < need or (cosine and len(a) != need):
+                    raise ValueError(
+                        f"{vec}: a {len(a)}-element vector against {need}-wide entries"
+                    )
+            if present:
+                E[~row_null] = np.vstack([a[:need] for a in present])
+            res = pdf[keep].copy()
+            for g, (labels, Ct, cnull, cn) in enumerate(prepared):
+                X = np.ascontiguousarray(E[:, g * width : (g + 1) * width].T)
+                if cosine:
+                    dot = np.zeros((n, Ct.shape[1]))
+                    ne = np.zeros(n)
+                    for i in range(width):
+                        dot = dot + X[i][:, None] * Ct[i][None, :]
+                        ne = ne + X[i] * X[i]
+                    den = np.sqrt(ne)[:, None] * cn[None, :]
+                    with np.errstate(divide="ignore", invalid="ignore"):
+                        score = dot / den
+                    null = (den == 0) | row_null[:, None] | cnull[None, :]
+                else:
+                    score = np.zeros((n, Ct.shape[1]))
+                    for i in range(width):
+                        d = X[i][:, None] - Ct[i][None, :]
+                        score = score + d * d
+                    null = row_null[:, None] | cnull[None, :]
+                best = _first_best(score, null, cosine, nulls)
+                col = pd.array(
+                    labels[best.clip(0)] if len(labels) else np.zeros(n, np.int64),
+                    dtype="Int32",
+                )
+                col[best < 0] = pd.NA
+                res[out[g]] = col
+            yield res
+
+    return src.mapInPandas(kernel, schema=out_schema)
+
+
+def _collect_vectors(df: DataFrame) -> list:
+    """Collect int-keyed ``(*keys, pos, v)`` rows as ``[(keys, [v in pos
+    order])]`` ascending by keys — the driver-side twin of
+    ``array_sort(collect_list(struct(pos, v)))`` per key. The rows come
+    over as one Arrow table (n_cells x dims rows: columnar, never a
+    Python object per row)."""
+    import numpy as np
+
+    t = df.toArrow()
+    if t.num_rows == 0:
+        return []
+    cols = [t.column(i).to_numpy() for i in range(t.num_columns)]
+    keys, pos, vals = np.stack(cols[:-2], axis=1), cols[-2], cols[-1]
+    order = np.lexsort((pos, *keys.T[::-1]))
+    keys, vals = keys[order], vals[order]
+    starts = np.flatnonzero(np.r_[True, (keys[1:] != keys[:-1]).any(axis=1)])
+    ends = np.r_[starts[1:], len(keys)]
+    return [
+        (tuple(int(x) for x in keys[a]), vals[a:b].tolist()) for a, b in zip(starts, ends)
+    ]
+
+
+def _mean_expr(val: F.Column) -> F.Column:
+    """Element mean routed through DECIMAL(38,6): associative, so every
+    partitioning (and the DuckDB oracle) sums to the same value."""
+    return F.sum(val.cast("decimal(38,6)")).cast("double") / F.count(F.lit(1)).cast(
+        "double"
+    )
+
+
 def kmeans_centroids(
     corpus: DataFrame,
     n_centroids: int = 16,
@@ -119,57 +286,60 @@ def kmeans_centroids(
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
 ) -> DataFrame:
-    """Fixed-iteration, deterministically-seeded Lloyd k-means, pure
-    DataFrame ops (no MLlib dependency, no RDDs).
+    """Fixed-iteration, deterministically-seeded Lloyd k-means (no MLlib
+    dependency), trained driver-held by :func:`_lloyd_iters`: seeds are
+    the ``n_centroids`` lowest-id vectors, each iteration is one corpus
+    scan plus one (cell, pos) aggregate, and the means route through
+    DECIMAL(38,6) (associative — identical under any partitioning AND
+    replicable in the DuckDB oracle), so repeated runs give identical
+    centroids.
 
-    Per iteration: assign (broadcast centroids x one corpus scan), then
-    recompute each centroid as the element-wise mean via posexplode ->
-    (cell, pos) partial-aggregatable avg -> rebuild the array. Both
-    shuffles carry (cell, pos, val) rows bounded by corpus x dims — no
-    per-group vector materialization, so it scales like any hash agg.
-    Deterministic: seeds are the lowest-id vectors and the mean routes
-    through DECIMAL(38,6) (associative — identical under any
-    partitioning AND replicable in the DuckDB oracle), so repeated runs
-    give identical centroids.
-    """
-    return _lloyd_iters(
-        corpus,
-        _seed_centroids(corpus, corpus_id, corpus_vec, n_centroids),
-        n_iters,
-        corpus_id,
-        corpus_vec,
+    Training runs at CALL time (the returned (centroid_id, cent_vec)
+    frame holds the finished centroids), so plan-only tools such as
+    ``scripts/dump_plans.py`` run its Spark jobs. A centroid that wins
+    no vector is dropped, so ids can have gaps."""
+    return _centroids_frame(
+        corpus.sparkSession,
+        _train_centroids(corpus, n_centroids, "kmeans", n_iters, corpus_id, corpus_vec),
     )
 
 
 def _lloyd_iters(
     corpus: DataFrame,
-    cents: DataFrame,
+    cents: list,
     n_iters: int,
-    corpus_id: str,
     corpus_vec: str,
-) -> DataFrame:
-    """The distributed Lloyd refinement loop shared by the seeded and
-    k-means++ trainers: assign (broadcast centroids x one corpus scan),
-    recompute means through DECIMAL(38,6) (associative — identical
-    under any partitioning)."""
-    for _ in range(n_iters):
-        assigned = _assign_cells(corpus, cents, corpus_vec, corpus_id, keep=1)
-        cents = (
+) -> list:
+    """The Lloyd refinement loop shared by the seeded and sampled
+    trainers, driver-held: ``cents`` is a list of ``(centroid_id,
+    vector)`` ascending by id, and each iteration (1) assigns every
+    corpus vector to its highest-cosine centroid (ties to the lowest id;
+    null and zero-norm vectors, whose every cosine is null, to the
+    lowest id) in ONE :func:`_nearest` stage, (2) averages each (cell,
+    pos) through DECIMAL(38,6) in one aggregate — a null vector adds
+    nothing, a zero-norm one adds zeros — and (3) collects the n_cells x
+    dims means, cast to float, as the next iteration's plain arrays. A
+    centroid that wins no vector drops out. Only n_cells x dims floats
+    ever reach the driver, and no iteration's lineage nests the one
+    before it. Returns the final ``(centroid_id, vector)`` list."""
+    for _ in range(int(n_iters)):
+        width = max((len(v) for _, v in cents if v is not None), default=0)
+        assigned = _nearest(
+            corpus,
+            corpus_vec,
+            [([c for c, _ in cents], [v for _, v in cents])],
+            width,
+            "cosine",
+            "last",
+            keep=[corpus_vec],
+            out=["centroid_id"],
+        )
+        means = (
             assigned.select("centroid_id", F.posexplode(corpus_vec))
             .groupBy("centroid_id", "pos")
-            .agg(
-                (
-                    F.sum(F.col("col").cast("double").cast("decimal(38,6)")).cast("double")
-                    / F.count(F.lit(1)).cast("double")
-                ).alias("v")
-            )
-            .groupBy("centroid_id")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "v"))).alias("__pv"))
-            .select(
-                "centroid_id",
-                F.expr("transform(__pv, x -> cast(x.v as float))").alias("cent_vec"),
-            )
+            .agg(_mean_expr(F.col("col").cast("double")).cast("float").alias("v"))
         )
+        cents = [(k[0], v) for k, v in _collect_vectors(means)]
     return cents
 
 
@@ -192,7 +362,8 @@ def sampled_kmeans_centroids(
     trainer (r14 verdict item 2): instead of paying a full corpus scan
     per Lloyd iteration, converge on a bounded sample driver-side and
     spend only ``n_iters`` distributed iterations refining against the
-    full corpus.
+    full corpus. Like :func:`kmeans_centroids`, training runs at call
+    time and the frame holds the finished centroids.
 
     Three stages, each deterministic:
 
@@ -212,14 +383,32 @@ def sampled_kmeans_centroids(
     2. **Driver-side Lloyd polish** on the sample (numpy, milliseconds)
        so the distributed stage starts near convergence.
     3. **Distributed Lloyd refinement** over the FULL corpus via
-       :func:`_lloyd_iters` — one broadcast-assign corpus scan + one
-       (cell, pos) hash-agg per iteration, the same shuffle shape as
-       :func:`kmeans_centroids`, but needing fewer iterations because
-       stage 2 already converged on the sample.
+       :func:`_lloyd_iters` — one assign-and-aggregate corpus scan per
+       iteration, the same shape as :func:`kmeans_centroids`, but
+       needing fewer iterations because stage 2 already converged on
+       the sample.
 
     Output schema matches :func:`kmeans_centroids`; drop-in for every
     ``centroid_mode`` consumer (mode name: ``'sampled'``).
     """
+    return _centroids_frame(
+        corpus.sparkSession,
+        _sampled_kmeans(
+            corpus, n_centroids, n_iters, corpus_id, corpus_vec, sample_size, polish_iters
+        ),
+    )
+
+
+def _sampled_kmeans(
+    corpus: DataFrame,
+    n_centroids: int,
+    n_iters: int,
+    corpus_id: str,
+    corpus_vec: str,
+    sample_size: int = KMEANS_SAMPLE,
+    polish_iters: int = 10,
+) -> list:
+    """The ``(centroid_id, vector)`` list of :func:`sampled_kmeans_centroids`."""
     import numpy as np
 
     sample = (
@@ -249,12 +438,33 @@ def sampled_kmeans_centroids(
             if members.any():  # empty cell keeps its previous centroid
                 C[j] = X[members].mean(axis=0)
 
-    spark = corpus.sparkSession
-    cents = spark.createDataFrame(
-        [(j, [float(x) for x in C[j]]) for j in range(k)],
-        "centroid_id int, cent_vec array<float>",
+    # the distributed stage starts from float centroids, as stored
+    seeds = [(j, C[j].astype(np.float32).astype(np.float64).tolist()) for j in range(k)]
+    return _lloyd_iters(corpus, seeds, int(n_iters), corpus_vec)
+
+
+def _train_centroids(
+    corpus: DataFrame,
+    n_centroids: int,
+    centroid_mode: str,
+    kmeans_iters: int,
+    corpus_id: str,
+    corpus_vec: str,
+) -> list:
+    """Driver-held ``(centroid_id, vector)`` coarse centroids, ascending
+    by id: ``'seed'`` takes the lowest-id vectors, ``'kmeans'`` refines
+    them with :func:`_lloyd_iters`, ``'sampled'`` converges on a bounded
+    sample first (:func:`sampled_kmeans_centroids`)."""
+    if centroid_mode == "seed":
+        return list(enumerate(_seed_vectors(corpus, corpus_id, corpus_vec, n_centroids)))
+    if centroid_mode == "kmeans":
+        seeds = _seed_vectors(corpus, corpus_id, corpus_vec, n_centroids)
+        return _lloyd_iters(corpus, list(enumerate(seeds)), kmeans_iters, corpus_vec)
+    if centroid_mode == "sampled":
+        return _sampled_kmeans(corpus, n_centroids, kmeans_iters, corpus_id, corpus_vec)
+    raise ValueError(
+        f"centroid_mode must be 'seed', 'kmeans', or 'sampled': {centroid_mode!r}"
     )
-    return _lloyd_iters(corpus, cents, int(n_iters), corpus_id, corpus_vec)
 
 
 def ivf_ann(
@@ -281,20 +491,13 @@ def ivf_ann(
     scan; the only shuffled rows are (id, cell) pairs. Recall/cost dial:
     ``n_probe``.
     """
-    if centroid_mode == "seed":
-        cents = _seed_centroids(corpus, corpus_id, corpus_vec, n_centroids)
-    elif centroid_mode == "kmeans":
-        cents = kmeans_centroids(
-            corpus, n_centroids, kmeans_iters, corpus_id, corpus_vec
-        )
-    elif centroid_mode == "sampled":
-        cents = sampled_kmeans_centroids(
-            corpus, n_centroids, kmeans_iters, corpus_id, corpus_vec
-        )
-    else:
-        raise ValueError(
-            f"centroid_mode must be 'seed', 'kmeans', or 'sampled': {centroid_mode!r}"
-        )
+    cents = _centroids_frame(
+        corpus.sparkSession,
+        _train_centroids(
+            corpus, n_centroids, centroid_mode, kmeans_iters, corpus_id, corpus_vec
+        ),
+        corpus.schema[corpus_vec].dataType,
+    )
 
     corpus_cells = _assign_cells(corpus, cents, corpus_vec, corpus_id, keep=1)
     query_cells = _assign_cells(queries, cents, query_vec, query_id, keep=n_probe)
@@ -379,6 +582,27 @@ def lsh_bucket_ann(
     )
 
 
+#: a PQ codebook as a plan literal: (s, cid, v) entries sorted by (s, cid)
+_CENTS_SCHEMA = T.ArrayType(
+    T.StructType(
+        [
+            T.StructField("s", T.IntegerType(), False),
+            T.StructField("cid", T.IntegerType(), False),
+            T.StructField("v", T.ArrayType(T.DoubleType()), True),
+        ]
+    )
+)
+
+
+def _codebook_column(codebook: list) -> F.Column:
+    """A driver-held codebook as ONE folded ``cents`` literal, the array
+    the SQL lookup-table and reconstruction expressions index."""
+    return folded_literal(
+        [{"s": int(c[0]), "cid": int(c[1]), "v": c[2]} for c in codebook],
+        _CENTS_SCHEMA,
+    )
+
+
 def _pq_codebook(
     corpus: DataFrame,
     m: int,
@@ -387,105 +611,81 @@ def _pq_codebook(
     corpus_id: str,
     corpus_vec: str,
     mode: str = "seed",
-) -> DataFrame:
-    """One-row codebook: array of (s, cid, v) structs sorted by (s, cid)
-    — m*k per-subspace centroid slices seeded from the k lowest-id
-    vectors; ``mode='kmeans'`` refines each subspace with one Lloyd
-    iteration (L2 assignment, DECIMAL(38,6)-routed means — bitwise
-    deterministic and SQL-replicable like the IVF k-means). Index of
-    subspace s centroid cid in the array: s*k + cid."""
+) -> list:
+    """Driver-held codebook: ``(s, cid, v)`` entries sorted by (s, cid)
+    — m*k per-subspace centroid slices, all m cut from ONE fetch of the
+    k lowest-id vectors; ``mode='kmeans'`` refines each subspace with
+    one Lloyd iteration (:func:`_pq_refine_subspaces`). Index of
+    subspace s centroid cid in the list: s*k + cid (until a refine
+    drops a seed that wins nothing, which makes the codebook ragged)."""
     if mode not in ("seed", "kmeans"):
         raise ValueError(f"mode must be 'seed' or 'kmeans': {mode!r}")
     dsub = dims // m
-    seeds = _seed_centroids(corpus, corpus_id, corpus_vec, k)
-    sub_slices = None
-    for s in range(m):
-        part = seeds.select(
-            F.lit(s).alias("s"),
-            F.col("centroid_id").alias("cid"),
-            F.expr(
-                f"transform(slice(cent_vec, {s * dsub + 1}, {dsub}), x -> cast(x as double))"
-            ).alias("v"),
-        )
-        sub_slices = part if sub_slices is None else sub_slices.unionByName(part)
+    seeds = _seed_vectors(corpus, corpus_id, corpus_vec, k)
+    book = [
+        (s, cid, None if v is None else [float(x) for x in v[s * dsub : (s + 1) * dsub]])
+        for s in range(m)
+        for cid, v in enumerate(seeds)
+    ]
     if mode == "kmeans":
-        sub_slices = _pq_refine_subspaces(
-            corpus, sub_slices, m, dsub, corpus_id, corpus_vec
-        )
-    return sub_slices.agg(
-        F.array_sort(F.collect_list(F.struct("s", "cid", "v"))).alias("cents")
-    )
+        book = _pq_refine_subspaces(corpus, book, m, dsub, corpus_vec)
+    return book
+
+
+def _subspace_books(codebook: list, m: int, labels: str) -> list:
+    """Per-subspace ``(labels, vectors)`` groups of a codebook, in its
+    order; ``labels`` is ``'cid'`` or ``'index'`` (position within the
+    subspace — what a code stores)."""
+    books = []
+    for s in range(m):
+        entries = [c for c in codebook if int(c[0]) == s]
+        ids = [int(c[1]) for c in entries] if labels == "cid" else list(range(len(entries)))
+        books.append((ids, [c[2] for c in entries]))
+    return books
 
 
 def _pq_refine_subspaces(
     corpus: DataFrame,
-    seed_rows: DataFrame,
+    seed_book: list,
     m: int,
     dsub: int,
-    corpus_id: str,
     corpus_vec: str,
-) -> DataFrame:
+) -> list:
     """One Lloyd iteration per subspace: assign every vector's slice to
-    its nearest seed (exact-multiplication L2, ties to lowest cid), then
-    recompute each (s, cid) centroid as the decimal-routed element mean.
-    All shuffles carry (id,s)/(s,cid,pos) rows — hash-agg shapes."""
+    its nearest seed (squared L2 accumulated in double, ties to the
+    lowest cid, a null distance first as the SQL window ordered it) in
+    one :func:`_nearest` stage, then recompute each (s, cid) centroid
+    as the decimal-routed element mean in one (s, cid, pos) aggregate
+    and collect the m*k*dsub doubles. A seed that wins no vector drops
+    out, so the result can be ragged."""
+    codes = [f"__c{s}" for s in range(m)]
+    assigned = _nearest(
+        corpus,
+        corpus_vec,
+        _subspace_books(seed_book, m, "cid"),
+        dsub,
+        "l2",
+        "first",
+        keep=[corpus_vec],
+        out=codes,
+    )
     slice_structs = ", ".join(
-        f"struct({s} as s, transform(slice({corpus_vec}, {s * dsub + 1}, {dsub}), "
-        f"x -> cast(x as double)) as sv)"
+        f"struct({s} as s, {codes[s]} as cid, transform(slice({corpus_vec}, "
+        f"{s * dsub + 1}, {dsub}), x -> cast(x as double)) as sv)"
         for s in range(m)
     )
-    slices = corpus.select(
-        F.col(corpus_id).alias("__id"),
-        F.explode(F.expr(f"array({slice_structs})")).alias("sub"),
-    ).select("__id", F.col("sub.s").alias("s"), F.col("sub.sv").alias("sv"))
-    dist = (
-        f"aggregate(sequence(1, {dsub}), cast(0.0 as double), "
-        f"(acc, i) -> acc + (element_at(sv, i) - element_at(v, i)) "
-        f"* (element_at(sv, i) - element_at(v, i)))"
-    )
-    scored = slices.join(F.broadcast(seed_rows), "s").withColumn("__d", F.expr(dist))
-    w = Window.partitionBy("__id", "s").orderBy(F.asc("__d"), F.asc("cid"))
-    assigned = (
-        scored.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") == 1)
-        .select("s", "cid", "sv")
-    )
-    return (
-        assigned.select("s", "cid", F.posexplode("sv").alias("pos", "val"))
+    means = (
+        assigned.select(F.explode(F.expr(f"array({slice_structs})")).alias("sub"))
+        .select("sub.s", "sub.cid", F.posexplode("sub.sv").alias("pos", "val"))
         .groupBy("s", "cid", "pos")
-        .agg(
-            (
-                F.sum(F.col("val").cast("decimal(38,6)")).cast("double")
-                / F.count(F.lit(1)).cast("double")
-            ).alias("mv")
-        )
-        .groupBy("s", "cid")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "mv"))).alias("__pv"))
-        .select("s", "cid", F.expr("transform(__pv, x -> x.mv)").alias("v"))
+        .agg(_mean_expr(F.col("val")).alias("mv"))
     )
-
-
-def pq_encode_codes(
-    corpus: DataFrame,
-    m: int,
-    k: int,
-    dims: int,
-    corpus_id: str,
-    corpus_vec: str,
-    keep_vec: bool = False,
-    codebook_mode: str = "seed",
-) -> DataFrame:
-    """(id, code_0..code_{m-1}) for each vector — pure per-row expression
-    over one broadcast of the codebook; zero corpus-side shuffles."""
-    codebook = _pq_codebook(corpus, m, k, dims, corpus_id, corpus_vec, codebook_mode)
-    return pq_encode_with_codebook(
-        corpus, codebook, m, dims, corpus_id, corpus_vec, keep_vec=keep_vec
-    )
+    return [(s, cid, v) for (s, cid), v in _collect_vectors(means)]
 
 
 def pq_encode_with_codebook(
     corpus: DataFrame,
-    codebook: DataFrame,
+    codebook: list,
     m: int,
     dims: int,
     corpus_id: str,
@@ -493,37 +693,28 @@ def pq_encode_with_codebook(
     keep_vec: bool = False,
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Encode against a FIXED codebook (one-row ``cents`` frame) — the
-    incremental-index path: new vectors must quantize against the
-    centroids the existing codes used, or codes are incomparable."""
-    from dataingestionplayground_spark.session import fan_out_small_scan
-
-    dsub = dims // m
-    # r16: the per-row min-distance encode is interpreted lambda work —
-    # fan out a narrow upstream scan first (no-op at scale / when the
-    # input is already exchange-partitioned)
-    enc = fan_out_small_scan(corpus).crossJoin(F.broadcast(codebook))
-    for s in range(m):
-        # (x-y)*(x-y), not power(x-y, 2): multiplication is exact IEEE on
-        # both engines; pow implementations may differ by an ulp
-        dists = (
-            f"transform(filter(cents, c -> c.s = {s}), c -> "
-            f"aggregate(sequence(1, {dsub}), cast(0.0 as double), "
-            f"(acc, i) -> acc + (cast(element_at({corpus_vec}, {s * dsub} + i) as double) "
-            f"- element_at(c.v, i)) * (cast(element_at({corpus_vec}, {s * dsub} + i) as double) "
-            f"- element_at(c.v, i))))"
-        )
-        enc = enc.withColumn(
-            f"code_{s}",
-            (F.expr(f"array_position({dists}, array_min({dists}))") - 1).cast("int"),
-        )
-    cols = (
-        [corpus_id]
-        + list(extra_cols)
-        + ([corpus_vec, "cents"] if keep_vec else [])
-        + [f"code_{s}" for s in range(m)]
+    """Encode against a FIXED driver-held codebook — ``(s, cid, v)``
+    entries, as :func:`_pq_codebook` returns them and an index meta
+    stores them — in one :func:`_nearest` stage: ``code_s`` is the
+    position, among subspace s's entries in codebook order, of the
+    first nearest one (squared L2 in double; a null distance never
+    wins, a null vector gets NULL codes), exactly as the SQL
+    ``array_position(dists, array_min(dists)) - 1`` over the filtered
+    array. A refined codebook can be ragged, so a position is not a
+    cid. The incremental-index path encodes here too: new vectors must
+    quantize against the centroids the existing codes used, or codes
+    are incomparable. Returns (id, *extra_cols[, vec],
+    code_0..code_{m-1})."""
+    return _nearest(
+        corpus,
+        corpus_vec,
+        _subspace_books(codebook, m, "index"),
+        dims // m,
+        "l2",
+        "skip",
+        keep=[corpus_id, *extra_cols, *([corpus_vec] if keep_vec else [])],
+        out=[f"code_{s}" for s in range(m)],
     )
-    return enc.select(*cols)
 
 
 def pq_encode(
@@ -540,20 +731,21 @@ def pq_encode(
     (seeded deterministically from the ``k`` lowest-id vectors' slices),
     emit the code word plus the reconstruction cosine.
 
-    The centroid codebook is m*k tiny slices collected into ONE broadcast
-    row; encoding is then a pure per-row expression over the corpus scan
-    — zero shuffles at any scale (the m*k*dsub codebook is the entire
-    cluster-wide state). Argmin is expressed as
-    ``array_position(dists, array_min(dists))`` — first-index-of-min, so
-    ties break to the lowest centroid id identically on every engine.
-    Output: (id, code_0..code_{m-1}, cos_recon).
+    The centroid codebook is m*k tiny slices held on the driver;
+    encoding is then one per-row kernel stage over the corpus scan
+    (:func:`pq_encode_with_codebook`) — zero shuffles at any scale (the
+    m*k*dsub codebook is the entire cluster-wide state). Argmin is
+    first-index-of-min, the SQL ``array_position(dists,
+    array_min(dists))``, so ties break to the lowest centroid id
+    identically on every engine; the reconstruction reads the codebook
+    as one folded literal. Output: (id, code_0..code_{m-1}, cos_recon).
     """
     if dims % m != 0:
         raise ValueError(f"dims {dims} not divisible by m {m}")
-    enc = pq_encode_codes(
-        corpus, m, k, dims, corpus_id, corpus_vec, keep_vec=True,
-        codebook_mode=codebook_mode,
-    )
+    codebook = _pq_codebook(corpus, m, k, dims, corpus_id, corpus_vec, codebook_mode)
+    enc = pq_encode_with_codebook(
+        corpus, codebook, m, dims, corpus_id, corpus_vec, keep_vec=True
+    ).withColumn("cents", _codebook_column(codebook))
     recon = F.concat(
         *[
             F.expr(f"element_at(filter(cents, c -> c.s = {s}), code_{s} + 1).v")
@@ -597,13 +789,10 @@ def pq_adc_search(
     if dims % m != 0:
         raise ValueError(f"dims {dims} not divisible by m {m}")
 
-    enc = pq_encode_codes(
-        corpus, m, n_centroids, dims, corpus_id, corpus_vec,
-        codebook_mode=codebook_mode,
-    )
     codebook = _pq_codebook(
         corpus, m, n_centroids, dims, corpus_id, corpus_vec, codebook_mode
     )
+    enc = pq_encode_with_codebook(corpus, codebook, m, dims, corpus_id, corpus_vec)
     return pq_adc_rank(
         enc, codebook, queries, k, m, n_centroids, dims,
         corpus_id=corpus_id, query_id=query_id, query_vec=query_vec,
@@ -612,7 +801,7 @@ def pq_adc_search(
 
 def pq_adc_rank(
     enc: DataFrame,
-    codebook: DataFrame,
+    codebook: list,
     queries: DataFrame,
     k: int,
     m: int,
@@ -625,7 +814,7 @@ def pq_adc_rank(
     """ADC top-k over an ALREADY-ENCODED code table — the scan a
     store-backed index runs: ``enc`` carries only (id, code_0..code_m-1)
     int columns (read from the persisted index, no vectors, no encode),
-    the codebook is the one-row broadcast the codes were built with."""
+    the codebook is the driver-held one the codes were built with."""
     dsub = dims // m
     # LUT aligned with the (s, cid)-sorted codebook array: index s*K+cid+1
     diff = f"(cast(element_at({query_vec}, c.s * {dsub} + i) as double) - element_at(c.v, i))"
@@ -634,7 +823,7 @@ def pq_adc_rank(
         f"(acc, i) -> acc + {diff} * {diff}))"
     )
     q_lut = (
-        queries.crossJoin(F.broadcast(codebook))
+        queries.withColumn("cents", _codebook_column(codebook))
         .withColumn("lut", F.expr(lut_expr))
         .select(query_id, "lut")
     )
@@ -682,7 +871,7 @@ def _vstack_f64(series):
 
 def _assign_cells_matmul(
     corpus: DataFrame,
-    cents: DataFrame,
+    cents: list,
     corpus_id: str,
     corpus_vec: str,
     extra_cols: tuple = (),
@@ -691,8 +880,9 @@ def _assign_cells_matmul(
     soft_margin: float | None = None,
 ) -> DataFrame:
     """Nearest-centroid assignment as ONE Arrow-batched numpy matmul
-    stage (``emb @ cents.T``): the centroid matrix (<= 4096 x d float64,
-    ~12 MB) is collected once and shipped via ``sc.broadcast``, so the
+    stage (``emb @ cents.T``): ``cents`` is the driver-held centroid
+    matrix (row i is cell i; <= 4096 x d float64, ~12 MB), shipped via
+    ``sc.broadcast``, so the
     corpus never shuffles and the per-row cost is a vectorized BLAS
     matmul instead of an interpreted Catalyst lambda — the round-5
     verdict's N x n_cells x d scale-killer.
@@ -728,11 +918,10 @@ def _assign_cells_matmul(
     import pandas as pd
     from pyspark.sql import types as T
 
-    rows = cents.orderBy("centroid_id").collect()
-    C = np.vstack([np.asarray(r["cent_vec"], dtype=np.float64) for r in rows])
+    C = np.vstack([np.asarray(v, dtype=np.float64) for v in cents])
     sc = corpus.sparkSession.sparkContext
     bc = sc.broadcast(C)
-    keep_n = max(1, min(int(keep), len(rows)))
+    keep_n = max(1, min(int(keep), len(C)))
     cols = [corpus_id, corpus_vec, *extra_cols]
     src = corpus.select(*cols)
     rank_fields = (
@@ -1010,7 +1199,7 @@ def semantic_dedup(
         import math
 
         n_cells = max(16, min(4096, math.ceil(corpus.count() / max(1, target_cell_size))))
-    cents = _seed_centroids(corpus, corpus_id, corpus_vec, n_cells)
+    cents = _seed_vectors(corpus, corpus_id, corpus_vec, n_cells)
     # argmax-cosine assignment as one Arrow-batched numpy matmul stage
     # (first-index-of-max tie-break, identical semantics to the SQL
     # expression form) — the interpreted N x n_cells Catalyst lambda it
@@ -1233,25 +1422,27 @@ def hamming_sign_ann(
 
 def _l2_assign(
     df: DataFrame,
-    cents: DataFrame,
+    cents: list,
     vec: str,
     id_col: str,
     dims: int,
     keep: int,
+    extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Nearest-centroid L2 assignment carrying the RESIDUAL vector:
-    broadcast the tiny centroid table, exact-multiplication squared-L2
+    """Nearest-centroid L2 assignment carrying the RESIDUAL vector
+    against the driver-held centroid vectors ``cents`` (row i is
+    centroid i): exact-multiplication squared-L2
     JVM-side ((x-y)*(x-y), never pow — identical IEEE on every engine),
     keep the ``keep`` best cells per row with ties to the lowest
-    centroid id. Output columns: ``id_col, centroid_id, __res`` (the
-    double-valued x - centroid difference the residual quantizer
-    consumes).
+    centroid id. Output columns: ``id_col, *extra_cols, centroid_id,
+    __res`` (the double-valued x - centroid difference the residual
+    quantizer consumes).
 
     r16 (optimization): the old shape crossJoined every row with every
     centroid ROW and ranked with a row_number window — a corpus×cells
     Exchange carrying 64-double residual arrays plus a sort, with
     residuals computed for ALL cells and then keep× of them thrown
-    away. Now the centroids ride as ONE broadcast array row; the
+    away. Now the centroids ride as ONE folded array literal; the
     distance vector, the top-``keep`` selection (array_sort on
     struct(d, cid) — same lexicographic tie rule as the old
     orderBy(d, cid)), and the residual for the KEPT cells only are all
@@ -1266,10 +1457,16 @@ def _l2_assign(
     different (trailing) cell assignments than the pre-r16 plan. Every
     in-repo caller feeds fixed-length embedding columns; external
     callers must filter or pad short vectors at the boundary."""
-    one = cents.orderBy("centroid_id").agg(
-        F.array_sort(F.collect_list(F.struct("centroid_id", "cent_vec"))).alias(
-            "__cl"
-        )
+    cl = folded_literal(
+        [{"centroid_id": i, "cent_vec": v} for i, v in enumerate(cents)],
+        T.ArrayType(
+            T.StructType(
+                [
+                    T.StructField("centroid_id", T.IntegerType()),
+                    T.StructField("cent_vec", T.ArrayType(T.DoubleType())),
+                ]
+            )
+        ),
     )
     dist_of = (
         f"aggregate(sequence(1, {dims}), cast(0.0 as double), "
@@ -1286,23 +1483,13 @@ def _l2_assign(
         f"zip_with({vec}, element_at(__cl, __cid + 1).cent_vec, "
         f"(x, y) -> cast(x as double) - cast(y as double))"
     )
+    ids = [id_col, *extra_cols]
     return (
-        df.crossJoin(F.broadcast(one))
-        .select(F.col(id_col), F.col(vec), F.col("__cl"), F.expr(cand).alias("__ks"))
-        .select(
-            id_col, vec, "__cl", F.explode("__ks").alias("__k")
-        )
-        .select(
-            F.col(id_col),
-            F.col("__k.cid").alias("__cid"),
-            F.col(vec),
-            F.col("__cl"),
-        )
-        .select(
-            F.col(id_col),
-            F.col("__cid").alias("centroid_id"),
-            F.expr(res).alias("__res"),
-        )
+        df.withColumn("__cl", cl)
+        .select(*ids, vec, "__cl", F.expr(cand).alias("__ks"))
+        .select(*ids, vec, "__cl", F.explode("__ks").alias("__k"))
+        .select(*ids, F.col("__k.cid").alias("__cid"), vec, "__cl")
+        .select(*ids, F.col("__cid").alias("centroid_id"), F.expr(res).alias("__res"))
     )
 
 
@@ -1332,7 +1519,7 @@ def ivf_pq_residual_search(
     precision on local structure — the accuracy step that turns IVF +
     PQ from two independent filters into the production index layout.
 
-    Scale shape: centroids and codebook are two tiny broadcast tables;
+    Scale shape: centroids and codebook are two tiny driver-held literals;
     assignment and encoding are single corpus scans (per-row
     expressions, zero corpus shuffles); a query touches only its probed
     cells' code rows (int codes, not float payloads — the inverted-list
@@ -1343,7 +1530,7 @@ def ivf_pq_residual_search(
     """
     from dataingestionplayground_spark.session import fan_out_small_scan
 
-    cents = _seed_centroids(corpus, corpus_id, corpus_vec, n_cells)
+    cents = _seed_vectors(corpus, corpus_id, corpus_vec, n_cells)
     # r16: with the in-row assignment below there is no Exchange left
     # between the scan and the final top-k, so a single-split local scan
     # would run the whole assign+encode pipeline one task wide — fan out
@@ -1365,7 +1552,7 @@ def ivf_pq_residual_search(
         f"cast(0.0 as double), (acc, i) -> acc + {diff} * {diff}))"
     )
     q_lut = (
-        qasg.crossJoin(F.broadcast(codebook))
+        qasg.withColumn("cents", _codebook_column(codebook))
         .withColumn("lut", F.expr(lut_expr))
         .select(query_id, "centroid_id", "lut")
     )

@@ -1704,10 +1704,10 @@ def _cell_balance_frame(e, n_cells):
     one single-row stats agg."""
     from dataingestionplayground_spark.operators.similarity import (
         _assign_cells_matmul,
-        _seed_centroids,
+        _seed_vectors,
     )
 
-    cents = _seed_centroids(e, "vec_id", "embedding", n_cells)
+    cents = _seed_vectors(e, "vec_id", "embedding", n_cells)
     occ = (
         _assign_cells_matmul(e, cents, "vec_id", "embedding")
         .groupBy("cell")
@@ -1823,10 +1823,13 @@ def _pq_distortion_frame(e, k):
     parameterizes (post-ledger review finding). Broadcast codebook,
     in-row min-distances, stack() into ONE m-key agg — zero corpus
     shuffles; per-vector terms 6dp-rounded and decimal-summed."""
-    from dataingestionplayground_spark.operators.similarity import _pq_codebook
+    from dataingestionplayground_spark.operators.similarity import (
+        _codebook_column,
+        _pq_codebook,
+    )
 
     cb = _pq_codebook(e, _PQ_M, k, _PQ_D, "vec_id", "embedding", "seed")
-    enc = e.crossJoin(F.broadcast(cb))
+    enc = e.withColumn("cents", _codebook_column(cb))
     dsub = _PQ_DSUB
     for s in range(_PQ_M):
         dists = (
@@ -2235,11 +2238,11 @@ def vector_ivf_soft_occupancy(spark, sf):
     # corpus never shuffles.
     from dataingestionplayground_spark.operators.similarity import (
         _assign_cells_matmul,
-        _seed_centroids,
+        _seed_vectors,
     )
 
     e = t(spark, sf, "embeddings").select("vec_id", "embedding")
-    cents = _seed_centroids(e, "vec_id", "embedding", _SD_CELLS)
+    cents = _seed_vectors(e, "vec_id", "embedding", _SD_CELLS)
     hard = (
         _assign_cells_matmul(e, cents, "vec_id", "embedding")
         .groupBy("cell")
@@ -2285,11 +2288,11 @@ def _ivf_maintained_occ(e):
     maintained table. One n_cells-key hash agg; zero corpus shuffles."""
     from dataingestionplayground_spark.operators.similarity import (
         _assign_cells_matmul,
-        _seed_centroids,
+        _seed_vectors,
     )
 
     base = e.filter(F.col("vec_id") % 5 != 0)
-    cents = _seed_centroids(base, "vec_id", "embedding", _SD_CELLS)
+    cents = _seed_vectors(base, "vec_id", "embedding", _SD_CELLS)
     # ONE Arrow matmul pass over the whole corpus (r15, verdict item 5:
     # the old base+increment twin passes were per-row-independent
     # assignments against the SAME frozen centroids, so splitting the

@@ -753,17 +753,14 @@ def drift_reference(spark: SparkSession, sf_dir: str, n_cells: int = 16):
 
     from dataingestionplayground_spark.operators.similarity import (
         _assign_cells_matmul,
-        _seed_centroids,
+        _seed_vectors,
     )
     from dataingestionplayground_spark.session import load_table
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     ref = e.filter(F.col("vec_id") % 2 == 0)
-    cents = _seed_centroids(ref, "vec_id", "embedding", n_cells)
-    cent_rows = [
-        (int(r["centroid_id"]), [float(x) for x in r["cent_vec"]])
-        for r in cents.collect()
-    ]
+    cents = _seed_vectors(ref, "vec_id", "embedding", n_cells)
+    cent_rows = [(i, [float(x) for x in v]) for i, v in enumerate(cents)]
     assigned = _assign_cells_matmul(ref, cents, "vec_id", "embedding")
     occ = [
         (int(r["cell"]) if r["cell"] is not None else None, int(r["n"]))
@@ -812,15 +809,11 @@ def stream_embedding_drift(
     def process_batch(batch_df, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        sess = batch_df.sparkSession
         from dataingestionplayground_spark.operators.similarity import (
             _assign_cells_matmul,
         )
 
-        cents = sess.createDataFrame(
-            [(cid, v) for cid, v in reference["cents"]],
-            "centroid_id int, cent_vec array<double>",
-        )
+        cents = [v for _, v in sorted(reference["cents"], key=lambda c: c[0])]
         assigned = _assign_cells_matmul(
             batch_df.select("vec_id", "embedding"), cents, "vec_id", "embedding"
         ).localCheckpoint(eager=True)  # feeds both aggs below once

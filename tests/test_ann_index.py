@@ -738,3 +738,61 @@ def test_ensure_index_calls_build_and_refresh_through_module(
     assert A.ensure_index(spark, store, "d", "ivf")["appended"] > 0
     assert A.ensure_index(spark, store, "d", "pq")["appended"] > 0
     assert calls == ["build_ivf_index", "refresh_ivf_index", "refresh_pq_index"]
+
+
+# Spark jobs each index build starts on the fixture (build defaults:
+# k-means coarse centroids and a k-means-refined codebook), counted with
+# getJobIdsForGroup in this test's session (local[8], AQE on). Training
+# is driver-held: the seed fetch, then per Lloyd iteration and per PQ
+# refine one assign-and-aggregate collect (two jobs: the shuffle map
+# stage and the result); then the encode and the write.
+BUILD_JOB_BOUND = {"ivf": 7, "pq": 5, "ivfpq": 10}
+
+
+@pytest.mark.parametrize("kind", ["ivf", "pq", "ivfpq"])
+def test_index_build_job_budget(spark, md_elements, tmp_path, kind):
+    from dataingestionplayground_spark.ingest import ann_index as A
+
+    store = CollectionStore(str(tmp_path))
+    ingest_corpus(md_elements, store, "b", max_tokens=8, overlap=0)
+    build = {
+        "ivf": lambda: A.build_ivf_index(spark, store, "b", n_cells=4),
+        "pq": lambda: A.build_pq_index(spark, store, "b", m=M, n_centroids=K, dims=DIMS),
+        "ivfpq": lambda: A.build_ivfpq_index(
+            spark, store, "b", n_cells=4, m=M, n_centroids=K, dims=DIMS
+        ),
+    }[kind]
+    sc = spark.sparkContext
+    group = f"test-build-jobs-{kind}"
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= BUILD_JOB_BOUND[kind], (kind, n_jobs)
+
+
+def test_ensure_index_given_dims_skips_the_dims_probe(
+    spark, md_elements, tmp_path, monkeypatch
+):
+    """The dims probe is a Spark job over the collection: ``ensure_index``
+    runs it only when the caller did not pass ``dims``."""
+    from dataingestionplayground_spark.ingest import ann_index as A
+
+    probes: list[str] = []
+    real = A._embedding_dims
+
+    def probe(spark_, store_, collection):
+        probes.append(collection)
+        return real(spark_, store_, collection)
+
+    monkeypatch.setattr(A, "_embedding_dims", probe)
+    store = CollectionStore(str(tmp_path))
+    ingest_corpus(md_elements, store, "d", max_tokens=8, overlap=0)
+    kw = {"m": M, "n_centroids": K, "codebook_mode": "seed"}
+    assert A.ensure_index(spark, store, "d", "pq", dims=DIMS, **kw)["built"]
+    assert probes == []
+    shutil.rmtree(os.path.join(store.base_path, "_indexes"))
+    assert A.ensure_index(spark, store, "d", "pq", **kw)["built"]
+    assert probes == ["d"]

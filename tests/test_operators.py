@@ -849,7 +849,7 @@ def test_semantic_dedup_splits_dominant_cell(spark):
     runs on, checked through the split helper directly."""
     from dataingestionplayground_spark.operators.similarity import (
         _assign_cells_matmul,
-        _seed_centroids,
+        _seed_vectors,
         _split_oversized_cells,
         semantic_dedup,
     )
@@ -864,7 +864,7 @@ def test_semantic_dedup_splits_dominant_cell(spark):
     # output labels are the single top-level cell despite the split
     assert out.select("cell").distinct().count() == 1
     # the refined clustering the pair stage grouped by really did split
-    cents = _seed_centroids(corpus, "vec_id", "embedding", 1)
+    cents = _seed_vectors(corpus, "vec_id", "embedding", 1)
     assigned = _assign_cells_matmul(
         corpus, cents, "vec_id", "embedding"
     ).withColumn("__top_cell", F.col("cell"))

@@ -101,7 +101,7 @@ def test_semdedup_split_guard_engages_at_bench_scale(spark, sf_dir):
     corpus replicated enough to blow the budget."""
     from dataingestionplayground_spark.operators.similarity import (
         _assign_cells_matmul,
-        _seed_centroids,
+        _seed_vectors,
         _split_oversized_cells,
         semantic_dedup,
     )
@@ -137,7 +137,7 @@ def test_semdedup_split_guard_engages_at_bench_scale(spark, sf_dir):
     assert all(r["cell"] is None or 0 <= r["cell"] < 16 for r in sizes)
     # the guard itself: the refined clustering has more cells than the
     # top level and every refined cell is inside the pair budget
-    cents = _seed_centroids(replicas, "vec_id", "embedding", 16)
+    cents = _seed_vectors(replicas, "vec_id", "embedding", 16)
     assigned = _assign_cells_matmul(
         replicas, cents, "vec_id", "embedding"
     ).withColumn("__top_cell", F.col("cell"))

@@ -84,7 +84,6 @@ def _full_rows(spark, store):
 
 
 def _frozen_reassign(spark, store, meta):
-    from dataingestionplayground_spark.ingest.ann_index import _ivf_cents_df
     from dataingestionplayground_spark.operators.similarity import (
         _assign_cells_matmul,
     )
@@ -93,7 +92,7 @@ def _frozen_reassign(spark, store, meta):
     return sorted(
         (r["key"], r["documentid"], r["cell"])
         for r in _assign_cells_matmul(
-            chunks, _ivf_cents_df(spark, meta), "key", "embedding",
+            chunks, meta["cents"], "key", "embedding",
             extra_cols=("documentid",),
         )
         .select("key", "documentid", "cell")
@@ -262,14 +261,13 @@ def _pq_view(spark, store):
 
 
 def _pq_frozen_reencode(spark, store, meta):
-    from dataingestionplayground_spark.ingest.ann_index import _codebook_df
     from dataingestionplayground_spark.operators.similarity import (
         pq_encode_with_codebook,
     )
 
     chunks = store.read(spark, "pq").select("key", "documentid", "embedding")
     df = pq_encode_with_codebook(
-        chunks, _codebook_df(spark, meta), meta["m"], meta["dims"],
+        chunks, meta["cents"], meta["m"], meta["dims"],
         "key", "embedding", extra_cols=("documentid",),
     )
     cols = sorted(df.columns)
@@ -352,7 +350,6 @@ def test_pq_cross_epoch_redelivery_newest_wins(spark, md_elements, tmp_path):
 
 def test_ivfpq_merge_parity_replay_and_compaction(spark, md_elements, tmp_path):
     from dataingestionplayground_spark.ingest.ann_index import (
-        _codebook_df,
         _residualize,
         build_ivfpq_index,
         compact_ivfpq_codes,
@@ -380,14 +377,10 @@ def test_ivfpq_merge_parity_replay_and_compaction(spark, md_elements, tmp_path):
         return sorted(tuple(r[c] for c in all_cols) for r in df.collect())
 
     def frozen_reencode():
-        cents_df = spark.createDataFrame(
-            [(i, v) for i, v in enumerate(meta["coarse"])],
-            "centroid_id int, cent_vec array<float>",
-        )
         chunks = store.read(spark, "ivfpq").select("key", "documentid", "embedding")
         df = pq_encode_with_codebook(
-            _residualize(chunks, cents_df, meta["dims"]),
-            _codebook_df(spark, meta), meta["m"], meta["dims"],
+            _residualize(chunks, meta["coarse"], meta["dims"]),
+            meta["cents"], meta["m"], meta["dims"],
             "key", "res", extra_cols=("documentid", "cell"),
         ).select(*all_cols)
         return sorted(tuple(r[c] for c in all_cols) for r in df.collect())

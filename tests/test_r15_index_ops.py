@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 
 from dataingestionplayground_spark.ingest import CollectionStore, ingest_corpus
 from dataingestionplayground_spark.ingest.ann_index import (
-    _codebook_df,
     _pq_staging_dir,
     _residualize,
     build_ivf_index,
@@ -92,7 +91,7 @@ def _pq_rebuild_view(spark, store, name, meta):
     codebook — the convergence target for every maintenance path."""
     chunks = store.read(spark, name).select("key", "documentid", "embedding")
     df = pq_encode_with_codebook(
-        chunks, _codebook_df(spark, meta), meta["m"], meta["dims"],
+        chunks, meta["cents"], meta["m"], meta["dims"],
         "key", "embedding", extra_cols=("documentid",),
     )
     cols = sorted(df.columns)
@@ -314,16 +313,12 @@ def test_ivfpq_delete_then_merge_converges_to_rebuild(
         return sorted(tuple(r[c] for c in all_cols) for r in df.collect())
 
     def rebuild_view():
-        cents_df = spark.createDataFrame(
-            [(i, v) for i, v in enumerate(meta["coarse"])],
-            "centroid_id int, cent_vec array<float>",
-        )
         chunks = store.read(spark, "ivfpq").select(
             "key", "documentid", "embedding"
         )
         df = pq_encode_with_codebook(
-            _residualize(chunks, cents_df, meta["dims"]),
-            _codebook_df(spark, meta), meta["m"], meta["dims"],
+            _residualize(chunks, meta["coarse"], meta["dims"]),
+            meta["cents"], meta["m"], meta["dims"],
             "key", "res", extra_cols=("documentid", "cell"),
         ).select(*all_cols)
         return sorted(tuple(r[c] for c in all_cols) for r in df.collect())
@@ -397,7 +392,6 @@ def test_ivf_soft_assignment_build_search_and_maintenance(
     == rebuilt under the frozen centroids), and a soft-probed search
     finds at least everything the hard-assigned probe finds."""
     from dataingestionplayground_spark.ingest.ann_index import (
-        _ivf_cents_df,
         build_ivf_index,
         ivf_index_staleness,
         ivf_search_indexed,
@@ -429,7 +423,7 @@ def test_ivf_soft_assignment_build_search_and_maintenance(
         return sorted(
             (r["key"], r["cell"])
             for r in _assign_cells_matmul(
-                chunks, _ivf_cents_df(spark, meta), "key", "embedding",
+                chunks, meta["cents"], "key", "embedding",
                 extra_cols=("documentid",), keep=2,
             )
             .select("key", "cell")
@@ -519,7 +513,6 @@ def test_ivfpq_soft_assignment_build_search_and_maintenance(
     rebuilt under both frozen quantizers); search keeps each key's best
     ADC distance and never returns a key twice."""
     from dataingestionplayground_spark.ingest.ann_index import (
-        _codebook_df,
         _residualize,
         ivfpq_index_staleness,
         ivfpq_search_indexed,
@@ -546,14 +539,10 @@ def test_ivfpq_soft_assignment_build_search_and_maintenance(
         return sorted(tuple(r[c] for c in all_cols) for r in df.collect())
 
     def rebuild_view():
-        cents_df = spark.createDataFrame(
-            [(i, v) for i, v in enumerate(meta["coarse"])],
-            "centroid_id int, cent_vec array<float>",
-        )
         chunks = store.read(spark, "sq").select("key", "documentid", "embedding")
         df = pq_encode_with_codebook(
-            _residualize(chunks, cents_df, meta["dims"], keep=2),
-            _codebook_df(spark, meta), meta["m"], meta["dims"],
+            _residualize(chunks, meta["coarse"], meta["dims"], keep=2),
+            meta["cents"], meta["m"], meta["dims"],
             "key", "res", extra_cols=("documentid", "cell"),
         ).select(*all_cols)
         return sorted(tuple(r[c] for c in all_cols) for r in df.collect())

@@ -85,7 +85,6 @@ def test_ivf_boundary_margin_fanout_build_and_maintenance(
         ingest_corpus,
     )
     from dataingestionplayground_spark.ingest.ann_index import (
-        _ivf_cents_df,
         build_ivf_index,
         ivf_index_staleness,
         merge_ivf_assignments,
@@ -142,7 +141,7 @@ def test_ivf_boundary_margin_fanout_build_and_maintenance(
         return sorted(
             (r["key"], r["cell"], r["cell_rank"], r["cell_1"])
             for r in _assign_cells_matmul(
-                chunks, _ivf_cents_df(spark, meta), "key", "embedding",
+                chunks, meta["cents"], "key", "embedding",
                 extra_cols=("documentid",), keep=2, emit_rank=True,
                 soft_margin=0.05,
             )
