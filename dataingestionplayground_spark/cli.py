@@ -247,7 +247,7 @@ def cmd_dedup(args, cfg) -> int:
     from dataingestionplayground_spark.ingest.store import reassemble_documents
     from dataingestionplayground_spark.operators.dedup import exact_dedup, minhash_lsh_pairs
     from dataingestionplayground_spark.operators.graph import dedup_clusters
-    from dataingestionplayground_spark.session import get_spark
+    from dataingestionplayground_spark.session import get_spark, materialize
 
     spark = get_spark("dip-dedup")
     store = CollectionStore(args.store or cfg["store_path"])
@@ -255,14 +255,13 @@ def cmd_dedup(args, cfg) -> int:
     if not store.exists(collection):
         print(f"error: collection {collection!r} not found", file=sys.stderr)
         return 2
-    # the reassembly groupBy runs once; every action below reads the cache
-    docs = reassemble_documents(store.read(spark, collection)).persist()
+    # the reassembly groupBy and the pair join each run once, counted in
+    # the action that caches them; every action below reads the cache
+    docs, n_docs = materialize(reassemble_documents(store.read(spark, collection)))
     pairs = None
     try:
-        n_docs = docs.count()
         n_exact = exact_dedup(docs, "documentid", "text").count()
-        pairs = minhash_lsh_pairs(docs, "documentid", "text").persist()
-        n_pairs = pairs.count()
+        pairs, n_pairs = materialize(minhash_lsh_pairs(docs, "documentid", "text"))
         clusters = dedup_clusters(docs, pairs, "documentid")
         n_kept = clusters.filter("is_kept").count()
         print(f"documents:        {n_docs}")
@@ -311,80 +310,94 @@ def cmd_curate(args, cfg) -> int:
     -> line-level boilerplate removal -> calibrated quality gate ->
     (optional) eval-set decontamination -> sharded JSONL export plus data
     card. Prints the funnel; every stage is the same operator the
-    registry queries verify against DuckDB."""
+    registry queries verify against DuckDB. Each stage is cached and
+    counted in one action, so the JSON is parsed once and no stage runs
+    twice."""
     from pyspark.sql import functions as F
 
     from dataingestionplayground_spark.functions import text as TX
     from dataingestionplayground_spark.ingest.datacard import write_datacard
     from dataingestionplayground_spark.ingest.export import export_jsonl
     from dataingestionplayground_spark.operators.dedup import exact_dedup, line_dedup
-    from dataingestionplayground_spark.queries.textq import quality_scores
-    from dataingestionplayground_spark.session import get_spark
+    from dataingestionplayground_spark.queries.textq import (
+        quality_features,
+        quality_score,
+        quality_scores,
+    )
+    from dataingestionplayground_spark.session import get_spark, materialize, run_observed
     from dataingestionplayground_spark.sources.textfiles import read_jsonl_docs
 
     spark = get_spark("dip-curate")
-    docs = read_jsonl_docs(spark, args.source).select(
-        "doc_id", F.col("content").alias("text")
-    )
-    n0 = docs.count()
 
-    # Each funnel stage is cached just before the count that reports it,
-    # so the next stage, the export and the data card read it from cache
+    # Each funnel stage, the input docs included, is cached and counted
+    # in the one action that fills the cache (``materialize``), so the
+    # next stage, the export and the data card read it from cache
     # instead of re-running every stage before it. persist() keeps the
     # lineage, so a lost block is recomputed. A stage is released once
     # the stage after it is counted: at most two are cached at once.
     cached: list = []
 
     def stage(df):
-        df = df.persist()
-        n = df.count()
+        df, n = materialize(df)
         if cached:
             cached.pop().unpersist()
         cached.append(df)
         return df, n
 
     try:
+        docs, n0 = stage(
+            read_jsonl_docs(spark, args.source).select(
+                "doc_id", F.col("content").alias("text")
+            )
+        )
+
         # 1. exact dedup FIRST: with it after cross-doc line dedup, the two
         # copies of an exact duplicate would mark every one of their shared
-        # lines as boilerplate and erase each other entirely
+        # lines as boilerplate and erase each other entirely. The semi-join
+        # also drops null ids.
         keep = exact_dedup(docs, "doc_id", "text").select(
             F.col("keep_id").alias("doc_id")
         )
         deduped, n1 = stage(docs.join(keep, "doc_id", "left_semi"))
 
         # 2. boilerplate: drop lines still repeated across >= 2 distinct
-        # (now-unique) docs, rebuild each doc from its surviving lines
+        # (now-unique) docs, rebuild each doc from its surviving lines.
+        # The rebuild groups by doc_id: one row per id from here on.
         cleaned, n2 = stage(
             line_dedup(deduped, min_df=2)
             .filter(F.col("n_lines_kept") > 0)
             .select("doc_id", F.col("clean_text").alias("text"))
         )
 
-        # 3. calibrated quality gate: keep docs at/above the corpus quantile
+        # 3. calibrated quality gate: keep docs at/above the corpus
+        # quantile of the score. The threshold is observed in one pass over
+        # the scores; with one row per id the gate is then an in-row
+        # filter on the same score. No scored doc (q is None) keeps
+        # nothing.
         feats = cleaned.withColumn("n_chars", F.length("text"))
-        scored = quality_scores(feats)
-        thr = scored.agg(
-            F.expr(f"percentile(quality, {args.quality_pct / 100.0})").alias("q")
+        q = run_observed(
+            quality_scores(feats),
+            F.expr(f"percentile(quality, {args.quality_pct / 100.0})").alias("q"),
+        )["q"]
+        gate = (
+            F.lit(False)
+            if q is None
+            else (F.col("n_toks") > 0) & (quality_score() >= F.lit(q))
         )
-        kept_ids = (
-            scored.crossJoin(F.broadcast(thr))
-            .filter(F.col("quality") >= F.col("q"))
-            .select("doc_id")
+        final, n3 = stage(
+            feats.select("doc_id", "text", "n_chars", *quality_features())
+            .filter(gate)
+            .select("doc_id", "text")
         )
-        final, n3 = stage(cleaned.join(kept_ids, "doc_id", "left_semi"))
 
-        # 4. optional decontamination vs an eval-set corpus
+        # 4. optional decontamination vs an eval-set corpus: drop every doc
+        # sharing a word trigram with any eval doc. Semi- and anti-joins
+        # ignore duplicate keys, so neither side needs a distinct.
         n4 = n3
         if args.eval_source:
             ev_docs = read_jsonl_docs(spark, args.eval_source)
-            ev_grams = (
-                ev_docs.select(TX.tokens("content").alias("__tk"))
-                .select(
-                    F.explode(
-                        F.array_distinct(TX.shingles_from_tokens("__tk", 3))
-                    ).alias("g")
-                )
-                .distinct()
+            ev_grams = ev_docs.select(TX.tokens("content").alias("__tk")).select(
+                F.explode(F.array_distinct(TX.shingles_from_tokens("__tk", 3))).alias("g")
             )
             contaminated = (
                 final.select("doc_id", TX.tokens("text").alias("__tk"))
@@ -394,9 +407,8 @@ def cmd_curate(args, cfg) -> int:
                         F.array_distinct(TX.shingles_from_tokens("__tk", 3))
                     ).alias("g"),
                 )
-                .join(F.broadcast(ev_grams), "g")
+                .join(F.broadcast(ev_grams), "g", "left_semi")
                 .select("doc_id")
-                .distinct()
             )
             final, n4 = stage(final.join(contaminated, "doc_id", "left_anti"))
 

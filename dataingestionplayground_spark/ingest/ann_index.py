@@ -40,7 +40,7 @@ from collections.abc import Callable
 from typing import NamedTuple
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -423,8 +423,9 @@ def merge_pq_codes(
         "embedding",
         extra_cols=("documentid",),
     ).withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
-    codes = codes.localCheckpoint(eager=True)  # counted + written once
-    n = codes.count()
+    # encoded once, counted in the same checkpoint action, written once
+    staged = Observation()
+    codes = codes.observe(staged, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
     (
         codes.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -432,7 +433,7 @@ def merge_pq_codes(
         .option("compression", "zstd")
         .parquet(_pq_staging_dir(store, collection))
     )
-    return n
+    return staged.get["n"]
 
 
 def compact_pq_codes(spark: SparkSession, store: CollectionStore, collection: str) -> int:

@@ -17,7 +17,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from dataingestionplayground_spark.functions import text as TX
@@ -100,8 +100,6 @@ def delete_from_export(
     import hashlib
     import shutil
 
-    from pyspark.sql import functions as F
-
     with open(os.path.join(path, MANIFEST_NAME)) as f:
         manifest = json.load(f)
     n_shards = manifest["n_shards"]
@@ -134,23 +132,21 @@ def delete_from_export(
             spark.read.schema(schema).json(shard_dir)
             .filter(~F.col(id_col).cast("string").isin(list(drop)))
         )
-        kept = kept.localCheckpoint(eager=True)  # sever lineage from the dir we rewrite
-        n_rows = kept.count()
+        # the shard's manifest stats are observed in the checkpoint
+        # action that severs lineage from the dir we rewrite
+        aggs = [F.count(F.lit(1)).alias("rows")]
+        if text_col and text_col in kept.columns:
+            aggs.append(F.sum(TX.token_count(text_col).cast("long")).cast("long").alias("tokens"))
+        stats = Observation()
+        kept = kept.observe(stats, *aggs).localCheckpoint(eager=True)
         tmp = shard_dir + ".rewrite-tmp"
         kept.write.mode("overwrite").option("compression", compression).json(tmp)
         shutil.rmtree(shard_dir)
         os.rename(tmp, shard_dir)
-        if n_rows == 0:
+        if stats.get["rows"] == 0:
             manifest["shards"].pop(key)
         else:
-            stats = {"rows": n_rows}
-            if text_col and text_col in kept.columns:
-                from dataingestionplayground_spark.functions import text as TX
-
-                stats["tokens"] = kept.agg(
-                    F.sum(TX.token_count(text_col).cast("long")).cast("long").alias("t")
-                ).collect()[0]["t"]
-            manifest["shards"][key] = stats
+            manifest["shards"][key] = dict(stats.get)
     manifest["total_rows"] = sum(s["rows"] for s in manifest["shards"].values())
     with open(os.path.join(path, MANIFEST_NAME), "w") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 TABLES = (
     "region",
@@ -186,6 +186,42 @@ def fan_out_small_scan(df: DataFrame) -> DataFrame:
     if est_splits >= cores:
         return df
     return df.repartition(cores)
+
+
+def run_observed(df: DataFrame, *metrics) -> dict:
+    """Run ``df`` once and return the aggregate ``metrics`` observed over
+    its rows, as ``{alias: value}``.
+
+    The action is a ``noop`` write of ``df.observe(...)``: one job on a
+    shuffle-free frame, where an ``agg(...).collect()`` adds a shuffle
+    and a second job. The metrics sit in the result stage, so a retried
+    task's partition is counted once. Over no rows, a count is 0 and
+    most other aggregates are None.
+    """
+    obs = Observation()
+    df.observe(obs, *metrics).write.format("noop").mode("overwrite").save()
+    return obs.get
+
+
+def materialize(df: DataFrame) -> tuple[DataFrame, int]:
+    """Cache ``df`` and count its rows in the one action that fills the
+    cache (:func:`run_observed`); returns ``(cached_df, rows)``.
+
+    ``persist()`` keeps the lineage, so a lost block is recomputed. On a
+    shuffle-free frame this is one job, where ``persist()`` plus
+    ``count()`` runs the frame once to cache it and again to count. The
+    caller unpersists the returned frame; if the action fails, the frame
+    is unpersisted here.
+    """
+    from pyspark.sql import functions as F
+
+    df = df.persist()
+    try:
+        rows = run_observed(df, F.count(F.lit(1)).alias("rows"))["rows"]
+    except BaseException:
+        df.unpersist()
+        raise
+    return df, rows
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:

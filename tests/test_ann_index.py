@@ -679,14 +679,17 @@ def test_index_maintenance_leaves_session_conf_alone(
 # collect, the merged checkpoint and the partitioned write; compact
 # collects the staged cells, checkpoints and writes; the refresh step
 # includes the store's document delete, both anti-join counts and the
-# rewrite of the cells that held the deleted document.
+# rewrite of the cells that held the deleted document. A PQ merge is the
+# encode checkpoint, which observes the staged row count, and the write
+# (4 when the count took its own action).
 MAINTENANCE_JOB_BOUND = {
     "ivf": {"merge": 10, "replay": 10, "merge2": 10, "compact": 5, "refresh": 22},
     "ivfpq": {"merge": 15, "replay": 15, "merge2": 15, "compact": 5, "refresh": 22},
+    "pq": {"merge": 2, "replay": 2, "merge2": 2, "compact": 7, "refresh": 17},
 }
 
 
-@pytest.mark.parametrize("kind", ["ivf", "ivfpq"])
+@pytest.mark.parametrize("kind", ["ivf", "ivfpq", "pq"])
 def test_index_maintenance_job_budget(spark, md_elements, tmp_path, kind):
     _, steps = _maintenance_steps(spark, md_elements, tmp_path, kind)
     sc = spark.sparkContext

@@ -102,6 +102,14 @@ def test_cli_info(spark, cms_db, tmp_path, capsys):
     assert cli.main(["info", "--collection", "nope", "--store", store]) == 2
 
 
+# Jobs the dedup run below starts, keep/drop table write included,
+# counted with getJobIdsForGroup in this test's session (local[8], AQE
+# on): 25 with the reassembled docs and the candidate pairs each counted
+# in the action that caches them, 27 when each was persisted and then
+# counted.
+DEDUP_JOB_BOUND = 25
+
+
 def test_cli_dedup_report(spark, tmp_path, capsys):
     # two identical docs + one distinct -> exact-unique 2, kept 2
     src = tmp_path / "md"
@@ -115,8 +123,17 @@ def test_cli_dedup_report(spark, tmp_path, capsys):
                      "--source", str(src), "--store", store]) == 0
     capsys.readouterr()
     out_pq = str(tmp_path / "keep.parquet")
-    assert cli.main(["dedup", "--collection", "dd", "--store", store,
-                     "--out", out_pq]) == 0
+    sc = spark.sparkContext
+    group = "test-cli-dedup-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        rc = cli.main(["dedup", "--collection", "dd", "--store", store, "--out", out_pq])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rc == 0
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= DEDUP_JOB_BOUND, n_jobs
     out = capsys.readouterr().out
     assert "documents:        3" in out
     assert "exact-unique:     2" in out
@@ -220,11 +237,15 @@ def test_cli_curate_full_funnel(spark, tmp_path, capsys):
 
 
 # Jobs one curate run on the five-doc fixture starts, counted with
-# getJobIdsForGroup in this test's session (local[8], AQE on): 34 with
-# each funnel stage cached once, 92 when every count, the export and the
-# data card re-run the whole funnel. The bound leaves a little room for
-# AQE re-planning, not for a stage that is computed twice.
-CURATE_JOB_BOUND = 40
+# getJobIdsForGroup in this test's session (local[8], AQE on), the same
+# in a fresh session: 25 with each funnel stage counted in the action
+# that caches it, the quality threshold observed in one pass, the gate
+# in-row and decontamination without distinct shuffles; 32 when each
+# stage was cached and then counted by a separate action, the gate was a
+# threshold cross join plus a semi-join and decontamination ran two
+# distincts; 92 when every count, the export and the data card re-ran
+# the whole funnel.
+CURATE_JOB_BOUND = 25
 
 
 def test_cli_curate_computes_each_stage_once(spark, tmp_path, capsys):
@@ -237,12 +258,124 @@ def test_cli_curate_computes_each_stage_once(spark, tmp_path, capsys):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert rc == 0 and "after decontam:    2" in capsys.readouterr().out
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert 0 < n_jobs <= CURATE_JOB_BOUND, n_jobs
     # every stage the command cached is released when it returns; a subset
     # test, not equal sizes, since the ContextCleaner may free blocks of
     # earlier tests meanwhile
     assert set(sc._jsc.getPersistentRDDs().keys()) <= before
+
+
+def _reference_funnel(spark, source, eval_source, pct):
+    """The curate funnel computed the long way: the quality threshold
+    joined back as a broadcast cross join and the gate applied as a
+    semi-join on the kept ids, the eval trigrams and the contaminated ids
+    each made distinct. Returns (stage counts, sorted final rows)."""
+    from pyspark.sql import functions as F
+
+    from dataingestionplayground_spark.functions import text as TX
+    from dataingestionplayground_spark.operators.dedup import exact_dedup, line_dedup
+    from dataingestionplayground_spark.queries.textq import quality_scores
+    from dataingestionplayground_spark.sources.textfiles import read_jsonl_docs
+
+    docs = read_jsonl_docs(spark, source).select("doc_id", F.col("content").alias("text"))
+    keep = exact_dedup(docs, "doc_id", "text").select(F.col("keep_id").alias("doc_id"))
+    deduped = docs.join(keep, "doc_id", "left_semi")
+    cleaned = (
+        line_dedup(deduped, min_df=2)
+        .filter(F.col("n_lines_kept") > 0)
+        .select("doc_id", F.col("clean_text").alias("text"))
+    )
+    scored = quality_scores(cleaned.withColumn("n_chars", F.length("text")))
+    thr = scored.agg(F.expr(f"percentile(quality, {pct / 100.0})").alias("q"))
+    kept_ids = (
+        scored.crossJoin(F.broadcast(thr))
+        .filter(F.col("quality") >= F.col("q"))
+        .select("doc_id")
+    )
+    gated = cleaned.join(kept_ids, "doc_id", "left_semi")
+    final = gated
+    if eval_source:
+        ev_grams = (
+            read_jsonl_docs(spark, eval_source)
+            .select(TX.tokens("content").alias("__tk"))
+            .select(F.explode(F.array_distinct(TX.shingles_from_tokens("__tk", 3))).alias("g"))
+            .distinct()
+        )
+        contaminated = (
+            gated.select("doc_id", TX.tokens("text").alias("__tk"))
+            .select(
+                "doc_id",
+                F.explode(F.array_distinct(TX.shingles_from_tokens("__tk", 3))).alias("g"),
+            )
+            .join(F.broadcast(ev_grams), "g")
+            .select("doc_id")
+            .distinct()
+        )
+        final = gated.join(contaminated, "doc_id", "left_anti")
+    counts = [df.count() for df in (docs, deduped, cleaned, gated, final)]
+    return counts, sorted((r.doc_id, r.text) for r in final.collect())
+
+
+_BOILER = "Subscribe to our newsletter today"
+_EDGE_CORPUS = [
+    # t1 and t2 score the same (same lengths, tokens and stopwords) and
+    # score highest, so at --quality-pct 100 they tie at the threshold
+    {"doc_id": "t1", "text": "the cat and the dog of the town is in the house"},
+    {"doc_id": "t2", "text": "the dog and the cat of the town is in the house"},
+    {"doc_id": "t3", "text": "quick brown foxes jump over lazy dogs"},
+    # left with a lone tab line after boilerplate removal: zero tokens
+    {"doc_id": "z", "text": "\t\n" + _BOILER},
+    {"doc_id": "w", "text": "words of plain filler text\n" + _BOILER},
+    # exact duplicates sharing one doc_id
+    {"doc_id": "dup", "text": "same id same text here again"},
+    {"doc_id": "dup", "text": "same id same text here again"},
+    {"doc_id": "c1", "text": "this exact benchmark question appears verbatim"},
+    {"doc_id": "c2", "text": "another exact benchmark question appears too"},
+    {"text": "a doc with no id at all"},
+]
+# both eval docs carry the trigram "exact benchmark question"
+_EDGE_EVAL = [
+    {"doc_id": "e1", "text": "exact benchmark question"},
+    {"doc_id": "e2", "text": "the exact benchmark question again"},
+]
+# every doc is emptied by boilerplate removal: no score, threshold None
+_ALL_BOILER = [
+    {"doc_id": "b0", "text": _BOILER},
+    {"doc_id": "b1", "text": _BOILER + "\n" + _BOILER},
+]
+
+
+@pytest.mark.parametrize(
+    "corpus,pct",
+    [("edge", 0), ("edge", 50), ("edge", 100), ("all_boiler", 50)],
+)
+def test_cli_curate_matches_reference_funnel(spark, tmp_path, capsys, corpus, pct):
+    import os
+
+    rows = {"edge": _EDGE_CORPUS, "all_boiler": _ALL_BOILER}[corpus]
+    src, ev = tmp_path / "corpus.jsonl", tmp_path / "eval.jsonl"
+    src.write_text("".join(json.dumps(r) + "\n" for r in rows))
+    ev.write_text("".join(json.dumps(r) + "\n" for r in _EDGE_EVAL))
+    out_dir = str(tmp_path / "curated")
+    rc = cli.main([
+        "curate", "--source", str(src), "--out", out_dir, "--eval-source", str(ev),
+        "--quality-pct", str(pct), "--shards", "2",
+    ])
+    out = capsys.readouterr().out
+    assert rc == 0
+    got = [int(line.split(":", 1)[1]) for line in out.splitlines()[:5]]
+    want, want_rows = _reference_funnel(spark, str(src), str(ev), pct)
+    assert got == want
+    manifest = json.load(open(os.path.join(out_dir, "_MANIFEST.json")))
+    assert manifest["total_rows"] == want[-1]
+    back = spark.read.schema("doc_id string, text string").json(out_dir)
+    assert sorted((r.doc_id, r.text) for r in back.collect()) == want_rows
+    if corpus == "all_boiler":
+        assert got[2:] == [0, 0, 0]
+    if pct == 100:
+        assert [d for d, _ in want_rows] == ["t1", "t2"]
 
 
 def test_cli_sql_frontend(spark, capsys):

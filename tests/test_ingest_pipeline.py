@@ -408,6 +408,48 @@ def test_delete_from_export_touches_only_affected_shards(spark, tmp_path):
         assert n == s["rows"]
 
 
+# Spark jobs delete_from_export starts per rewritten shard, counted with
+# getJobIdsForGroup in this test's session (local[8], AQE on): 2, the
+# checkpoint that observes the shard's rows and token sum plus the
+# rewrite; 6 when the rows and the token sum took separate actions.
+DELETE_EXPORT_JOBS_PER_SHARD = 2
+
+
+def test_delete_from_export_counts_in_its_checkpoint(spark, tmp_path):
+    import hashlib
+    import os
+
+    from dataingestionplayground_spark.functions import text as TX
+    from dataingestionplayground_spark.ingest.export import delete_from_export, export_jsonl
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select("doc_id", "text")
+    path = str(tmp_path / "exp")
+    m0 = export_jsonl(docs, path, n_shards=4)
+    victims = sorted(r.doc_id for r in docs.limit(3).collect())
+    affected = {int(hashlib.md5(str(v).encode()).hexdigest()[:8], 16) % 4 for v in victims}
+    sc = spark.sparkContext
+    group = "test-delete-export-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        m1 = delete_from_export(spark, path, victims)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= DELETE_EXPORT_JOBS_PER_SHARD * len(affected), (n_jobs, affected)
+    assert m1["total_rows"] == m0["total_rows"] - len(victims)
+    # the observed stats agree with the rewritten data, shard by shard
+    for k, stats in m1["shards"].items():
+        back = spark.read.json(os.path.join(path, f"shard={k}"))
+        want = back.agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(TX.token_count("text").cast("long")).cast("long").alias("tokens"),
+        ).collect()[0].asDict()
+        assert stats == want, (k, stats, want)
+        if int(k) not in affected:
+            assert stats == m0["shards"][k]
+
+
 def test_store_delete_documents(spark, md_elements, tmp_path):
     store = CollectionStore(str(tmp_path))
     ingest_corpus(md_elements, store, "del", max_tokens=32, overlap=0)
