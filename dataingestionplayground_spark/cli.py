@@ -167,9 +167,15 @@ def cmd_search(args, cfg) -> int:
                 pq_search_indexed,
             )
 
+            import pandas as pd
+
+            # from pandas the one-row frame is a LocalRelation, which the
+            # search collects without a Spark job (a local list would be
+            # RDD-backed: one job with a task per core)
             qvec = [float(x) for x in hash_embed(query)]
             q = spark.createDataFrame(
-                [("q", qvec)], "query_id string, query_vec array<float>"
+                pd.DataFrame({"query_id": ["q"], "query_vec": [qvec]}),
+                "query_id string, query_vec array<float>",
             )
             if index == "ivf":
                 # exact cosine over the probed cells' partitions only
@@ -246,7 +252,11 @@ def cmd_dedup(args, cfg) -> int:
     from dataingestionplayground_spark.ingest import CollectionStore
     from dataingestionplayground_spark.ingest.store import reassemble_documents
     from dataingestionplayground_spark.operators.dedup import exact_dedup, minhash_lsh_pairs
-    from dataingestionplayground_spark.operators.graph import dedup_clusters
+    from dataingestionplayground_spark.operators.graph import (
+        _release_local_checkpoint,
+        connected_components,
+        label_clusters,
+    )
     from dataingestionplayground_spark.session import get_spark, materialize
 
     spark = get_spark("dip-dedup")
@@ -258,11 +268,12 @@ def cmd_dedup(args, cfg) -> int:
     # the reassembly groupBy and the pair join each run once, counted in
     # the action that caches them; every action below reads the cache
     docs, n_docs = materialize(reassemble_documents(store.read(spark, collection)))
-    pairs = None
+    pairs = comp = None
     try:
         n_exact = exact_dedup(docs, "documentid", "text").count()
         pairs, n_pairs = materialize(minhash_lsh_pairs(docs, "documentid", "text"))
-        clusters = dedup_clusters(docs, pairs, "documentid")
+        comp = connected_components(pairs)
+        clusters = label_clusters(docs, comp, "documentid")
         n_kept = clusters.filter("is_kept").count()
         print(f"documents:        {n_docs}")
         print(f"exact-unique:     {n_exact}")
@@ -277,6 +288,10 @@ def cmd_dedup(args, cfg) -> int:
         docs.unpersist()
         if pairs is not None:
             pairs.unpersist()
+        if comp is not None:
+            # the component labels are a localCheckpoint: free its blocks
+            # now rather than when the ContextCleaner gets to them
+            _release_local_checkpoint(comp)
     return 0
 
 

@@ -117,16 +117,34 @@ class _QuerySet:
         scored = cand.withColumn(qvec, F.element_at(vectors, F.col(qid))).withColumn(
             "score", V.cosine_similarity("embedding", qvec)
         )
-        w = Window.partitionBy(qid).orderBy(F.desc_nulls_last("score"), F.asc("key"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(qid, "key", "score", "rank")
-        )
+        order = (F.desc_nulls_last("score"), F.asc("key"))
+        return _ranked(scored, qid, order, k, self.single).select(qid, "key", "score", "rank")
+
+    @property
+    def single(self) -> bool:
+        return len(self.ids) == 1
+
+
+def _ranked(scored: DataFrame, qid: str, order: tuple, k: int, single: bool) -> DataFrame:
+    """The first ``k`` rows per query under ``order``, numbered by
+    ``rank``. A single query's top-k is a TakeOrdered: each partition's
+    k best are merged inside one job, and its one-partition output
+    already meets the window's ``partitionBy(qid)``, so ranking adds no
+    exchange. Several queries rank through the window alone, whose
+    exchange is preceded by a per-partition WindowGroupLimit."""
+    if single:
+        scored = scored.orderBy(*order).limit(k)
+    w = Window.partitionBy(qid).orderBy(*order)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def _adc_topk(
-    scored: DataFrame, query_id: str, offs: list[int], depth: int, best_per_key: bool
+    scored: DataFrame,
+    query_id: str,
+    offs: list[int],
+    depth: int,
+    best_per_key: bool,
+    single: bool,
 ) -> DataFrame:
     """ADC top-``depth`` per query over code rows carrying ``__l``, the
     struct (q, lut) of one query's flat lookup table: the distance is m
@@ -141,11 +159,9 @@ def _adc_topk(
     )
     if best_per_key:
         scored = scored.groupBy(query_id, "key").agg(F.min("adc_dist").alias("adc_dist"))
-    w = Window.partitionBy(query_id).orderBy(F.asc("adc_dist"), F.asc("key"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= depth)
-        .select(query_id, "key", F.round("adc_dist", 9).alias("adc_dist"), "rank")
+    order = (F.asc("adc_dist"), F.asc("key"))
+    return _ranked(scored, query_id, order, depth, single).select(
+        query_id, "key", F.round("adc_dist", 9).alias("adc_dist"), "rank"
     )
 
 
@@ -566,7 +582,10 @@ def pq_search_indexed(
     lut_rows = folded_literal(rows, T.ArrayType(qs.row_type("lut", T.ArrayType(T.DoubleType()))))
     scored = read_pq_codes(spark, store, collection).withColumn("__l", F.explode(lut_rows))
     offs = [s * meta["n_centroids"] for s in range(meta["m"])]
-    adc = _adc_topk(scored, query_id, offs, max(k, rerank) if rerank else k, best_per_key=False)
+    adc = _adc_topk(
+        scored, query_id, offs, max(k, rerank) if rerank else k,
+        best_per_key=False, single=qs.single,
+    )
     if not rerank:
         return adc
     short = adc.select(query_id, "key")  # shortlist x |queries|: tiny
@@ -1348,7 +1367,10 @@ def ivfpq_search_indexed(
     # reachable through two probed cells scores once (its best ADC
     # estimate), not twice
     soft = int(meta.get("assign_top", 1)) > 1
-    adc = _adc_topk(scored, query_id, offs, max(k, rerank) if rerank else k, best_per_key=soft)
+    adc = _adc_topk(
+        scored, query_id, offs, max(k, rerank) if rerank else k,
+        best_per_key=soft, single=qs.single,
+    )
     if not rerank:
         return adc
     short = adc.select(query_id, "key")

@@ -153,7 +153,14 @@ def dedup_clusters(
     """Assign every row a duplicate-cluster id (= min id in its near-dup
     component; singletons are their own cluster) and a keep flag for the
     cluster representative."""
-    comp = connected_components(pairs, id_a, id_b)
+    return label_clusters(df, connected_components(pairs, id_a, id_b), id_col)
+
+
+def label_clusters(df: DataFrame, comp: DataFrame, id_col: str) -> DataFrame:
+    """``df``'s ids with their cluster id from ``comp``, the (id,
+    component) output of :func:`connected_components` (ids absent from
+    it are singleton clusters), and the representative's keep flag. A
+    caller that holds ``comp`` can release its checkpoint when done."""
     return (
         df.select(F.col(id_col).alias("id"))
         .join(comp, "id", "left")

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from dataingestionplayground_spark.functions.portable import md5_mod_sql
 from dataingestionplayground_spark.operators.dedup import banded_pairs
 from dataingestionplayground_spark.queries import register
 from dataingestionplayground_spark.session import fan_out_small_scan
@@ -241,10 +242,7 @@ def _ahash_bands_sql() -> str:
     4 x 16-bit banding (the uniform 2-column band key lets the video
     modality, whose band key is a full 64-bit keyframe hash, share the
     card's machinery)."""
-    from dataingestionplayground_spark.queries.pipelineq import _md5_mod_sql
-
-    def mm(expr, mod):
-        return _md5_mod_sql(expr, mod)
+    mm = md5_mod_sql
 
     base_i = mm("concat(CAST(doc_id % 50 AS VARCHAR), ':px:', CAST(i AS VARCHAR))", 256)
     pp = [mm(f"concat(CAST(doc_id AS VARCHAR), ':pp:{j}')", 64) for j in range(3)]
@@ -438,10 +436,7 @@ def _dct_basis() -> list:
 
 
 def _phash_oracle() -> str:
-    from dataingestionplayground_spark.queries.pipelineq import _md5_mod_sql
-
-    def mm(expr, mod):
-        return _md5_mod_sql(expr, mod)
+    mm = md5_mod_sql
 
     base_i = mm("concat(CAST(doc_id % 50 AS VARCHAR), ':px:', CAST(i AS VARCHAR))", 256)
     pp = [mm(f"concat(CAST(doc_id AS VARCHAR), ':pp:{j}')", 64) for j in range(3)]
@@ -775,10 +770,7 @@ def _audio_bands_sql() -> str:
     fingerprint table bands(doc_id, band_idx, band_lo, band_hi, w_lo,
     w_hi) — the closed-form twin of ``_bands4(_audio_fp_frame(...))``;
     shared by the pair oracle and the dedup-card oracle."""
-    from dataingestionplayground_spark.queries.pipelineq import _md5_mod_sql
-
-    def mm(expr, mod):
-        return _md5_mod_sql(expr, mod)
+    mm = md5_mod_sql
 
     base_i = (
         mm("concat(CAST(gid AS VARCHAR), ':au:', CAST(i AS VARCHAR))", 4096)
@@ -1017,10 +1009,7 @@ def _video_frame_hashes(spark, sf, keyframes_only: bool = False, packed: bool = 
 def _video_hashed_cte(keyframes_only: bool) -> str:
     """The oracle's closed-form twin of _video_frame_hashes, as a CTE
     chain ending in hashed(doc_id, frame_idx, w_lo, w_hi)."""
-    from dataingestionplayground_spark.queries.pipelineq import _md5_mod_sql
-
-    def mm(expr, mod):
-        return _md5_mod_sql(expr, mod)
+    mm = md5_mod_sql
 
     base_i = mm(
         "concat(CAST(gid AS VARCHAR), ':vs', CAST(scene_idx AS VARCHAR),"

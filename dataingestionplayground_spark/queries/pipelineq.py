@@ -20,6 +20,9 @@ from dataingestionplayground_spark.functions.portable import (
     md5_mod,
     md5_mod_sql,
 )
+# the oracles below read dedupq's, textq's and vectorq's registered
+# oracles through REGISTRY while this module is imported
+from dataingestionplayground_spark.queries import dedupq, vectorq  # noqa: F401
 from dataingestionplayground_spark.queries.textq import _QUALITY_SQL
 from dataingestionplayground_spark.queries import register
 from dataingestionplayground_spark.session import fan_out_small_scan

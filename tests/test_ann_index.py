@@ -547,11 +547,13 @@ def test_ivfpq_refresh_appends_only_new_drops_orphans_and_ensure(
 # Spark jobs one single-query indexed search starts, build plus collect,
 # counted with getJobIdsForGroup in this test's session (local[8], AQE
 # on): the driver collect of the query frame plus the search's own query
-# stages. Measured IVF 4, PQ 5, IVFPQ 5 with query-side data passed as
-# folded literals; IVF 7, PQ 8, IVFPQ 8 when each index read inferred its
+# stages. Measured IVF 3, PQ 3, IVFPQ 3 with each top-k a TakeOrdered
+# (no query_id exchange); IVF 4, PQ 5, IVFPQ 5 when every top-k ranked
+# through a Window.partitionBy(query_id) exchange, which AQE ran as a job
+# of its own; IVF 7, PQ 8, IVFPQ 8 when each index read inferred its
 # schema and each RDD-backed side frame (the query frame, probe table,
 # codebook, lookup tables) cost a job per broadcast.
-SEARCH_JOB_BOUND = {"ivf": 4, "pq": 5, "ivfpq": 5}
+SEARCH_JOB_BOUND = {"ivf": 3, "pq": 3, "ivfpq": 3}
 
 
 def test_indexed_search_job_budget(spark, md_elements, tmp_path):
@@ -586,8 +588,11 @@ def test_indexed_search_job_budget(spark, md_elements, tmp_path):
         assert rows
         n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
         assert 0 < n_jobs <= SEARCH_JOB_BOUND[kind], (kind, n_jobs)
+        plan = physical_plan(hits)
         # no RDD-backed side frame anywhere in the plan
-        assert "ExistingRDD" not in physical_plan(hits), kind
+        assert "ExistingRDD" not in plan, kind
+        # a single query's top-k is a TakeOrdered: ranking adds no exchange
+        assert "TakeOrderedAndProject" in plan and "hashpartitioning" not in plan, kind
 
 
 # Index maintenance: the merge / replay / compact / refresh-after-delete

@@ -124,6 +124,7 @@ def test_cli_dedup_report(spark, tmp_path, capsys):
     capsys.readouterr()
     out_pq = str(tmp_path / "keep.parquet")
     sc = spark.sparkContext
+    persisted = set(sc._jsc.getPersistentRDDs().keys())
     group = "test-cli-dedup-jobs"
     sc.setJobGroup(group, group)
     try:
@@ -131,6 +132,8 @@ def test_cli_dedup_report(spark, tmp_path, capsys):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert rc == 0
+    # everything the command cached or checkpointed is released on return
+    assert set(sc._jsc.getPersistentRDDs().keys()) == persisted
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert 0 < n_jobs <= DEDUP_JOB_BOUND, n_jobs
@@ -407,6 +410,14 @@ def test_cli_curate_without_eval_source(spark, tmp_path, capsys):
     assert spark.read.json(out_dir).count() == 2
 
 
+# Spark jobs one `search --index ivf|pq` query runs over a current index
+# (the staleness check, the search, the display join), counted in the
+# test session: IVF 9, PQ 9 with the query frame a LocalRelation and each
+# top-k a TakeOrdered; IVF 11, PQ 12 with an RDD-backed query frame and
+# window-ranked top-k.
+CLI_SEARCH_JOB_BOUND = {"ivf": 9, "pq": 9}
+
+
 def test_cli_indexed_search_matches_bruteforce(spark, md_fixture_dir, tmp_path, capsys):
     """`search --index pq|ivf` must return the brute-force top-k on the
     fixture corpus (verdict r6 item 6): IVF probing every cell is exact
@@ -429,16 +440,32 @@ def test_cli_indexed_search_matches_bruteforce(spark, md_fixture_dir, tmp_path, 
         lines = [l for l in cap.out.splitlines() if l.startswith("score=")]
         return [l.split("documentid=")[1] for l in lines], cap.err
 
+    def counted(extra):
+        """hits() plus the Spark jobs the command ran."""
+        sc = spark.sparkContext
+        group = f"test-cli-search-jobs-{extra[1]}"
+        sc.setJobGroup(group, group)
+        try:
+            out = hits(extra)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
     brute, _ = hits([])
     ivf, err1 = hits(["--index", "ivf", "--n-probe", "8"])  # all cells -> exact
     assert ivf == brute
     assert "ivf index built" in err1
-    ivf2, err2 = hits(["--index", "ivf", "--n-probe", "8"])
+    (ivf2, err2), n_jobs = counted(["--index", "ivf", "--n-probe", "8"])
     assert ivf2 == brute and "built" not in err2 and "refreshed" not in err2
+    assert 0 < n_jobs <= CLI_SEARCH_JOB_BOUND["ivf"], n_jobs
 
     pq, perr = hits(["--index", "pq"])
     assert pq == brute
     assert "pq index built" in perr
+    (pq2, perr2), n_jobs = counted(["--index", "pq"])
+    assert pq2 == brute and "built" not in perr2
+    assert 0 < n_jobs <= CLI_SEARCH_JOB_BOUND["pq"], n_jobs
 
     # incremental ingest makes the index stale -> next search refreshes
     extra_dir = tmp_path / "extra_md"

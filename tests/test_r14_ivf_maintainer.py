@@ -30,6 +30,7 @@ from dataingestionplayground_spark.ingest.ann_index import (
     refresh_ivf_index,
 )
 from dataingestionplayground_spark.ingest.embed import hash_embed
+from dataingestionplayground_spark.sources.schemas import CHUNK_SCHEMA
 from dataingestionplayground_spark.sources.markdown import (
     parse_markdown_df,
     read_markdown_dir,
@@ -168,16 +169,29 @@ def test_retrain_signal_crosses_threshold_on_skewed_increment(
     assert before["n_assigned"] > 0 and before["skew"] >= 1.0
     assert before["retrain"] is False  # absurd threshold: no retrain
 
-    # a drifted crawl: many copies of ONE document — identical
-    # embeddings all land in the same frozen cell
-    one = md_elements.filter(
-        F.col("doc_id") == md_elements.select("doc_id").first()["doc_id"]
+    # a drifted crawl: many copies of ONE chunk of the fullest cell —
+    # identical embeddings all land in that frozen cell (a document's
+    # chunks spread over several cells, so copies of a whole document
+    # need not raise the largest share)
+    counts = read_ivf_assignments(spark, store, "ivf").groupBy("cell").count().collect()
+    fullest = max(counts, key=lambda r: (r["count"], -r["cell"]))["cell"]
+    key = (
+        read_ivf_assignments(spark, store, "ivf")
+        .filter(F.col("cell") == fullest)
+        .agg(F.min("key"))
+        .first()[0]
     )
+    chunk = store.read(spark, "ivf").filter(F.col("key") == key).collect()
     for i in range(6):
-        extra = one.withColumn(
-            "doc_id", F.concat(F.col("doc_id"), F.lit(f"-skew{i}"))
+        extra = spark.createDataFrame(chunk, CHUNK_SCHEMA).select(
+            F.concat("key", F.lit(f"-skew{i}")).alias("key"),
+            "embedding",
+            "content",
+            "context",
+            F.concat("documentid", F.lit(f"-skew{i}")).alias("documentid"),
+            "chunk_idx",
         )
-        ingest_corpus(extra, store, "ivf", max_tokens=8, overlap=0, incremental=True)
+        store.write(extra, "ivf", incremental=True)
         merge_ivf_assignments(
             spark, store, "ivf", _batch(spark, store, f"-skew{i}"), epoch_id=10 + i
         )
