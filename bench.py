@@ -342,6 +342,7 @@ def _bench_index_paths(spark, data_dir: str, timings: dict, medians: dict) -> di
     from pyspark.sql import functions as F
 
     from dataingestionplayground_spark.ingest.ann_index import (
+        _load_meta,
         build_ivf_index,
         build_ivfpq_index,
         build_pq_index,
@@ -377,7 +378,7 @@ def _bench_index_paths(spark, data_dir: str, timings: dict, medians: dict) -> di
     pq_meta_path = os.path.join(idx_base, "_indexes", "embeddings", "pq", "pq.json")
     stale_cfg = True
     if os.path.exists(pq_meta_path):
-        old_meta = json.load(open(pq_meta_path))
+        old_meta = _load_meta(store, "embeddings", "pq")
         stale_cfg = any(old_meta.get(k) != v for k, v in pq_cfg.items())
     if stale_cfg:
         build_pq_index(spark, store, "embeddings", dims=64, **pq_cfg)
@@ -441,7 +442,7 @@ def _bench_index_paths(spark, data_dir: str, timings: dict, medians: dict) -> di
     ivf_meta_path = os.path.join(idx_base, "_indexes", "embeddings", "ivf", "ivf.json")
     ivf_stale = True
     if os.path.exists(ivf_meta_path):
-        old_ivf = json.load(open(ivf_meta_path))
+        old_ivf = _load_meta(store, "embeddings", "ivf")
         ivf_stale = any(old_ivf.get(k) != v for k, v in ivf_cfg.items())
     if ivf_stale:
         build_ivf_index(spark, store, "embeddings", **ivf_cfg)
@@ -498,7 +499,7 @@ def _bench_index_paths(spark, data_dir: str, timings: dict, medians: dict) -> di
     )
     ivfpq_stale = True
     if os.path.exists(ivfpq_meta_path):
-        old_ipq = json.load(open(ivfpq_meta_path))
+        old_ipq = _load_meta(store, "embeddings", "ivfpq")
         ivfpq_stale = any(old_ipq.get(k) != v for k, v in ivfpq_cfg.items())
     if ivfpq_stale:
         build_ivfpq_index(spark, store, "embeddings", dims=64, **ivfpq_cfg)

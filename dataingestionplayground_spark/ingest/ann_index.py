@@ -9,11 +9,22 @@ collection listings skip it, mirroring Spark's ``_``-file convention)::
 
     <base>/_indexes/<collection>/pq/codes/          parquet: key, documentid, code_0..m-1
     <base>/_indexes/<collection>/pq/codes_epochs/   merge staging, partitioned by epoch_id
-    <base>/_indexes/<collection>/pq/pq.json         params + the frozen codebook
+    <base>/_indexes/<collection>/pq/pq.json         params + the frozen codebook block
     <base>/_indexes/<collection>/ivf/cells/         assignments, partitioned by cell
-    <base>/_indexes/<collection>/ivf/ivf.json       params + the frozen centroids
+    <base>/_indexes/<collection>/ivf/ivf.json       params + the frozen centroid block
     <base>/_indexes/<collection>/ivfpq/codes/       residual codes, partitioned by cell
-    <base>/_indexes/<collection>/ivfpq/ivfpq.json   params + both frozen quantizers
+    <base>/_indexes/<collection>/ivfpq/ivfpq.json   params + both frozen quantizer blocks
+
+A meta is one JSON file, replaced whole (temp file + ``os.replace``), so
+no reader pairs one build's parameters with another's quantizers. Its
+quantizer blocks (``cents``, ``coarse``) are stored as little-endian
+float64 bytes in base64 — ``{"shape": [rows, dims], "f64": ...}``, a
+PQ codebook adding its ``[subspace, cid]`` pairs as ``ids`` — at about
+11 bytes per value where decimal JSON text takes about 20, and
+:func:`_load_meta` decodes them back to the lists the builds return. A
+block that is not a full float matrix (a None from a mean over all-null
+positions), and every block of a meta written before the encoding,
+stays a JSON list and loads as written.
 
 Quantizers are FROZEN at build time and stored in the meta: maintenance
 encodes new vectors against the original centroids (codes from
@@ -33,6 +44,7 @@ table that a compaction folds into the base with one full rewrite.
 
 from __future__ import annotations
 
+import base64
 import json
 import os
 import shutil
@@ -181,6 +193,58 @@ def _meta_path(store: CollectionStore, collection: str, kind: str) -> str:
     return os.path.join(_index_dir(store, collection, kind), f"{kind}.json")
 
 
+#: meta fields holding a frozen quantizer: vectors (IVF ``cents``, IVFPQ
+#: ``coarse``) or ``[subspace, cid, vector]`` codebook rows (PQ and IVFPQ
+#: ``cents``)
+_BLOCKS = ("cents", "coarse")
+
+
+def _is_matrix(vecs: list) -> bool:
+    """Rows of equal length holding only floats: what float64 bytes
+    round-trip exactly."""
+    return (
+        all(isinstance(v, (list, tuple)) for v in vecs)
+        and len({len(v) for v in vecs}) == 1
+        and all(isinstance(x, float) for v in vecs for x in v)
+    )
+
+
+def _pack_block(rows: list):
+    """A quantizer block as ``{"shape", "f64"}`` (plus ``ids`` for
+    codebook rows), or ``rows`` unchanged when they are not a full
+    float matrix."""
+    if not rows:
+        return rows
+    out = {}
+    if all(
+        isinstance(r, (list, tuple)) and len(r) == 3
+        and isinstance(r[0], int) and isinstance(r[1], int)
+        for r in rows
+    ):
+        out["ids"] = [[r[0], r[1]] for r in rows]
+        vecs = [r[2] for r in rows]
+    else:
+        vecs = rows
+    if not _is_matrix(vecs):
+        return rows
+    arr = np.asarray(vecs, dtype="<f8")
+    out["shape"] = list(arr.shape)
+    out["f64"] = base64.b64encode(arr.tobytes()).decode("ascii")
+    return out
+
+
+def _unpack_block(block):
+    """The list form of a stored block; a list (a meta written before
+    the encoding, or a block that is not a float matrix) as stored."""
+    if not isinstance(block, dict):
+        return block
+    raw = base64.b64decode(block["f64"])
+    vecs = np.frombuffer(raw, dtype="<f8").reshape(block["shape"]).tolist()
+    if "ids" not in block:
+        return vecs
+    return [[s, cid, v] for (s, cid), v in zip(block["ids"], vecs)]
+
+
 def _load_meta(store: CollectionStore, collection: str, kind: str) -> dict:
     path = _meta_path(store, collection, kind)
     if not os.path.exists(path):
@@ -189,7 +253,11 @@ def _load_meta(store: CollectionStore, collection: str, kind: str) -> dict:
             f"run build_{kind}_index first"
         )
     with open(path) as f:
-        return json.load(f)
+        meta = json.load(f)
+    for name in _BLOCKS:
+        if name in meta:
+            meta[name] = _unpack_block(meta[name])
+    return meta
 
 
 def _load_ivf_meta(store: CollectionStore, collection: str) -> dict:
@@ -198,9 +266,10 @@ def _load_ivf_meta(store: CollectionStore, collection: str) -> dict:
 
 
 def _write_meta(path: str, meta: dict) -> None:
+    stored = {k: _pack_block(v) if k in _BLOCKS else v for k, v in meta.items()}
     os.makedirs(os.path.dirname(path), exist_ok=True)
     with open(path + ".tmp", "w") as f:
-        json.dump(meta, f)
+        json.dump(stored, f, separators=(",", ":"))
     os.replace(path + ".tmp", path)  # a reader never sees a partial file
 
 
@@ -271,13 +340,23 @@ def _staleness(
     """(missing, orphaned) chunk-key counts of an index table: missing =
     chunks with no index row (ingested after the last refresh);
     orphaned = index rows whose chunk no longer exists (deleted
-    documents)."""
-    keys = store.read(spark, collection).select("key")
-    indexed = indexed.select("key")
-    return {
-        "missing": keys.join(indexed, "key", "left_anti").count(),
-        "orphaned": indexed.join(keys, "key", "left_anti").count(),
-    }
+    documents). One full outer join on key, counted in one action, reads
+    each side once: a row without the index side's marker is a missing
+    chunk, one without the store side's marker an orphaned index row.
+    Counts are of rows, as the two left-anti joins counted them: a key
+    stored twice counts twice, and a null key, which matches nothing,
+    counts on its own side."""
+    keys = store.read(spark, collection).select("key", F.lit(True).alias("__chunk"))
+    indexed = indexed.select("key", F.lit(True).alias("__indexed"))
+    counts = (
+        keys.join(indexed, "key", "full_outer")
+        .agg(
+            F.count(F.when(F.col("__indexed").isNull(), 1)).alias("missing"),
+            F.count(F.when(F.col("__chunk").isNull(), 1)).alias("orphaned"),
+        )
+        .first()
+    )
+    return {"missing": counts["missing"], "orphaned": counts["orphaned"]}
 
 
 def _embedding_dims(spark: SparkSession, store: CollectionStore, collection: str) -> int:
@@ -372,9 +451,7 @@ def build_pq_index(
         .option("compression", "zstd")
         .parquet(os.path.join(idx, "codes"))
     )
-    os.makedirs(idx, exist_ok=True)
-    with open(os.path.join(idx, "pq.json"), "w") as f:
-        json.dump(meta, f)
+    _write_meta(_meta_path(store, collection, "pq"), meta)
     return meta
 
 
@@ -389,9 +466,16 @@ def read_pq_codes(spark: SparkSession, store: CollectionStore, collection: str) 
     code shadows its base row; base rows read as epoch NULL and lose
     ties last). Search and staleness both read through here, so staged
     codes are searchable before compaction."""
+    return _read_pq_codes(spark, store, collection, _load_meta(store, collection, "pq"))
+
+
+def _read_pq_codes(
+    spark: SparkSession, store: CollectionStore, collection: str, meta: dict
+) -> DataFrame:
+    """:func:`read_pq_codes` with the PQ meta the caller already loaded."""
     codes_path = os.path.join(_index_dir(store, collection, "pq"), "codes")
     _recover_live_dir(codes_path)  # finish any interrupted compaction swap
-    schema = _ddl(_pq_columns(_load_meta(store, collection, "pq")))
+    schema = _ddl(_pq_columns(meta))
     base = spark.read.schema(schema).parquet(codes_path)
     staging = _pq_staging_dir(store, collection)
     if not _has_parquet(staging):
@@ -580,7 +664,9 @@ def pq_search_indexed(
     rows = [{"q": q, "lut": lut} for q, lut in zip(qs.ids, luts)]
     # every query scores every code row: explode the one LUT literal
     lut_rows = folded_literal(rows, T.ArrayType(qs.row_type("lut", T.ArrayType(T.DoubleType()))))
-    scored = read_pq_codes(spark, store, collection).withColumn("__l", F.explode(lut_rows))
+    scored = _read_pq_codes(spark, store, collection, meta).withColumn(
+        "__l", F.explode(lut_rows)
+    )
     offs = [s * meta["n_centroids"] for s in range(meta["m"])]
     adc = _adc_topk(
         scored, query_id, offs, max(k, rerank) if rerank else k,
@@ -690,16 +776,20 @@ def _cells_path(store: CollectionStore, collection: str, kind: _CellKind) -> str
 
 
 def _read_cells(
-    spark: SparkSession, store: CollectionStore, collection: str, kind: _CellKind
+    spark: SparkSession,
+    store: CollectionStore,
+    collection: str,
+    kind: _CellKind,
+    meta: dict,
 ) -> DataFrame:
-    """The table read with the column set its meta records. An index
-    whose meta predates that field is inferred — mergeSchema, because a
-    merge stages epoch-tagged rows next to epoch-less base/refresh rows
-    (read back as epoch_id NULL). A table whose every cell partition
-    has been deleted (refresh drops emptied partitions) is an EMPTY
-    frame, since a dir with no data files fails inference."""
+    """The table read with the column set its ``meta`` (loaded by the
+    caller) records. An index whose meta predates that field is
+    inferred — mergeSchema, because a merge stages epoch-tagged rows
+    next to epoch-less base/refresh rows (read back as epoch_id NULL).
+    A table whose every cell partition has been deleted (refresh drops
+    emptied partitions) is an EMPTY frame, since a dir with no data
+    files fails inference."""
     path = _cells_path(store, collection, kind)
-    meta = _load_meta(store, collection, kind.name)
     if not _has_parquet(path):
         return spark.createDataFrame([], _ddl(meta.get("columns", kind.legacy_columns(meta))))
     if "columns" not in meta:
@@ -748,7 +838,7 @@ def _merge_cells(
     hot = [r["cell"] for r in fresh.select("cell").distinct().collect()]
     if not hot:
         return 0
-    existing = _read_cells(spark, store, collection, kind)
+    existing = _read_cells(spark, store, collection, kind, meta)
     if "epoch_id" not in existing.columns:
         existing = existing.withColumn("epoch_id", F.lit(None).cast("long"))
     payload = [c for c in fresh.columns if c not in ("key", "documentid", "cell", "epoch_id")]
@@ -773,7 +863,8 @@ def _compact_cells(
 ) -> int:
     """Fold epoch-tagged rows down to epoch-NULL rows (see
     :func:`compact_ivf_assignments`). Returns cell partitions rewritten."""
-    table = _read_cells(spark, store, collection, kind)
+    meta = _load_meta(store, collection, kind.name)
+    table = _read_cells(spark, store, collection, kind, meta)
     if "epoch_id" not in table.columns:
         return 0
     staged = [
@@ -801,13 +892,13 @@ def _refresh_cells(
     meta = _load_meta(store, collection, kind.name)
     path = _cells_path(store, collection, kind)
     chunks = store.read(spark, collection).select("key", "documentid", "embedding")
-    table = _read_cells(spark, store, collection, kind)
+    table = _read_cells(spark, store, collection, kind, meta)
 
     new = chunks.join(table.select("key"), "key", "left_anti")
     appended = new.count()
     if appended:
         _write_cells(kind.encode(meta, new), path, "append")
-        table = _read_cells(spark, store, collection, kind)
+        table = _read_cells(spark, store, collection, kind, meta)
 
     orphans = table.join(chunks.select("key"), "key", "left_anti")
     removed = orphans.count()
@@ -842,7 +933,7 @@ def _retrain_signal(
     :func:`ivf_retrain_signal`): one cell-count agg, never a corpus scan."""
     meta = _load_meta(store, collection, kind.name)
     counts = (
-        _read_cells(spark, store, collection, kind)
+        _read_cells(spark, store, collection, kind, meta)
         .groupBy("cell")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
         .collect()
@@ -947,7 +1038,8 @@ def build_ivf_index(
 def read_ivf_assignments(
     spark: SparkSession, store: CollectionStore, collection: str
 ) -> DataFrame:
-    return _read_cells(spark, store, collection, _IVF)
+    meta = _load_meta(store, collection, "ivf")
+    return _read_cells(spark, store, collection, _IVF, meta)
 
 
 def ivf_index_staleness(
@@ -974,9 +1066,7 @@ def ensure_index(
         )
     # build_* and refresh_* are looked up as module attributes at call
     # time, so a wrapper installed on the module (a tracer) sees the call
-    try:
-        _load_meta(store, collection, kind)
-    except FileNotFoundError:
+    if not os.path.exists(_meta_path(store, collection, kind)):
         if kind in ("pq", "ivfpq"):
             if "dims" not in build_kwargs:  # the probe is a Spark job
                 build_kwargs["dims"] = _embedding_dims(spark, store, collection)
@@ -1118,7 +1208,7 @@ def ivf_search_indexed(
     for qid, cells in zip(qs.ids, order.tolist()):
         for c in cells:
             by_cell.setdefault(c, []).append({"q": qid, "p": cells})
-    assigned = read_ivf_assignments(spark, store, collection).filter(
+    assigned = _read_cells(spark, store, collection, _IVF, meta).filter(
         F.col("cell").isin(sorted(by_cell))  # literal -> static partition pruning
     )
     probes = folded_map(
@@ -1232,7 +1322,8 @@ def build_ivfpq_index(
 def read_ivfpq_codes(
     spark: SparkSession, store: CollectionStore, collection: str
 ) -> DataFrame:
-    return _read_cells(spark, store, collection, _IVFPQ)
+    meta = _load_meta(store, collection, "ivfpq")
+    return _read_cells(spark, store, collection, _IVFPQ, meta)
 
 
 def merge_ivfpq_codes(
@@ -1359,7 +1450,7 @@ def ivfpq_search_indexed(
         by_cell, T.IntegerType(), T.ArrayType(qs.row_type("lut", T.ArrayType(T.DoubleType())))
     )
     scored = (
-        read_ivfpq_codes(spark, store, collection)
+        _read_cells(spark, store, collection, _IVFPQ, meta)
         .filter(F.col("cell").isin(sorted(by_cell)))  # literal -> static partition pruning
         .withColumn("__l", F.explode(F.element_at(luts, F.col("cell"))))
     )

@@ -55,6 +55,7 @@ def sweep(spark, data_dir: str, depths, probes, n_runs: int = 3) -> dict:
     from bench import _bench_index_paths  # builds/reuses the cached index
 
     from dataingestionplayground_spark.ingest.ann_index import (
+        _load_meta,
         ivf_search_indexed,
         pq_search_indexed,
     )
@@ -104,9 +105,7 @@ def sweep(spark, data_dir: str, depths, probes, n_runs: int = 3) -> dict:
         )
         print(f"  pq {sf_name} depth={depth}: {pq_rows[-1]}", flush=True)
 
-    meta = json.load(
-        open(os.path.join(store.base_path, "_indexes", "embeddings", "ivf", "ivf.json"))
-    )
+    meta = _load_meta(store, "embeddings", "ivf")
     n_cells = meta["n_cells"]
     ivf_rows = []
     for n_probe in probes:
