@@ -266,7 +266,7 @@ def cmd_dedup(args, cfg) -> int:
         print(f"error: collection {collection!r} not found", file=sys.stderr)
         return 2
     # the reassembly groupBy and the pair join each run once, counted in
-    # the action that caches them; every action below reads the cache
+    # the job that caches them; every action below reads the cache
     docs, n_docs = materialize(reassemble_documents(store.read(spark, collection)))
     pairs = comp = None
     try:
@@ -345,11 +345,12 @@ def cmd_curate(args, cfg) -> int:
     spark = get_spark("dip-curate")
 
     # Each funnel stage, the input docs included, is cached and counted
-    # in the one action that fills the cache (``materialize``), so the
-    # next stage, the export and the data card read it from cache
-    # instead of re-running every stage before it. persist() keeps the
-    # lineage, so a lost block is recomputed. A stage is released once
-    # the stage after it is counted: at most two are cached at once.
+    # in the one job that fills the cache (``materialize``), so a stage
+    # costs only the jobs of its own plan, and the next stage, the export
+    # and the data card read it from cache instead of re-running every
+    # stage before it. persist() keeps the lineage, so a lost block is
+    # recomputed. A stage is released once the stage after it is
+    # counted: at most two are cached at once.
     cached: list = []
 
     def stage(df):

@@ -160,14 +160,29 @@ def label_clusters(df: DataFrame, comp: DataFrame, id_col: str) -> DataFrame:
     """``df``'s ids with their cluster id from ``comp``, the (id,
     component) output of :func:`connected_components` (ids absent from
     it are singleton clusters), and the representative's keep flag. A
-    caller that holds ``comp`` can release its checkpoint when done."""
+    caller that holds ``comp`` can release its checkpoint when done.
+
+    One exchange keyed by id, where a left join exchanges both sides:
+    ``df``'s ids (component = own id) and ``comp``'s rows are unioned and
+    each id takes the minimum component over its partition. A component
+    is its component's minimum id, so that minimum is ``comp``'s label
+    where the id has one and the id itself otherwise. Only ``df``'s rows
+    are kept: one per row, duplicate ids included, and ``comp`` ids
+    absent from ``df`` drop out. A null id matches nothing, so its
+    cluster id and keep flag are null."""
+    from pyspark.sql import Window
+
+    id_type = df.schema[id_col].dataType
+    labelled = df.select(
+        F.col(id_col).alias("id"), F.col(id_col).alias("component"), F.lit(True).alias("__row")
+    ).unionByName(comp.select("id", "component", F.lit(False).alias("__row")))
     return (
-        df.select(F.col(id_col).alias("id"))
-        .join(comp, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce(F.col("component"), F.col("id")).alias("cluster_id"),
+        labelled.withColumn(
+            "cluster_id",
+            F.when(F.col("id").isNotNull(), F.min("component").over(Window.partitionBy("id"))),
         )
+        .filter("__row")
+        .select(F.col("id").cast(id_type).alias(id_col), "cluster_id")
         .withColumn("is_kept", F.col(id_col) == F.col("cluster_id"))
     )
 

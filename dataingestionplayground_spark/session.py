@@ -50,18 +50,16 @@ def get_spark(app_name: str = "dataingestionplayground_spark", cpus: int | None 
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # guide §3.1/§9: let the planner pick shuffled-hash over
-        # sort-merge when the per-partition build side fits — skips both
-        # sort passes; AQE can also rewrite SMJ->SHJ at runtime below
-        # the local-map threshold. Overridable for A/B via env.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "64m"),
-        )
+        # let the planner pick shuffled-hash over sort-merge when the
+        # per-partition build side fits — skips both sort passes; AQE can
+        # also rewrite SMJ->SHJ at runtime below the local-map threshold
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
+        # generated classes are cached per session; at the default 100
+        # entries the curate pass and the near-dup op (about 155 classes
+        # together) evict each other's and recompile them every cycle.
+        # A static conf: it only takes effect when the session is built.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # testdata events.parquet stores TIMESTAMP(NANOS) which Spark's
         # vectorized reader rejects; read as long and convert (load_table)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -204,20 +202,33 @@ def run_observed(df: DataFrame, *metrics) -> dict:
 
 
 def materialize(df: DataFrame) -> tuple[DataFrame, int]:
-    """Cache ``df`` and count its rows in the one action that fills the
-    cache (:func:`run_observed`); returns ``(cached_df, rows)``.
+    """Cache ``df`` and count its rows in the one job that fills the
+    cache; returns ``(cached_df, rows)``.
 
-    ``persist()`` keeps the lineage, so a lost block is recomputed. On a
-    shuffle-free frame this is one job, where ``persist()`` plus
-    ``count()`` runs the frame once to cache it and again to count. The
+    The cache is built directly: one ``count()`` over the cache
+    builder's column buffers, not a query over the cached frame. So a
+    stage costs exactly the jobs of its own plan (its shuffle map stages
+    plus one), as ``localCheckpoint(eager=True)`` does, and a later query
+    finds the cache loaded and starts no job to build it. The row count
+    is the builder's ``rowCountStats``, an accumulator its tasks add to
+    as they store each partition, so each partition counts once; a cache
+    already loaded under another frame with the same plan is read, not
+    rebuilt, and keeps the count of its build.
+
+    ``persist()`` keeps the lineage, so a lost block is recomputed. The
     caller unpersists the returned frame; if the action fails, the frame
     is unpersisted here.
     """
-    from pyspark.sql import functions as F
-
     df = df.persist()
     try:
-        rows = run_observed(df, F.count(F.lit(1)).alias("rows"))["rows"]
+        cached = df.sparkSession._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+        builder = cached.get().cachedRepresentation().cacheBuilder()
+        buffers = builder.cachedColumnBuffers()
+        # a zero-partition frame has nothing to fill, and like
+        # localCheckpoint starts no job
+        if buffers.getNumPartitions():
+            buffers.count()
+        rows = builder.rowCountStats().value()
     except BaseException:
         df.unpersist()
         raise

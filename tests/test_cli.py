@@ -104,10 +104,12 @@ def test_cli_info(spark, cms_db, tmp_path, capsys):
 
 # Jobs the dedup run below starts, keep/drop table write included,
 # counted with getJobIdsForGroup in this test's session (local[8], AQE
-# on): 25 with the reassembled docs and the candidate pairs each counted
-# in the action that caches them, 27 when each was persisted and then
-# counted.
-DEDUP_JOB_BOUND = 25
+# on): 21 with the reassembled docs and the candidate pairs each cached
+# and counted in the job that computes them and the clusters labelled
+# with one exchange; 25 when each cache was built by a query and counted
+# by a noop write reading it back, and the labels were a left join; 27
+# when each was persisted and then counted.
+DEDUP_JOB_BOUND = 21
 
 
 def test_cli_dedup_report(spark, tmp_path, capsys):
@@ -241,14 +243,15 @@ def test_cli_curate_full_funnel(spark, tmp_path, capsys):
 
 # Jobs one curate run on the five-doc fixture starts, counted with
 # getJobIdsForGroup in this test's session (local[8], AQE on), the same
-# in a fresh session: 25 with each funnel stage counted in the action
-# that caches it, the quality threshold observed in one pass, the gate
-# in-row and decontamination without distinct shuffles; 32 when each
-# stage was cached and then counted by a separate action, the gate was a
-# threshold cross join plus a semi-join and decontamination ran two
-# distincts; 92 when every count, the export and the data card re-ran
-# the whole funnel.
-CURATE_JOB_BOUND = 25
+# in a fresh session: 21 with each funnel stage cached and counted in
+# the job that computes it, the quality threshold observed in one pass,
+# the gate in-row and decontamination without distinct shuffles; 25 when
+# each stage's cache was built by a query and counted by a noop write
+# reading it back; 32 when each stage was cached and then counted by a
+# separate action, the gate was a threshold cross join plus a semi-join
+# and decontamination ran two distincts; 92 when every count, the export
+# and the data card re-ran the whole funnel.
+CURATE_JOB_BOUND = 21
 
 
 def test_cli_curate_computes_each_stage_once(spark, tmp_path, capsys):
